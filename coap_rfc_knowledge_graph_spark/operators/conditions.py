@@ -149,14 +149,21 @@ def split_conditions(rule_sentences_df: DataFrame, model_loader=None) -> DataFra
     real checkpoint factory (``_hf_split_loader``)."""
     split_udf = _split_udf if model_loader is None else make_split_udf(model_loader)
     arr = rule_sentences_df.withColumn("splits", split_udf(F.col("sentence")))
-    return arr.select(
-        "url",
-        "sent_id",
-        "rule_num",
-        "is_strong",
-        "sentence",
-        F.posexplode("splits").alias("clause_id", "s"),
-    ).select("url", "sent_id", "rule_num", "is_strong", "sentence", "clause_id", "s.condition", "s.clause")
+    # posexplode_outer + null-position drop, not posexplode: the latter
+    # makes InferFiltersFromGenerate evaluate the splitter a second time
+    # for a size(splits) > 0 filter below the Generate
+    return (
+        arr.select(
+            "url",
+            "sent_id",
+            "rule_num",
+            "is_strong",
+            "sentence",
+            F.posexplode_outer("splits").alias("clause_id", "s"),
+        )
+        .where(F.col("clause_id").isNotNull())
+        .select("url", "sent_id", "rule_num", "is_strong", "sentence", "clause_id", "s.condition", "s.clause")
+    )
 
 
 # --- M10 properties generation ------------------------------------------------

@@ -111,7 +111,8 @@ def schedule_fetches(
     adds ``fetch_at_ms`` — the host-relative fetch offset spacing
     requests ``delay_millis`` apart in priority order (the de-facto
     Crawl-delay contract; see ``robots.parse_crawl_delays``). Hosts
-    absent from ``delays`` use ``default_delay_ms``.
+    absent from ``delays`` use ``default_delay_ms``; a host with several
+    delay rows uses the largest, the parser's max-wins rule.
 
         fetch_at_ms = (rank_within_host - 1) * delay_millis
 
@@ -124,7 +125,8 @@ def schedule_fetches(
 
     out = frontier
     if delays is not None:
-        out = out.join(delays.select("host", "delay_millis"), "host", "left")
+        per_host = delays.groupBy("host").agg(F.max("delay_millis").alias("delay_millis"))
+        out = out.join(per_host, "host", "left")
     else:
         out = out.withColumn("delay_millis", F.lit(None).cast("long"))
     w = Window.partitionBy("host").orderBy(F.desc("priority"), F.asc("url"))

@@ -328,7 +328,8 @@ def _png_filter_row(row: np.ndarray, prev: np.ndarray, bpp: int, ft: int) -> np.
 
 
 def encode_png(img: np.ndarray, filter_type: int = 0, interlace: bool = False) -> bytes:
-    """(h, w) gray / (h, w, 3) RGB / (h, w, 4) RGBA uint8 -> PNG bytes.
+    """(h, w) gray / (h, w, 2) gray+alpha / (h, w, 3) RGB / (h, w, 4)
+    RGBA uint8 -> PNG bytes.
     ``filter_type`` applies one filter (0-4) to every scanline — the
     decoder must invert all five, so tests sweep it. ``interlace=True``
     emits Adam7: seven independently-filtered sub-images in pass
@@ -336,12 +337,14 @@ def encode_png(img: np.ndarray, filter_type: int = 0, interlace: bool = False) -
     img = np.ascontiguousarray(img, dtype=np.uint8)
     if img.ndim == 2:
         color, channels = 0, 1
+    elif img.shape[2] == 2:
+        color, channels = 4, 2
     elif img.shape[2] == 3:
         color, channels = 2, 3
     elif img.shape[2] == 4:
         color, channels = 6, 4
     else:
-        raise ValueError("encode_png takes (h,w), (h,w,3) or (h,w,4) uint8")
+        raise ValueError("encode_png takes (h,w), (h,w,2), (h,w,3) or (h,w,4) uint8")
     h, w = img.shape[:2]
     bpp = channels
     px = img.reshape(h, w, channels)
@@ -439,7 +442,11 @@ def resize_nearest(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
 
 
 def _luma(img: np.ndarray) -> np.ndarray:
-    """Integer ITU-R 601 luma — exact in int64, so cross-platform stable."""
+    """Integer ITU-R 601 luma — exact in int64, so cross-platform stable.
+    Alpha is dropped: (h, w, 2) gray+alpha reads as gray, (h, w, 4) RGBA
+    as RGB."""
+    if img.ndim == 3 and img.shape[2] == 2:
+        img = img[..., 0]
     if img.ndim == 2:
         return img.astype(np.int64)
     r, g, b = (img[..., i].astype(np.int64) for i in range(3))
@@ -936,12 +943,12 @@ def _media_hashes(
                 if not mime.startswith(mime_prefix):
                     continue
                 try:
-                    decoded = decode_backend(data, mime)
+                    h = hash_fn(decode_backend(data, mime))
                 except Exception:
                     continue
                 ids.append(int(mid))
                 mimes.append(mime)
-                hashes.append(hash_fn(decoded))
+                hashes.append(h)
             yield pd.DataFrame({"media_id": ids, "mime": mimes, "dhash": hashes})
 
     return media.select(id_col, payload_col).mapInPandas(fn, IMAGE_HASH_SCHEMA)

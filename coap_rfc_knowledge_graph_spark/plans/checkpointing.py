@@ -177,19 +177,19 @@ def run_resumable(
     mentions = _explode_mentions(mentions_arr)  # explode_outer: no UDF re-eval
     entities = stage("entities", lambda: canonical_entities(mentions), ["mentions"])
 
-    def build_rules_df():
-        from .pipeline import KGResult, rules_stage
+    from .pipeline import KGResult, rules_stage
 
-        res = KGResult(
-            sentences=sentences,
-            rule_sentences=rule_sentences(sentences),
-            mentions=mentions,
-            triples=triples,
-            entities=entities,
-        )
-        return rules_stage(res).rules
-
-    rules = stage("rules", build_rules_df, ["sentences", "mentions", "entities"])
+    res = KGResult(
+        sentences=sentences,
+        rule_sentences=rule_sentences(sentences),
+        mentions=mentions,
+        triples=triples,
+        entities=entities,
+    )
+    try:
+        rules = stage("rules", lambda: rules_stage(res).rules, ["sentences", "mentions", "entities"])
+    finally:  # committed (or failed): downstream stages read the parquet
+        res.unpersist()
     stage("edges", lambda: build_edges(rules), ["rules"])
     stage("contradictions", lambda: check_entity_contradiction(rules), ["rules"])
     return store

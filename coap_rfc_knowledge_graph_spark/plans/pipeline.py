@@ -22,6 +22,11 @@ tests/test_plans.py): one url-repartition feeding sentences; the window
 stages and the pair self-join reuse that url partitioning; dictionary-
 sized stages (entity canonicalization, value dictionary) shuffle only
 dictionary rows; every join back to corpus-sized tables is broadcast.
+The rules stage caches its atomic rules where they fan out into a
+dictionary-sized branch plus that branch's join-back (see ``rules_stage``):
+uncached, every such read re-runs the Python-UDF chain above them (split,
+properties, link, variable canonicalization). ``KGResult.cached`` lists
+every frame a stage persists, for ``KGResult.unpersist``.
 """
 
 from __future__ import annotations
@@ -77,6 +82,14 @@ class KGResult:
         self.nodes: DataFrame | None = None
         self.edges: DataFrame | None = None
         self.findings: dict[str, DataFrame] = {}
+        self.cached: list[DataFrame] = []  # frames the stages persisted
+
+    def unpersist(self) -> None:
+        """Release the frames the stages persisted, and only those: a
+        caller's own caches survive (never ``clearCache``)."""
+        for df in self.cached:
+            df.unpersist()
+        self.cached = []
 
     @property
     def entities(self) -> DataFrame:
@@ -100,13 +113,15 @@ def extract_stage(pages: DataFrame, url_partitions: int | None = None) -> KGResu
     triples = extract_triples_from_arrays(mentions_arr)
     from ..operators.linking import canonical_entities  # local: avoids cycle
 
-    return KGResult(
+    result = KGResult(
         sentences=sentences,
         rule_sentences=rules_s,
         mentions=mentions,
         triples=triples,
         entities_fn=lambda: canonical_entities(mentions),
     )
+    result.cached += [sentences, mentions_arr]
+    return result
 
 
 def canonical_triples(result: KGResult, max_broadcast_entities: int | None = None) -> DataFrame:
@@ -163,10 +178,18 @@ def canonical_triples(result: KGResult, max_broadcast_entities: int | None = Non
 
 def rules_stage(result: KGResult) -> KGResult:
     """EP3 steps 1-6: clauses -> behaviours -> atomic rules -> linked,
-    variable-canonicalized, value-encoded rules -> graph tables."""
+    variable-canonicalized, value-encoded rules -> graph tables.
+
+    ``atomic`` is persisted where it fans out: after the parse (read by
+    the link and its join-back) and after the variable join-back (read
+    by both value-dictionary branches and the encode join-back). Each
+    generative UDF then runs once per job: the value dictionary's eager
+    rank checkpoint fills both caches, and the ``rules`` write reads
+    them. The caches join ``result.cached``."""
     clauses = split_conditions(with_context(result.rule_sentences, result.sentences))
     behaviours = generate_behaviours(clauses, result.mentions)
-    atomic = parse_atomic_rules(behaviours)
+    atomic = parse_atomic_rules(behaviours).persist()
+    result.cached.append(atomic)
 
     # N4: link each atomic rule's entity surface to its canonical entity
     # (atomic is rule-sentence-sized — far smaller than mentions — so the
@@ -183,13 +206,17 @@ def rules_stage(result: KGResult) -> KGResult:
 
     # N5: per-entity variable canonicalization, joined back broadcast
     var_map = canonicalize_variables(atomic.select("entity_id", "var"))
-    atomic = atomic.join(F.broadcast(var_map), on=["entity_id", "var"], how="left").withColumn(
-        "canonical_var", F.coalesce("canonical_var", "var")
+    atomic = (
+        atomic.join(F.broadcast(var_map), on=["entity_id", "var"], how="left")
+        .withColumn("canonical_var", F.coalesce("canonical_var", "var"))
+        .persist()
     )
+    result.cached.append(atomic)
 
     # N7 + N8-N10
     atomic = encode_values(atomic)
     rules = build_rules(atomic).persist()
+    result.cached.append(rules)
     result.rules = rules
     result.nodes = build_nodes(result.entities, rules)
     result.edges = build_edges(rules)

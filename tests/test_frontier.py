@@ -172,6 +172,26 @@ def test_schedule_fetches(spark):
             got["https://b.example/1"].fetch_at_ms) == (700, 0)
 
 
+def test_schedule_fetches_duplicate_delay_rows(spark):
+    """Two delay rows for one host (two robots files, say) keep one
+    frontier row per url and space it by the larger delay."""
+    frontier = spark.createDataFrame(
+        [("a.example", "https://a.example/1", 900), ("a.example", "https://a.example/2", 500)],
+        "host string, url string, priority long",
+    )
+    delays = spark.createDataFrame(
+        [("a.example", 2000), ("a.example", 3000)], "host string, delay_millis long"
+    )
+    from coap_rfc_knowledge_graph_spark.operators.frontier import schedule_fetches
+
+    rows = schedule_fetches(frontier, delays).collect()
+    assert len(rows) == frontier.count()
+    assert {r.url: (r.delay_millis, r.fetch_at_ms) for r in rows} == {
+        "https://a.example/1": (3000, 0),
+        "https://a.example/2": (3000, 3000),
+    }
+
+
 def test_zip_with_rank_per_key_equals_naive_window(spark):
     """Per-key dense rank without a per-key window: exactly the naive
     row_number()-1 per key, at several partitionings, with a 50%-skew

@@ -70,6 +70,23 @@ def test_image_near_duplicates_spark(spark):
     assert all(r.hamming == 0 for r in pairs)
 
 
+def test_image_hashes_gray_alpha_png_and_unhashable_row(spark):
+    """A gray+alpha PNG (color type 4, decoded (h, w, 2)) hashes as its
+    gray plane; a PNG that decodes but cannot be hashed (0x0 pixels)
+    costs only its own row, not the task."""
+    rng = np.random.Generator(np.random.Philox(key=5))
+    gray, alpha = rng.integers(0, 256, size=(2, 24, 24), dtype=np.uint8)
+    gray_alpha = np.dstack([gray, alpha])
+    rows = [
+        (0, bytearray(encode_png(gray_alpha))),
+        (1, bytearray(encode_png(np.zeros((0, 0), dtype=np.uint8)))),
+        (2, bytearray(encode_png(gray))),
+    ]
+    media = spark.createDataFrame(rows, "media_id long, payload binary").coalesce(1)
+    hashes = {r.media_id: r.dhash for r in image_hashes(media).collect()}
+    assert hashes == {0: image_dhash(gray), 2: image_dhash(gray)}
+
+
 def test_contract_image_near_dup_planted_twins(spark):
     """The driver-contract entry: every planted PPM->PNG re-encode twin
     comes back at hamming 0 (8 PPM rows in the 64-row seeded table),

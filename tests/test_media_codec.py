@@ -177,12 +177,12 @@ def test_spark_decode_matches_local_reference(spark):
 
 
 def test_png_roundtrip_all_filters_and_shapes():
-    """encode_png -> _decode_png exact pixels for gray/RGB/RGBA under
-    every scanline filter type (the decoder must invert all five)."""
+    """encode_png -> _decode_png exact pixels for gray/gray+alpha/RGB/RGBA
+    under every scanline filter type (the decoder must invert all five)."""
     from coap_rfc_knowledge_graph_spark.operators.multimodal import _decode_png, encode_png
 
     rng = np.random.Generator(np.random.Philox(key=17))
-    for shape in [(5, 7), (9, 4, 3), (6, 6, 4), (1, 1), (2, 3, 3)]:
+    for shape in [(5, 7), (4, 5, 2), (9, 4, 3), (6, 6, 4), (1, 1), (2, 3, 3)]:
         img = rng.integers(0, 256, size=shape, dtype=np.uint8)
         for ft in range(5):
             out = _decode_png(encode_png(img, filter_type=ft))

@@ -289,3 +289,51 @@ def test_crawl_delta_single_join_no_python(spark):
     assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p and "MapInPandas" not in p
     assert "Window" not in p
     assert "FullOuter" in p
+
+
+def _seq(scala_seq) -> list:
+    return [scala_seq.apply(i) for i in range(scala_seq.size())]
+
+
+def plan_nodes(df) -> list:
+    """Every physical node of ``df``'s plan, reached through ``children()``
+    only: descends into ``AdaptiveSparkPlan.inputPlan()`` and into each
+    distinct cache's ``cachedPlan()`` exactly once, so a cached subtree
+    read by several consumers counts once (``explain()`` prints it inline
+    at every read)."""
+    jvm = df.sparkSession._jvm
+    seen_caches, nodes, stack = set(), [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.inputPlan())
+            continue
+        nodes.append(node)
+        if name == "InMemoryTableScan":
+            relation = node.relation()
+            key = jvm.System.identityHashCode(relation.cacheBuilder())
+            if key not in seen_caches:
+                seen_caches.add(key)
+                stack.append(relation.cachedPlan())
+        stack.extend(_seq(node.children()))
+    return nodes
+
+
+def test_rules_stage_runs_each_generative_udf_once(spark):
+    """The rules stage reads its atomic rules from several consumers (the
+    link and its join-back, the variable map and its join-back, both
+    value-dictionary branches and the encode join-back). The atomic rules
+    are cached at those fan-out points, and the clause explode adds no
+    inferred filter over the splitter, so the condition splitter and the
+    properties model each sit in exactly one ArrowEvalPython node."""
+    from coap_rfc_knowledge_graph_spark.plans.pipeline import extract_stage, rules_stage
+
+    res = rules_stage(extract_stage(synthetic_pages(spark, 8, seed=1), url_partitions=4))
+    try:
+        arrow = [n for n in plan_nodes(res.rules) if n.nodeName() == "ArrowEvalPython"]
+        names = [u.name() for n in arrow for u in _seq(n.udfs())]
+        assert names.count("_split_udf") == 1, names
+        assert names.count("_properties_udf") == 1, names
+    finally:
+        res.unpersist()

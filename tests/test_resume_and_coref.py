@@ -44,6 +44,33 @@ def test_kill_resume_identical_output(spark, tmp_path):
         assert mb["inputs"] == ma["inputs"]
 
 
+def test_run_resumable_releases_rules_caches(spark, tmp_path, monkeypatch):
+    """Once ``rules`` commits, the frames the rules stage persisted are
+    released (downstream stages read the parquet); a cache the caller
+    made survives."""
+    from pyspark import StorageLevel
+
+    from coap_rfc_knowledge_graph_spark.plans import pipeline
+
+    persisted = []
+    real = pipeline.rules_stage
+
+    def spy(result):
+        out = real(result)
+        persisted.extend(out.cached)
+        return out
+
+    monkeypatch.setattr(pipeline, "rules_stage", spy)
+    mine = spark.range(5).persist()
+    try:
+        run_resumable(spark, synthetic_pages(spark, 8, seed=1), str(tmp_path), url_partitions=4)
+        assert len(persisted) == 3
+        assert all(df.storageLevel == StorageLevel.NONE for df in persisted)
+        assert mine.storageLevel != StorageLevel.NONE
+    finally:
+        mine.unpersist()
+
+
 def test_manifest_contents(spark, tmp_path):
     store = StageStore(str(tmp_path))
     df = spark.range(100).select(F.col("id"), (F.col("id") * 2).alias("v"))

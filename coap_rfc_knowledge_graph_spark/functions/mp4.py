@@ -72,10 +72,13 @@ def _expand_samples(
         return []
     if not stsc:
         stsc = [(1, n)]
-    per_chunk: list[int] = []
+    # per_chunk[c - 1] = samples in (1-based) chunk c; a chunk before
+    # the first run's first_chunk holds none
+    per_chunk = [0] * len(chunk_offsets)
     for idx, (first, per) in enumerate(stsc):
         last = stsc[idx + 1][0] - 1 if idx + 1 < len(stsc) else len(chunk_offsets)
-        per_chunk.extend([per] * max(0, last - first + 1))
+        for c in range(max(first, 1), min(last, len(chunk_offsets)) + 1):
+            per_chunk[c - 1] = per
     ts: list[int] = []
     t = 0
     for cnt, delta in stts:
@@ -86,7 +89,7 @@ def _expand_samples(
     si = 0
     for ci, coff in enumerate(chunk_offsets):
         off = coff
-        for _ in range(per_chunk[ci] if ci < len(per_chunk) else 0):
+        for _ in range(per_chunk[ci]):
             if si >= n:
                 return samples
             ms = ts[si] * 1000 // timescale if timescale and si < len(ts) else 0

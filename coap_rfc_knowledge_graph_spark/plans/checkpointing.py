@@ -11,8 +11,11 @@ metrics". Every pipeline stage writes its output table plus a manifest:
 A stage is COMPLETE iff its manifest exists and carries ``complete``;
 the manifest is written AFTER the parquet commit (write-then-publish),
 so a crash mid-stage leaves no manifest and the stage re-runs cleanly
-from its (complete) inputs. Resume = skip every complete stage and
-rebuild the rest from the stored inputs — exactly the pickle-per-stage
+from its (complete) inputs. A stage is REUSED iff it is complete and
+its manifest ``params`` carry the stage's identity: the options its
+build reads plus its inputs' identities (an upstream stage's
+``table_hash``). Resume = reuse every such stage and rebuild the rest
+from the stored inputs — exactly the pickle-per-stage
 hand-off of the reference (``src/entity_extractor.py:61-62`` et al.)
 upgraded to audited, partition-aware table snapshots.
 
@@ -48,13 +51,11 @@ class StageStore:
         return os.path.join(self._dir(stage), "manifest.json")
 
     def has(self, stage: str, params: dict | None = None) -> bool:
-        """True iff the stage committed completely — and, when ``params``
-        is given, was produced under the SAME parameters. A stage whose
-        output depends on run configuration (curation flags, blocklist
-        content) must pass its params here AND to :meth:`write`;
-        otherwise resuming with different flags would silently reuse the
-        stale snapshot (e.g. --pii-redact added after a --clean run
-        would never mask anything)."""
+        """True iff the stage committed completely and, when ``params``
+        is given, its manifest carries exactly these params: the stage's
+        identity, as :meth:`materialize` derives it from the options its
+        build reads and its inputs' identities. ``params=None`` only asks
+        whether the stage is complete."""
         p = self.manifest_path(stage)
         if not os.path.exists(p):
             return False
@@ -73,6 +74,24 @@ class StageStore:
     def manifest(self, stage: str) -> dict:
         with open(self.manifest_path(stage)) as fh:
             return json.load(fh)
+
+    def table_hash(self, stage: str) -> int:
+        """The committed stage's content hash: its identity as an input."""
+        return self.manifest(stage)["table_hash"]
+
+    def materialize(
+        self, spark: SparkSession, stage: str, build, inputs: dict, params: dict | None = None
+    ) -> DataFrame:
+        """Reuse ``stage`` if its committed identity matches, else write
+        ``build()`` as the stage. The identity is ``params`` (the options
+        the build reads) plus ``inputs``: each input's name mapped to its
+        identity, an upstream stage's :meth:`table_hash` or a source's
+        digest. So a changed option or input recomputes the stage, and
+        its new hash the stages downstream."""
+        identity = {**(params or {}), "inputs": inputs}
+        if self.has(stage, identity):
+            return self.read(spark, stage)
+        return self.write(build(), stage, inputs=list(inputs), params=identity)
 
     def write(
         self,
@@ -146,13 +165,17 @@ def run_resumable(
     root: str,
     url_partitions: int | None = None,
     fail_after: str | None = None,
+    pages_id: dict | int | None = None,
 ) -> StageStore:
     """Run the KG pipeline writing each stage through the StageStore;
-    stages whose manifests are complete are SKIPPED (their committed
-    parquet feeds downstream). ``fail_after`` injects a crash after the
-    named stage commits — the kill/resume test hook."""
+    a stage whose committed identity matches is SKIPPED (its committed
+    parquet feeds downstream). ``pages_id`` is the identity of ``pages``
+    (the job passes its source digest or the ``curated_pages`` hash);
+    left None, ``sentences`` is reused whatever frame is passed.
+    ``fail_after`` injects a crash once the named stage is committed —
+    the kill/resume test hook."""
     from ..operators.contradictions import check_entity_contradiction
-    from ..operators.linking import canonical_entities, link_surfaces
+    from ..operators.linking import canonical_entities
     from ..operators.mentions import extract_mentions
     from ..operators.relations import extract_triples_from_arrays
     from ..operators.rule_filter import rule_sentences
@@ -160,11 +183,11 @@ def run_resumable(
     from ..operators.sentences import extract_sentences
 
     store = StageStore(root)
+    ids = {"pages": pages_id}
 
     def stage(name: str, build, inputs: list[str]):
-        if store.has(name):
-            return store.read(spark, name)
-        out = store.write(build(), name, inputs=inputs)
+        out = store.materialize(spark, name, build, {i: ids[i] for i in inputs})
+        ids[name] = store.table_hash(name)
         if fail_after == name:
             raise RuntimeError(f"injected failure after stage {name!r}")
         return out

@@ -342,6 +342,8 @@ def write_wet(
         finally:
             if fh is not None:
                 fh.close()
+        if fh is None and os.path.exists(fpath):
+            os.remove(fpath)  # an earlier run's segment for this partition
         yield pd.DataFrame(
             [(fpath if n else None, n, n_bytes)],
             columns=["path", "n_records", "n_bytes"],

@@ -1,30 +1,79 @@
-"""spark-submit entry point: full KG construction with resumable stages.
+"""spark-submit entry point: crawl-to-KG construction with resumable stages.
 
     spark-submit --py-files dist/coap_rfc_knowledge_graph_spark.zip \\
-        jobs/run_pipeline.py --pages <parquet path> --out <state root> \\
+        jobs/run_pipeline.py --pages <parquet path | WARC dir> --out <state root> \\
+        [--from-warc] [pre-pass options, see --help] [--link-graph] \\
+        [--host-ranks [ITERS]] [--frontier [K]] [--wet-out DIR] \\
         [--url-partitions N] [--resume]
 
-Reads the pages table, runs extract -> rules -> contradiction stages,
-writing each through the lineage-manifest StageStore (resume skips
-complete stages; see plans/checkpointing.py).
+Reads the pages table, curates it (the pre-pass options compose into one
+``curated_pages`` stage), materializes the requested crawl products
+(``link_graph``, ``host_ranks``, ``frontier``) and runs extract -> rules
+-> contradiction stages. Every stage is written through the
+lineage-manifest StageStore (see plans/checkpointing.py) and keyed on its
+identity: the options its build reads (``STAGES`` below) plus its inputs'
+identities. A re-run into the same ``--out`` reuses a stage only while
+that identity is unchanged.
 """
 
 from __future__ import annotations
 
 import argparse
+import hashlib
+import os
+from typing import Callable, NamedTuple
+
+from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+
+from coap_rfc_knowledge_graph_spark.operators.corpus_lm import prune_top_bigrams, train_bigram_lm
+from coap_rfc_knowledge_graph_spark.operators.data_selection import coverage_buckets
+from coap_rfc_knowledge_graph_spark.operators.dedup import (
+    decontaminate,
+    dedup_lines_in_doc,
+    paragraph_dedup,
+    split_paragraphs,
+)
+from coap_rfc_knowledge_graph_spark.operators.frontier import crawl_frontier, schedule_fetches
+from coap_rfc_knowledge_graph_spark.operators.html_extract import (
+    fill_text_from_html,
+    html_head_meta,
+    html_links,
+)
+from coap_rfc_knowledge_graph_spark.operators.normalize import normalize_corpus
+from coap_rfc_knowledge_graph_spark.operators.pii import redact_pii
+from coap_rfc_knowledge_graph_spark.operators.robots import (
+    parse_crawl_delays,
+    parse_robots,
+    robots_filter,
+)
+from coap_rfc_knowledge_graph_spark.operators.substring_dedup import remove_duplicate_spans
+from coap_rfc_knowledge_graph_spark.operators.text_stats import clean_corpus
+from coap_rfc_knowledge_graph_spark.operators.webgraph import host_graph, pagerank_weighted
+from coap_rfc_knowledge_graph_spark.operators.webtext import crawl_delta, curate_urls, latest_snapshot
+from coap_rfc_knowledge_graph_spark.plans.checkpointing import STAGES as KG_STAGES
+from coap_rfc_knowledge_graph_spark.plans.checkpointing import StageStore, run_resumable
+from coap_rfc_knowledge_graph_spark.sources.warc import read_warc, write_wet
 
 
-def main() -> None:
+def _path(value: str) -> str:
+    """argparse ``type`` of an option naming a file or table: a stage
+    reading it is keyed on what it names (:func:`_table_digest`)."""
+    return value
+
+
+def _parser() -> tuple[argparse.ArgumentParser, tuple[str, ...]]:
+    """The job's parser and the options of its 'curated_pages' group."""
     ap = argparse.ArgumentParser()
-    ap.add_argument("--pages", required=True, help="pages table parquet path")
+    ap.add_argument("--pages", type=_path, required=True, help="pages table parquet path")
     ap.add_argument("--out", required=True, help="stage-store root (checkpoints + outputs)")
     ap.add_argument("--url-partitions", type=int, default=None)
     ap.add_argument("--app-name", default="kg-construct")
     ap.add_argument(
         "--resume",
         action="store_true",
-        help="accepted for explicitness; resume is automatic — complete "
-        "stages are skipped via their lineage manifests either way",
+        help="accepted for explicitness; resume is automatic — a stage "
+        "whose identity is unchanged is reused either way",
     )
     ap.add_argument(
         "--from-warc",
@@ -33,14 +82,19 @@ def main() -> None:
         "(Common-Crawl layout) instead of a parquet pages table; records "
         "are parsed into the pages schema at ingest (text/lang NULL)",
     )
-    ap.add_argument(
+    pre = ap.add_argument_group(
+        "curated_pages",
+        "pre-passes composed, in a fixed order, into the 'curated_pages' "
+        "stage; every option here is part of that stage's identity",
+    )
+    pre.add_argument(
         "--html-extract",
         action="store_true",
         help="fill NULL text from the html column via the jusText-lite "
         "block gate (rows already carrying text pass through); runs "
         "before every text pre-pass",
     )
-    ap.add_argument(
+    pre.add_argument(
         "--normalize-unicode",
         nargs="?",
         const="NFC",
@@ -52,56 +106,58 @@ def main() -> None:
         "dedup, shingles and line hashes key on text bytes, so mixed "
         "compositions silently fragment them",
     )
-    ap.add_argument(
+    pre.add_argument(
         "--clean",
         action="store_true",
         help="run the C4/Gopher-style clean_corpus pre-pass (quality + "
         "repetition gates, exact-dedup keep-first by url) on the pages "
         "table before extraction",
     )
-    ap.add_argument(
+    pre.add_argument(
         "--url-curation",
         action="store_true",
         help="canonicalize URLs, drop blocklisted/over-cap domains, and "
         "collapse re-crawls to the latest snapshot before any text op "
         "(RefinedWeb/CCNet-style ingest pre-pass)",
     )
-    ap.add_argument(
+    pre.add_argument(
         "--domain-blocklist",
+        type=_path,
         metavar="HOSTS_FILE",
         default=None,
         help="newline-delimited host blocklist for --url-curation",
     )
-    ap.add_argument(
+    pre.add_argument(
         "--head-cap-frac",
         type=float,
         default=None,
         help="with --url-curation: drop any domain holding more than "
         "this fraction of the (post-blocklist) corpus",
     )
-    ap.add_argument(
+    pre.add_argument(
         "--cap-by-registered-domain",
         action="store_true",
         help="with --head-cap-frac: apply the cap per registrable "
         "domain (public-suffix aware) instead of per host, so a "
         "site's subdomains cannot dodge it",
     )
-    ap.add_argument(
+    pre.add_argument(
         "--decontaminate",
+        type=_path,
         metavar="EVAL_PARQUET",
         default=None,
         help="path to a held-out eval table (eval_id, text); training "
         "pages sharing a 13-token-gram with it are anti-joined away "
         "before extraction (GPT-3-style benchmark decontamination)",
     )
-    ap.add_argument(
+    pre.add_argument(
         "--pii-redact",
         action="store_true",
         help="mask emails/IPv4s/phones in the text column before "
         "extraction (Dolma/RefinedWeb-style PII scrub; zero-shuffle "
         "regexp projections)",
     )
-    ap.add_argument(
+    pre.add_argument(
         "--line-dedup",
         action="store_true",
         help="drop repeated lines WITHIN each page (RefinedWeb-style "
@@ -116,8 +172,9 @@ def main() -> None:
         "extracted from the RAW ingested pages' html as a 'link_graph' "
         "stage (resumable like every other stage)",
     )
-    ap.add_argument(
+    pre.add_argument(
         "--robots",
+        type=_path,
         metavar="ROBOTS_PARQUET",
         default=None,
         help="RFC 9309 compliance gate: drop pages disallowed by this "
@@ -126,7 +183,7 @@ def main() -> None:
         "longest-prefix-match, Allow wins ties, hosts with no rules "
         "are allowed",
     )
-    ap.add_argument(
+    pre.add_argument(
         "--canonical-collapse",
         action="store_true",
         help="collapse pages onto their rel=canonical target: group by "
@@ -134,8 +191,9 @@ def main() -> None:
         "row — removes syndicated / tracking-parameter duplicates "
         "BEFORE any content hashing; runs right after the robots gate",
     )
-    ap.add_argument(
+    pre.add_argument(
         "--delta-against",
+        type=_path,
         metavar="OLD_SNAPSHOT",
         default=None,
         help="incremental re-crawl: keep only pages whose content "
@@ -176,9 +234,11 @@ def main() -> None:
         "stage: top-K (default 100) not-yet-crawled outlink urls per "
         "host, scored host_rank*1000 + inlinks*10 - depth with exact "
         "BIGINT arithmetic (host ranks come from the --host-ranks "
-        "stage when enabled, else 0); implies --link-graph",
+        "stage when enabled, else 0); implies --link-graph. With "
+        "--robots, urls it disallows are left out and each host's "
+        "fetches are spaced by its Crawl-delay (fetch_at_ms)",
     )
-    ap.add_argument(
+    pre.add_argument(
         "--substring-dedup",
         type=int,
         nargs="?",
@@ -190,7 +250,7 @@ def main() -> None:
         "defined chunking; runs after the page-level dedups, before "
         "--clean",
     )
-    ap.add_argument(
+    pre.add_argument(
         "--lm-select-permille",
         type=int,
         default=None,
@@ -201,14 +261,15 @@ def main() -> None:
         "cleaned/deduped text. Pages with fewer than two tokens are "
         "unscoreable and dropped.",
     )
-    ap.add_argument(
+    pre.add_argument(
         "--lm-reference",
+        type=_path,
         metavar="REF_PARQUET",
         default=None,
         help="with --lm-select-permille: train the LM on this trusted "
         "reference table (url, text) instead of the page corpus itself",
     )
-    ap.add_argument(
+    pre.add_argument(
         "--paragraph-dedup",
         action="store_true",
         help="drop every paragraph except its global first occurrence "
@@ -216,27 +277,261 @@ def main() -> None:
         "blocks, falling back to 64-word windows for unmarked text), "
         "rewriting each page's text to the surviving paragraphs",
     )
-    args = ap.parse_args()
+    return ap, tuple(a.dest for a in pre._group_actions)
+
+
+PARSER, CURATE_OPTIONS = _parser()
+PATH_OPTIONS = {a.dest for a in PARSER._actions if a.type is _path}
+SOURCE_OPTIONS = ("pages", "from_warc")  # the identity of the raw input
+
+
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    """Parse and validate the job's options (``sys.argv`` by default)."""
+    args = PARSER.parse_args(argv)
     if not args.url_curation and (
         args.domain_blocklist or args.head_cap_frac is not None or args.cap_by_registered_domain
     ):
-        ap.error(
+        PARSER.error(
             "--domain-blocklist/--head-cap-frac/--cap-by-registered-domain "
             "require --url-curation (they would otherwise be silently ignored)"
         )
     if args.lm_select_permille is not None and not 0 < args.lm_select_permille <= 1000:
-        ap.error("--lm-select-permille must be in (0, 1000]")
+        PARSER.error("--lm-select-permille must be in (0, 1000]")
     if args.substring_dedup is not None and args.substring_dedup < 1:
         # min_span 0 would excise every duplicated 1-token chunk of a
         # common anchored word — shredding ordinary text corpus-wide
-        ap.error("--substring-dedup MIN_SPAN must be >= 1")
+        PARSER.error("--substring-dedup MIN_SPAN must be >= 1")
     if args.lm_reference and args.lm_select_permille is None:
-        ap.error("--lm-reference requires --lm-select-permille")
+        PARSER.error("--lm-reference requires --lm-select-permille")
+    if args.host_ranks is not None and args.host_ranks < 1:
+        PARSER.error("--host-ranks ITERS must be >= 1")
+    if args.frontier is not None and args.frontier < 1:
+        PARSER.error("--frontier K must be >= 1")
+    return args
 
-    from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
 
-    from coap_rfc_knowledge_graph_spark.plans.checkpointing import run_resumable
+def _table_digest(path: str | None) -> str | None:
+    """Content key of a file or table directory: a table rewritten IN
+    PLACE must recompute the stages that read it, not silently reuse
+    them. Hashing the data files' (name, size, mtime_ns) is cheap at any
+    table size and changes on any rewrite."""
+    if not path:
+        return None
+    if not os.path.exists(path):  # a remote URI: keyed by its name alone
+        return path
+    files = [path] if os.path.isfile(path) else [
+        os.path.join(root, f) for root, _, names in os.walk(path) for f in names
+    ]
+    entries = []
+    for f in files:
+        st = os.stat(f)
+        entries.append(f"{os.path.relpath(f, path)}\x1f{st.st_size}\x1f{st.st_mtime_ns}")
+    return hashlib.sha256("\x1e".join(sorted(entries)).encode()).hexdigest()
+
+
+def _identity(args: argparse.Namespace, options: tuple[str, ...]) -> dict:
+    """``options``' values as parsed, a path-valued one as the digest of
+    what it names: the option half of a stage's identity."""
+    values = vars(args)
+    return {d: _table_digest(values[d]) if d in PATH_OPTIONS else values[d] for d in options}
+
+
+# --- curated_pages: the pre-pass steps ----------------------------------------
+
+
+def _robots_allowed(spark, df, robots: str, url_col: str = "url"):
+    """The rows of ``df`` whose ``url_col`` the robots table allows."""
+    rules = parse_robots(spark.read.parquet(robots))
+    return (
+        robots_filter(df, rules, url_col=url_col)
+        .filter(F.col("robots_allowed"))
+        .drop("robots_allowed")
+    )
+
+
+def _canonical_collapse(spark, args, pages):
+    # one row per canonical target: syndicated / tracking-parameter
+    # variants collapse BEFORE any content hashing, via the same
+    # packed-struct max aggregate as re-crawl collapse (no window)
+    original_cols = list(pages.columns)
+    canon = html_head_meta(pages).select("url", "canonical_url")
+    keyed = (
+        pages.join(canon, "url", "left")
+        .withColumn("__ckey", F.coalesce("canonical_url", "url"))
+        .drop("canonical_url")
+    )
+    order = tuple(c for c in ("warc_ts",) if c in original_cols) + ("url",)
+    payload = tuple(c for c in original_cols if c not in order)
+    return latest_snapshot(
+        keyed, key_col="__ckey", order_cols=order, payload_cols=payload
+    ).select(*original_cols)
+
+
+def _delta_against(spark, args, pages):
+    # O(delta) re-crawl: only new/changed content re-enters the
+    # pipeline (fingerprint = md5 of the text bytes; the old
+    # snapshot needs (url, text))
+    fp = lambda df: df.select(  # noqa: E731
+        "url", F.md5(F.coalesce(F.col("text"), F.lit(""))).alias("fingerprint")
+    )
+    keep = (
+        crawl_delta(fp(spark.read.parquet(args.delta_against)), fp(pages))
+        .filter(F.col("status").isin("added", "changed"))
+        .select("url")
+    )
+    return pages.join(keep, "url")
+
+
+def _url_curation(spark, args, pages):
+    blocklist: tuple[str, ...] = ()
+    if args.domain_blocklist:
+        with open(args.domain_blocklist, encoding="utf-8") as fh:
+            # normalized like the parsed host column (lowercase, no
+            # trailing dot) — a mixed-case file entry would
+            # otherwise silently block nothing
+            blocklist = tuple(ln.strip().lower().rstrip(".") for ln in fh if ln.strip())
+    return curate_urls(
+        pages,
+        blocklist=blocklist,
+        head_cap_frac=args.head_cap_frac,
+        cap_by_registered_domain=args.cap_by_registered_domain,
+    )
+
+
+def _pii_redact(spark, args, pages):
+    masked = redact_pii(pages).drop("text", "n_emails", "n_ips", "n_phones")
+    return masked.withColumnRenamed("redacted", "text")
+
+
+def _dedup_paragraphs(pages, dedup):
+    """Rewrite each page's text to the paragraphs ``dedup`` keeps."""
+    # blank-line blocks when the corpus has them; 64-word windows
+    # otherwise (one cheap existence probe per pass — the line pass
+    # rejoins survivors with spaces, so the paragraph pass must
+    # re-probe rather than trust the pre-line-dedup answer)
+    has_marks = pages.filter(F.col("text").contains("\n\n")).limit(1).count() > 0
+    paragraphs = split_paragraphs(
+        pages, id_col="url", sep=r"\n{2,}" if has_marks else None, words=64
+    )
+    kept = dedup(paragraphs, id_col="url")
+    return pages.drop("text").join(kept.select("url", F.col("text_kept").alias("text")), "url")
+
+
+def _substring_dedup(spark, args, pages):
+    # one checkpoint serves all three consumers (span derivation,
+    # rewrite join inside the operator, and the join-back here) —
+    # upstream prepasses must not re-evaluate
+    pages = pages.localCheckpoint(eager=False)
+    kept = remove_duplicate_spans(pages, min_span=args.substring_dedup, id_col="url")
+    return pages.drop("text").join(
+        kept.select(F.col("doc_id").alias("url"), F.col("text_kept").alias("text")), "url"
+    )
+
+
+def _decontaminate(spark, args, pages):
+    ev = spark.read.parquet(args.decontaminate)
+    flagged = decontaminate(pages, ev, id_col="url").select(F.col("doc_id").alias("url"))
+    return pages.join(flagged, on="url", how="left_anti")
+
+
+def _lm_select(spark, args, pages):
+    # checkpoint first: LM training (when self-referenced), scoring,
+    # and the final semi join all consume `pages` — without this the
+    # whole upstream pre-pass lineage (PII regexes, paragraph dedup,
+    # clean gates, decontamination) would re-evaluate three times
+    pages = pages.localCheckpoint(eager=False)
+    # production shape: top-1M vocabulary cut + broadcast LM, so the
+    # scoring pass never shuffles the page corpus
+    ref = spark.read.parquet(args.lm_reference) if args.lm_reference else pages
+    lm = prune_top_bigrams(train_bigram_lm(ref, id_col="url"), 1_000_000)
+    buckets = coverage_buckets(pages, lm, n_buckets=1000, id_col="url", broadcast_lm=True)
+    keep = buckets.filter(F.col("bucket") < args.lm_select_permille).select("url")
+    return pages.join(keep, on="url", how="left_semi")
+
+
+# run order: robots first, lm-select last; a step runs when its option is set
+PREPASSES = (
+    # compliance FIRST: nothing downstream may see disallowed pages
+    ("robots", lambda spark, a, p: _robots_allowed(spark, p, a.robots)),
+    ("canonical_collapse", _canonical_collapse),
+    ("delta_against", _delta_against),
+    ("url_curation", _url_curation),
+    ("html_extract", lambda spark, a, p: fill_text_from_html(p)),
+    ("normalize_unicode", lambda spark, a, p: normalize_corpus(p, form=a.normalize_unicode)),
+    ("pii_redact", _pii_redact),
+    ("line_dedup", lambda spark, a, p: _dedup_paragraphs(p, dedup_lines_in_doc)),
+    ("paragraph_dedup", lambda spark, a, p: _dedup_paragraphs(p, paragraph_dedup)),
+    ("substring_dedup", _substring_dedup),
+    ("clean", lambda spark, a, p: clean_corpus(p, id_col="url").drop("quality_score")),
+    ("decontaminate", _decontaminate),
+    ("lm_select_permille", _lm_select),
+)
+
+
+def _apply_prepasses(spark, args, pages):
+    """``pages`` through every pre-pass step ``args`` turns on."""
+    for dest, step in PREPASSES:
+        if vars(args)[dest]:
+            pages = step(spark, args, pages)
+    return pages
+
+
+# --- the crawl products -------------------------------------------------------
+
+
+def _host_ranks(spark, args, link_graph):
+    return pagerank_weighted(
+        host_graph(link_graph), iterations=args.host_ranks, src_col="src_host", dst_col="dst_host"
+    ).withColumnRenamed("node", "host")
+
+
+def _frontier(spark, args, link_graph, pages, host_ranks):
+    if args.robots:  # never schedule a url the robots table disallows
+        link_graph = _robots_allowed(spark, link_graph, args.robots, url_col="dst")
+    frontier = crawl_frontier(link_graph, pages.select("url"), host_ranks, k=args.frontier)
+    if args.robots:
+        # politeness scheduling from the same robots table the compliance
+        # gate reads: fetch_at_ms spaces each host's fetches Crawl-delay
+        # apart in priority order
+        frontier = schedule_fetches(frontier, parse_crawl_delays(spark.read.parquet(args.robots)))
+    return frontier
+
+
+class Stage(NamedTuple):
+    """One stage the job can write. Its identity is the values of
+    ``options`` plus the identities of ``inputs``, and ``build`` sees
+    only ``options``, so it cannot read an option its identity lacks."""
+
+    name: str
+    options: tuple[str, ...]
+    inputs: tuple[str, ...]  # upstream stages in build order; "pages" = the raw input
+    wanted: Callable[[argparse.Namespace], bool]
+    build: Callable  # build(spark, options, *input frames); an input not wanted is None
+
+
+# in run order; the KG stages after them are plans.checkpointing.STAGES
+STAGES = (
+    Stage(
+        "curated_pages", CURATE_OPTIONS, ("pages",),
+        lambda a: any(vars(a)[d] for d, _ in PREPASSES), _apply_prepasses,
+    ),
+    Stage(
+        # from the RAW ingested pages: curation may rewrite text, but the
+        # link graph is a property of the crawl itself
+        "link_graph", (), ("pages",),
+        lambda a: a.link_graph or a.host_ranks is not None or a.frontier is not None,
+        lambda spark, a, pages: html_links(pages),
+    ),
+    Stage("host_ranks", ("host_ranks",), ("link_graph",), lambda a: a.host_ranks is not None, _host_ranks),
+    Stage(
+        "frontier", ("frontier", "robots"), ("link_graph", "pages", "host_ranks"),
+        lambda a: a.frontier is not None, _frontier,
+    ),
+)  # fmt: skip
+
+
+def main() -> None:
+    args = parse_args()
 
     # under spark-submit there is no session yet and we own the one we
     # create; when embedded (tests, notebooks) getOrCreate returns the
@@ -244,364 +539,39 @@ def main() -> None:
     owns_session = SparkSession.getActiveSession() is None
     spark = SparkSession.builder.appName(args.app_name).getOrCreate()
     if args.from_warc:
-        from coap_rfc_knowledge_graph_spark.sources.warc import read_warc
-
-        pages = read_warc(spark, args.pages)
+        frames = {"pages": read_warc(spark, args.pages)}
     else:
-        pages = spark.read.parquet(args.pages)
-
-    if args.host_ranks is not None and args.host_ranks < 1:
-        ap.error("--host-ranks ITERS must be >= 1")
-    if args.frontier is not None and args.frontier < 1:
-        ap.error("--frontier K must be >= 1")
-    if args.link_graph or args.host_ranks is not None or args.frontier is not None:
-        # from the RAW ingested pages: curation may rewrite text, but
-        # the link graph is a property of the crawl itself
-        from coap_rfc_knowledge_graph_spark.operators.html_extract import html_links
-        from coap_rfc_knowledge_graph_spark.plans.checkpointing import StageStore
-
-        lg_store = StageStore(args.out)
-        lg_params = {"link_graph": True, "from_warc": bool(args.from_warc)}
-        if not lg_store.has("link_graph", params=lg_params):
-            lg_store.write(html_links(pages), "link_graph", inputs=["pages"], params=lg_params)
-        if args.host_ranks is not None:
-            from coap_rfc_knowledge_graph_spark.operators.webgraph import (
-                host_graph,
-                pagerank_weighted,
-            )
-
-            hr_params = {"host_ranks": True, "iterations": args.host_ranks}
-            if not lg_store.has("host_ranks", params=hr_params):
-                hg = host_graph(lg_store.read(spark, "link_graph"))
-                ranks = pagerank_weighted(
-                    hg, iterations=args.host_ranks,
-                    src_col="src_host", dst_col="dst_host",
-                ).withColumnRenamed("node", "host")
-                lg_store.write(ranks, "host_ranks", inputs=["link_graph"], params=hr_params)
-        if args.frontier is not None:
-            from coap_rfc_knowledge_graph_spark.operators.frontier import crawl_frontier
-
-            # host_ranks iterations are part of the frontier's identity:
-            # a frontier computed from 2-iteration ranks must not be
-            # reused for a --host-ranks 50 run (StageStore compares
-            # params only — same convention as prepass digests)
-            fr_params = {
-                "frontier": True,
-                "k": args.frontier,
-                "with_ranks": args.host_ranks is not None,
-                "rank_iterations": args.host_ranks,
-                # scheduling folds Crawl-delay from the --robots table in;
-                # its presence changes the stage's columns and values
-                "scheduled": bool(args.robots),
-            }
-            if not lg_store.has("frontier", params=fr_params):
-                ranks = (
-                    lg_store.read(spark, "host_ranks")
-                    if args.host_ranks is not None
-                    else None
-                )
-                frontier = crawl_frontier(
-                    lg_store.read(spark, "link_graph"),
-                    pages.select("url"),
-                    ranks,
-                    k=args.frontier,
-                )
-                if args.robots:
-                    # politeness scheduling from the same robots table
-                    # the compliance gate reads: fetch_at_ms spaces each
-                    # host's fetches Crawl-delay apart in priority order
-                    from coap_rfc_knowledge_graph_spark.operators.frontier import (
-                        schedule_fetches,
-                    )
-                    from coap_rfc_knowledge_graph_spark.operators.robots import (
-                        parse_crawl_delays,
-                    )
-
-                    delays = parse_crawl_delays(spark.read.parquet(args.robots))
-                    frontier = schedule_fetches(frontier, delays)
-                lg_store.write(
-                    frontier,
-                    "frontier",
-                    inputs=["link_graph"] + (["host_ranks"] if ranks is not None else []),
-                    params=fr_params,
-                )
-
-    def apply_prepasses(pages):
-        return _apply_prepasses(spark, pages, args, F)
-
-    prepass_active = (
-        args.url_curation
-        or args.robots is not None
-        or args.canonical_collapse
-        or args.delta_against is not None
-        or args.html_extract
-        or args.normalize_unicode is not None
-        or args.clean
-        or args.decontaminate
-        or args.pii_redact
-        or args.paragraph_dedup
-        or args.line_dedup
-        or args.substring_dedup is not None
-        or args.lm_select_permille is not None
-    )
-    if prepass_active:
-        # the curation pre-passes run through the SAME lineage-manifest
-        # store as the extraction stages: at 100 TB a crashed curation
-        # pass must resume from its committed snapshot, not recompute.
-        # The snapshot is keyed on the prepass configuration (flags +
-        # blocklist content + eval-table path): resuming with DIFFERENT
-        # flags recomputes instead of silently reusing a stale snapshot
-        # (e.g. adding --pii-redact after a --clean run must re-mask).
-        import hashlib
-
-        from coap_rfc_knowledge_graph_spark.plans.checkpointing import StageStore
-
-        blocklist_digest = None
-        if args.domain_blocklist:
-            with open(args.domain_blocklist, "rb") as fh:
-                blocklist_digest = hashlib.sha256(fh.read()).hexdigest()
-        def _table_digest(path: str | None) -> str | None:
-            # content-key side-input tables like the blocklist: a table
-            # rewritten IN PLACE must recompute the snapshot, not
-            # silently reuse a stale one. Hashing data files'
-            # (name, size, mtime_ns) is cheap at any table size and
-            # changes on any rewrite.
-            if not path:
-                return None
-            import os
-
-            entries = []
-            if os.path.isdir(path):
-                for root, _, files in os.walk(path):
-                    for f in sorted(files):
-                        p = os.path.join(root, f)
-                        st = os.stat(p)
-                        entries.append(
-                            f"{os.path.relpath(p, path)}\x1f{st.st_size}\x1f{st.st_mtime_ns}"
-                        )
-            else:
-                st = os.stat(path)
-                entries.append(f".\x1f{st.st_size}\x1f{st.st_mtime_ns}")
-            return hashlib.sha256("\x1e".join(sorted(entries)).encode()).hexdigest()
-
-        lm_reference_digest = _table_digest(args.lm_reference)
-        prepass_params = {
-            "url_curation": bool(args.url_curation),
-            # from_warc changes the INPUT DATA, not just a transform:
-            # a parquet run and a WARC run of the same --out must not
-            # share a curated_pages snapshot
-            "from_warc": bool(args.from_warc),
-            "html_extract": bool(args.html_extract),
-            "normalize_unicode": args.normalize_unicode,
-            "domain_blocklist_sha256": blocklist_digest,
-            "head_cap_frac": args.head_cap_frac,
-            "cap_by_registered_domain": bool(args.cap_by_registered_domain),
-            "pii_redact": bool(args.pii_redact),
-            "paragraph_dedup": bool(args.paragraph_dedup),
-            "line_dedup": bool(args.line_dedup),
-            "substring_dedup": args.substring_dedup,
-            "clean": bool(args.clean),
-            "decontaminate": args.decontaminate,
-            "lm_select_permille": args.lm_select_permille,
-            "lm_reference": args.lm_reference,
-            "lm_reference_sha256": lm_reference_digest,
-            "robots": args.robots,
-            "robots_sha256": _table_digest(args.robots),
-            "canonical_collapse": bool(args.canonical_collapse),
-            "delta_against": args.delta_against,
-            "delta_against_sha256": _table_digest(args.delta_against),
-        }
-        store0 = StageStore(args.out)
-        if store0.has("curated_pages", params=prepass_params):
-            pages = store0.read(spark, "curated_pages")
-        else:
-            pages = store0.write(
-                apply_prepasses(pages), "curated_pages", inputs=["pages"], params=prepass_params
-            )
+        frames = {"pages": spark.read.parquet(args.pages)}
+    ids = {"pages": _identity(args, SOURCE_OPTIONS)}
+    store = StageStore(args.out)
+    wanted = [s for s in STAGES if s.wanted(args)]
+    for s in wanted:
+        own = argparse.Namespace(**{d: vars(args)[d] for d in s.options})
+        frames[s.name] = store.materialize(
+            spark,
+            s.name,
+            lambda: s.build(spark, own, *(frames.get(i) for i in s.inputs)),
+            inputs={i: ids[i] for i in s.inputs if i in ids},
+            params=_identity(args, s.options),
+        )
+        ids[s.name] = store.table_hash(s.name)
+    kg_input = "curated_pages" if "curated_pages" in frames else "pages"
     if args.wet_out:
-        from pyspark.sql import functions as _F
-
-        from coap_rfc_knowledge_graph_spark.sources.warc import write_wet
-
-        wet_pages = pages
+        wet_pages = frames[kg_input]
         if "warc_ts" not in wet_pages.columns:
-            wet_pages = wet_pages.withColumn("warc_ts", _F.lit(None).cast("timestamp"))
+            wet_pages = wet_pages.withColumn("warc_ts", F.lit(None).cast("timestamp"))
         manifest = write_wet(wet_pages, args.wet_out).collect()
         n_rec = sum(r.n_records for r in manifest)
         n_files = sum(1 for r in manifest if r.path)
         print(f"wet_out: files={n_files} records={n_rec} dir={args.wet_out}")
-    store = run_resumable(spark, pages, args.out, url_partitions=args.url_partitions)
-    report = (["link_graph"] if args.link_graph else []) + (
-        ["host_ranks"] if args.host_ranks is not None else []
-    ) + (["frontier"] if args.frontier is not None else []) + (
-        ["curated_pages"] if prepass_active else []
-    ) + [
-        "sentences", "mentions", "triples", "entities", "rules", "edges", "contradictions",
-    ]
-    for stage in report:
+    run_resumable(
+        spark, frames[kg_input], args.out, url_partitions=args.url_partitions, pages_id=ids[kg_input]
+    )
+    for stage in [s.name for s in wanted] + KG_STAGES:
         m = store.manifest(stage)
         print(f"{stage}: rows={m['row_count']} hash={m['table_hash']}")
     if owns_session:
         spark.stop()
-
-
-def _apply_prepasses(spark, pages, args, F):
-    if getattr(args, "robots", None):
-        # compliance FIRST: nothing downstream may see disallowed pages
-        from coap_rfc_knowledge_graph_spark.operators.robots import (
-            parse_robots,
-            robots_filter,
-        )
-
-        rules = parse_robots(spark.read.parquet(args.robots))
-        pages = (
-            robots_filter(pages, rules)
-            .filter(F.col("robots_allowed"))
-            .drop("robots_allowed")
-        )
-    if getattr(args, "canonical_collapse", False):
-        # one row per canonical target: syndicated / tracking-parameter
-        # variants collapse BEFORE any content hashing, via the same
-        # packed-struct max aggregate as re-crawl collapse (no window)
-        from coap_rfc_knowledge_graph_spark.operators.html_extract import html_head_meta
-        from coap_rfc_knowledge_graph_spark.operators.webtext import latest_snapshot
-
-        original_cols = list(pages.columns)
-        canon = html_head_meta(pages).select("url", "canonical_url")
-        keyed = (
-            pages.join(canon, "url", "left")
-            .withColumn("__ckey", F.coalesce("canonical_url", "url"))
-            .drop("canonical_url")
-        )
-        order = tuple(c for c in ("warc_ts",) if c in original_cols) + ("url",)
-        payload = tuple(c for c in original_cols if c not in order)
-        pages = latest_snapshot(
-            keyed, key_col="__ckey", order_cols=order, payload_cols=payload
-        ).select(*original_cols)
-    if getattr(args, "delta_against", None):
-        # O(delta) re-crawl: only new/changed content re-enters the
-        # pipeline (fingerprint = md5 of the text bytes; the old
-        # snapshot needs (url, text))
-        from coap_rfc_knowledge_graph_spark.operators.webtext import crawl_delta
-
-        fp = lambda df: df.select(  # noqa: E731
-            "url", F.md5(F.coalesce(F.col("text"), F.lit(""))).alias("fingerprint")
-        )
-        keep = (
-            crawl_delta(fp(spark.read.parquet(args.delta_against)), fp(pages))
-            .filter(F.col("status").isin("added", "changed"))
-            .select("url")
-        )
-        pages = pages.join(keep, "url")
-    if args.url_curation:
-        from coap_rfc_knowledge_graph_spark.operators.webtext import curate_urls
-
-        blocklist: tuple[str, ...] = ()
-        if args.domain_blocklist:
-            with open(args.domain_blocklist, encoding="utf-8") as fh:
-                # normalized like the parsed host column (lowercase, no
-                # trailing dot) — a mixed-case file entry would
-                # otherwise silently block nothing
-                blocklist = tuple(
-                    ln.strip().lower().rstrip(".") for ln in fh if ln.strip()
-                )
-        pages = curate_urls(
-            pages,
-            blocklist=blocklist,
-            head_cap_frac=args.head_cap_frac,
-            cap_by_registered_domain=args.cap_by_registered_domain,
-        )
-    # getattr: embedded callers (tests) build partial Namespaces
-    if getattr(args, "html_extract", False):
-        from coap_rfc_knowledge_graph_spark.operators.html_extract import fill_text_from_html
-
-        pages = fill_text_from_html(pages)
-    if getattr(args, "normalize_unicode", None) is not None:
-        from coap_rfc_knowledge_graph_spark.operators.normalize import normalize_corpus
-
-        pages = normalize_corpus(pages, form=args.normalize_unicode)
-    if args.pii_redact:
-        from coap_rfc_knowledge_graph_spark.operators.pii import redact_pii
-
-        pages = (
-            redact_pii(pages)
-            .drop("text", "n_emails", "n_ips", "n_phones")
-            .withColumnRenamed("redacted", "text")
-        )
-    if args.paragraph_dedup or args.line_dedup:
-        from coap_rfc_knowledge_graph_spark.operators.dedup import (
-            dedup_lines_in_doc,
-            paragraph_dedup,
-            split_paragraphs,
-        )
-
-        # blank-line blocks when the corpus has them; 64-word windows
-        # otherwise (one cheap existence probe per pass — the line pass
-        # rejoins survivors with spaces, so the paragraph pass must
-        # re-probe rather than trust the pre-line-dedup answer)
-        def _split(pages):
-            has_marks = pages.filter(F.col("text").contains("\n\n")).limit(1).count() > 0
-            return split_paragraphs(
-                pages, id_col="url", sep=r"\n{2,}" if has_marks else None, words=64
-            )
-
-        if args.line_dedup:
-            kept = dedup_lines_in_doc(_split(pages), id_col="url")
-            pages = pages.drop("text").join(
-                kept.select("url", F.col("text_kept").alias("text")), "url"
-            )
-        if args.paragraph_dedup:
-            kept = paragraph_dedup(_split(pages), id_col="url")
-            pages = pages.drop("text").join(
-                kept.select("url", F.col("text_kept").alias("text")), "url"
-            )
-    if getattr(args, "substring_dedup", None) is not None:
-        from coap_rfc_knowledge_graph_spark.operators.substring_dedup import (
-            remove_duplicate_spans,
-        )
-
-        # one checkpoint serves all three consumers (span derivation,
-        # rewrite join inside the operator, and the join-back here) —
-        # upstream prepasses must not re-evaluate
-        pages = pages.localCheckpoint(eager=False)
-        kept = remove_duplicate_spans(pages, min_span=args.substring_dedup, id_col="url")
-        pages = pages.drop("text").join(
-            kept.select(F.col("doc_id").alias("url"), F.col("text_kept").alias("text")), "url"
-        )
-    if args.clean:
-        from coap_rfc_knowledge_graph_spark.operators.text_stats import clean_corpus
-
-        pages = clean_corpus(pages, id_col="url").drop("quality_score")
-    if args.decontaminate:
-        from coap_rfc_knowledge_graph_spark.operators.dedup import decontaminate
-
-        ev = spark.read.parquet(args.decontaminate)
-        flagged = decontaminate(pages, ev, id_col="url").select(
-            F.col("doc_id").alias("url")
-        )
-        pages = pages.join(flagged, on="url", how="left_anti")
-    if args.lm_select_permille is not None:
-        from coap_rfc_knowledge_graph_spark.operators.corpus_lm import (
-            prune_top_bigrams,
-            train_bigram_lm,
-        )
-        from coap_rfc_knowledge_graph_spark.operators.data_selection import (
-            coverage_buckets,
-        )
-
-        # checkpoint first: LM training (when self-referenced), scoring,
-        # and the final semi join all consume `pages` — without this the
-        # whole upstream pre-pass lineage (PII regexes, paragraph dedup,
-        # clean gates, decontamination) would re-evaluate three times
-        pages = pages.localCheckpoint(eager=False)
-        # production shape: top-1M vocabulary cut + broadcast LM, so the
-        # scoring pass never shuffles the page corpus
-        ref = spark.read.parquet(args.lm_reference) if args.lm_reference else pages
-        lm = prune_top_bigrams(train_bigram_lm(ref, id_col="url"), 1_000_000)
-        buckets = coverage_buckets(pages, lm, n_buckets=1000, id_col="url", broadcast_lm=True)
-        keep = buckets.filter(F.col("bucket") < args.lm_select_permille).select("url")
-        pages = pages.join(keep, on="url", how="left_semi")
-    return pages
 
 
 if __name__ == "__main__":

@@ -141,7 +141,6 @@ def test_dedup_lines_in_doc_is_per_document(spark):
 def test_job_line_dedup_prepass(spark):
     """--line-dedup: per-page first occurrences survive, other pages'
     identical lines untouched."""
-    import argparse
     import os
     import sys
 
@@ -155,11 +154,8 @@ def test_job_line_dedup_prepass(spark):
         ("u1", None, "nav bar here\n\nreal content one", "en"),
     ]
     pages = spark.createDataFrame(rows, "url string, html binary, text string, lang string")
-    args = argparse.Namespace(
-        url_curation=False, pii_redact=False, paragraph_dedup=False, line_dedup=True,
-        clean=False, decontaminate=None, lm_select_permille=None, lm_reference=None,
-    )
-    out = {r.url: r.text for r in run_pipeline._apply_prepasses(spark, pages, args, F).collect()}
+    args = run_pipeline.parse_args(["--pages", "-", "--out", "-", "--line-dedup"])
+    out = {r.url: r.text for r in run_pipeline._apply_prepasses(spark, args, pages).collect()}
     assert out["u0"] == "nav bar here real content zero footer line"
     assert out["u1"] == "nav bar here real content one"
 

@@ -197,7 +197,6 @@ def test_plan_shapes(spark):
 def test_job_lm_select_prepass(spark):
     """--lm-select-permille 500 keeps exactly the top half of pages by
     LM coverage: the corpus-typical pages survive, the junk tail goes."""
-    import argparse
     import os
     import sys
 
@@ -214,17 +213,8 @@ def test_job_lm_select_prepass(spark):
         for i in range(10)
     ]
     pages = spark.createDataFrame(rows, "url string, html binary, text string, lang string")
-    args = argparse.Namespace(
-        url_curation=False,
-        pii_redact=False,
-        paragraph_dedup=False,
-        line_dedup=False,
-        clean=False,
-        decontaminate=None,
-        lm_select_permille=500,
-        lm_reference=None,
-    )
-    kept = run_pipeline._apply_prepasses(spark, pages, args, F)
+    args = run_pipeline.parse_args(["--pages", "-", "--out", "-", "--lm-select-permille", "500"])
+    kept = run_pipeline._apply_prepasses(spark, args, pages)
     urls = sorted(r.url for r in kept.select("url").collect())
     assert urls == sorted(f"https://good/{i}" for i in range(10))
 

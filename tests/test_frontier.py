@@ -84,23 +84,27 @@ def test_job_frontier_stage(spark, tmp_path):
     sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs"))
     import run_pipeline
 
-    old = sys.argv
-    try:
-        sys.argv = ["run_pipeline.py", "--pages", src, "--out", out,
-                    "--frontier", "3", "--host-ranks", "2"]
-        run_pipeline.main()
-    finally:
-        sys.argv = old
     from coap_rfc_knowledge_graph_spark.plans.checkpointing import StageStore
 
     store = StageStore(out)
-    fr_params = {"frontier": True, "k": 3, "with_ranks": True,
-                 "rank_iterations": 2, "scheduled": False}
-    assert store.has("frontier", params=fr_params)
-    # the rank iteration count is part of the stage identity: a frontier
-    # built from different host_ranks must not be reused
-    assert not store.has("frontier", params={**fr_params, "rank_iterations": 50})
-    got = store.read(spark, "frontier").collect()
+    argv = ["run_pipeline.py", "--pages", src, "--out", out, "--frontier", "3", "--host-ranks", "2"]
+    old = sys.argv
+    try:
+        sys.argv = argv
+        run_pipeline.main()
+        first = store.manifest("frontier")
+        got = store.read(spark, "frontier").collect()
+        run_pipeline.main()  # the same args reuse the stage
+        assert store.manifest("frontier")["written_at"] == first["written_at"]
+        # the host ranks are part of the frontier's identity: a frontier
+        # built from other host_ranks must not be reused
+        sys.argv = argv[:-1] + ["3"]
+        run_pipeline.main()
+        again = store.manifest("frontier")
+        assert again["written_at"] != first["written_at"]
+        assert again["params"]["inputs"]["host_ranks"] == store.table_hash("host_ranks")
+    finally:
+        sys.argv = old
     # peer links point at crawled pages (excluded); all 8 c.example
     # leaves tie on inlinks (3 each), shallow beats deep via -depth,
     # and the url-asc tiebreak picks new0..new2 of the 4 shallow ones
@@ -240,16 +244,116 @@ def test_job_frontier_scheduled_with_robots(spark, tmp_path):
     sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs"))
     import run_pipeline
 
+    from coap_rfc_knowledge_graph_spark.plans.checkpointing import StageStore
+
+    def schedule():
+        got = sorted(StageStore(out).read(spark, "frontier").collect(), key=lambda r: r.fetch_at_ms)
+        assert all(r.host == "c.example" for r in got)
+        return [(r.fetch_at_ms, r.delay_millis) for r in got]
+
     old = sys.argv
     try:
         sys.argv = ["run_pipeline.py", "--pages", src, "--out", out,
                     "--frontier", "3", "--robots", robots]
         run_pipeline.main()
+        assert schedule() == [(0, 2500), (2500, 2500), (5000, 2500)]
+        # the robots table rewritten in place with a new Crawl-delay:
+        # the frontier is recomputed with the new spacing
+        spark.createDataFrame(
+            [("c.example", b"User-agent: *\nCrawl-delay: 4\n")], "host string, payload binary"
+        ).write.mode("overwrite").parquet(robots)
+        run_pipeline.main()
+        assert schedule() == [(0, 4000), (4000, 4000), (8000, 4000)]
     finally:
         sys.argv = old
-    from coap_rfc_knowledge_graph_spark.plans.checkpointing import StageStore
 
-    got = sorted(StageStore(out).read(spark, "frontier").collect(),
-                 key=lambda r: r.fetch_at_ms)
-    assert [r.fetch_at_ms for r in got] == [0, 2500, 5000]
-    assert all(r.delay_millis == 2500 and r.host == "c.example" for r in got)
+
+def test_crawl_cycle_job(spark, tmp_path):
+    """One job over a multi-host crawl with the whole crawl loop on
+    (--robots --delta-against --link-graph --host-ranks --frontier
+    --wet-out): the frontier holds only urls robots allows, each host's
+    fetches are spaced by its parsed Crawl-delay, and the WET export
+    round-trips to the curated pages' text."""
+    import os
+    import sys
+
+    from coap_rfc_knowledge_graph_spark.operators.robots import (
+        parse_crawl_delays,
+        parse_robots,
+        robots_filter,
+    )
+    from coap_rfc_knowledge_graph_spark.plans.checkpointing import StageStore
+    from coap_rfc_knowledge_graph_spark.sources.warc import parse_warc
+
+    def page(i):
+        host = ("a", "b", "c")[i % 3]
+        html = "".join(
+            f'<a href="https://{h}.example/{d}/{i % 4}">l</a>'
+            for h, d in (("c", "pub"), ("c", "private"), ("b", "docs"), ("d", "x"), ("a", "secret"))
+        ).encode()
+        text = f"The {host} server MUST answer request {i} within the retransmission window."
+        return (f"https://{host}.example/p{i}", html, text, "en")
+
+    rows = [page(i) for i in range(12)] + [
+        ("https://a.example/secret/p", b"", "A disallowed page MUST NOT be processed.", "en"),
+    ]
+    src = str(tmp_path / "pages_src")
+    spark.createDataFrame(rows, "url string, html binary, text string, lang string").write.parquet(src)
+    robots = str(tmp_path / "robots")
+    spark.createDataFrame(
+        [
+            ("a.example", b"User-agent: *\nDisallow: /secret\n"),
+            ("b.example", b"User-agent: *\nCrawl-delay: 0.5\n"),
+            ("c.example", b"User-agent: *\nDisallow: /private\nCrawl-delay: 2\n"),
+        ],
+        "host string, payload binary",
+    ).write.parquet(robots)
+    previous = str(tmp_path / "previous")  # p0 unchanged, p1 changed since the last crawl
+    spark.createDataFrame(
+        [(rows[0][0], rows[0][2]), (rows[1][0], "an older text")], "url string, text string"
+    ).write.parquet(previous)
+    out, wet = str(tmp_path / "state"), str(tmp_path / "wet")
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs"))
+    import run_pipeline
+
+    old = sys.argv
+    try:
+        sys.argv = [
+            "run_pipeline.py", "--pages", src, "--out", out, "--robots", robots,
+            "--delta-against", previous, "--link-graph", "--host-ranks", "2",
+            "--frontier", "3", "--wet-out", wet, "--url-partitions", "4",
+        ]  # fmt: skip
+        run_pipeline.main()
+    finally:
+        sys.argv = old
+    store = StageStore(out)
+    rules = parse_robots(spark.read.parquet(robots))
+
+    # the link graph does point at disallowed urls; none reaches the frontier
+    disallowed = robots_filter(store.read(spark, "link_graph"), rules, url_col="dst").filter(
+        ~F.col("robots_allowed")
+    )
+    assert disallowed.count() > 0
+    frontier = store.read(spark, "frontier")
+    verdicts = robots_filter(frontier, rules).select("url", "robots_allowed").collect()
+    assert verdicts and all(r.robots_allowed for r in verdicts)
+
+    delays = {r.host: r.delay_millis for r in parse_crawl_delays(spark.read.parquet(robots)).collect()}
+    assert delays == {"b.example": 500, "c.example": 2000}
+    by_host = {}
+    for r in frontier.collect():
+        by_host.setdefault(r.host, []).append(r.fetch_at_ms)
+    assert set(by_host) == {"b.example", "c.example", "d.example"}
+    for host, times in by_host.items():
+        step = delays.get(host, 1000)  # hosts without a Crawl-delay: the scheduler default
+        assert sorted(times) == [n * step for n in range(len(times))], host
+
+    curated = {r.url: r.text for r in store.read(spark, "curated_pages").collect()}
+    assert rows[0][0] not in curated and rows[1][0] in curated  # the delta
+    assert "https://a.example/secret/p" not in curated  # the robots gate
+    got = []
+    for name in os.listdir(wet):
+        with open(os.path.join(wet, name), "rb") as fh:
+            got.extend(parse_warc(fh.read(), record_types=("conversion",)))
+    assert {u: p.decode() for u, _, p in got} == curated and len(got) == len(curated)

@@ -336,14 +336,12 @@ def test_html_head_meta_resolves_canonical(spark):
 def test_job_canonical_collapse_prepass(spark):
     """--canonical-collapse keeps one row per canonical target (the
     latest by warc_ts), pages without a canonical pass through."""
-    import argparse
     import datetime
 
     sys.path.insert(
         0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs")
     )
     import run_pipeline
-    from pyspark.sql import functions as F
 
     def page(url, canon, ts):
         link = f'<link rel="canonical" href="{canon}">' if canon else ""
@@ -359,12 +357,8 @@ def test_job_canonical_collapse_prepass(spark):
     pages = spark.createDataFrame(
         rows, "url string, warc_ts timestamp, html binary, text string, lang string"
     )
-    args = argparse.Namespace(
-        url_curation=False, pii_redact=False, paragraph_dedup=False, line_dedup=False,
-        clean=False, decontaminate=None, lm_select_permille=None, lm_reference=None,
-        canonical_collapse=True,
-    )
-    out = run_pipeline._apply_prepasses(spark, pages, args, F)
+    args = run_pipeline.parse_args(["--pages", "-", "--out", "-", "--canonical-collapse"])
+    out = run_pipeline._apply_prepasses(spark, args, pages)
     assert sorted(out.columns) == sorted(pages.columns)
     got = sorted((r.url, r.text) for r in out.collect())
     assert got == [

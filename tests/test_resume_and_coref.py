@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from coap_rfc_knowledge_graph_spark.operators.coref import find_pronouns, resolve_coreferences
+from coap_rfc_knowledge_graph_spark.plans.checkpointing import STAGES as KG_STAGES
 from coap_rfc_knowledge_graph_spark.plans.checkpointing import StageStore, run_resumable
 from coap_rfc_knowledge_graph_spark.sources.pages import synthetic_pages
 
@@ -152,9 +153,12 @@ def test_job_prepass_runs_through_stage_store(spark, tmp_path):
         snap = store.read(spark, "curated_pages")
         assert snap.filter(snap.text.contains("@")).count() == 0
         written_at = m1["written_at"]
+        stages = ["curated_pages", *KG_STAGES]
+        first = {s: store.manifest(s)["written_at"] for s in stages}
+        first_params = {s: store.manifest(s)["params"] for s in KG_STAGES}
         sys.argv = argv
-        run_pipeline.main()  # resume: stage must be skipped, not rewritten
-        assert store.manifest("curated_pages")["written_at"] == written_at
+        run_pipeline.main()  # resume: every stage is reused, not rewritten
+        assert {s: store.manifest(s)["written_at"] for s in stages} == first
         # DIFFERENT flags must NOT reuse the stale snapshot: dropping
         # --pii-redact changes the curated output, so the stage recomputes
         # and the committed text carries the (unmasked) emails again
@@ -164,5 +168,95 @@ def test_job_prepass_runs_through_stage_store(spark, tmp_path):
         assert m2["written_at"] != written_at and m2["params"]["pii_redact"] is False
         snap2 = store.read(spark, "curated_pages")
         assert snap2.filter(snap2.text.contains("@")).count() > 0
+        # ... and so do the KG stages built on it: the sentences carry
+        # the unmasked text
+        for stage in ("sentences", "mentions", "triples", "entities", "rules"):
+            assert store.manifest(stage)["written_at"] != first[stage], stage
+        sents = store.read(spark, "sentences")
+        assert sents.filter(sents.sentence.contains("@")).count() > 0
+        # each KG stage is keyed on its inputs' current hashes and is
+        # rewritten exactly when one of them moved (this corpus yields
+        # no rules, so the stages after 'rules' keep their empty input
+        # and are rightly reused)
+        hashes = {"pages": store.table_hash("curated_pages")}
+        for stage in KG_STAGES:
+            m = store.manifest(stage)
+            assert m["params"]["inputs"] == {i: hashes[i] for i in m["inputs"]}, stage
+            rewritten = m["written_at"] != first[stage]
+            assert rewritten == (m["params"] != first_params[stage]), stage
+            hashes[stage] = m["table_hash"]
     finally:
         sys.argv = old
+
+
+def test_job_rewritten_decontaminate_table_recomputes_curated_pages(spark, tmp_path):
+    """The --decontaminate eval table is keyed on its content: rewriting
+    it in place (same path) recomputes curated_pages."""
+    import sys
+
+    rows = [
+        (f"https://s{i}.example/p", None,
+         f"The CoAP client number {i} MUST retry the confirmable request after the timer expires.", "en")
+        for i in range(6)
+    ]
+    src = str(tmp_path / "pages_src")
+    spark.createDataFrame(rows, "url string, html binary, text string, lang string").write.parquet(src)
+    ev = str(tmp_path / "eval")
+    spark.createDataFrame([("e0", "nothing in common with any page")], "eval_id string, text string") \
+        .write.parquet(ev)
+    out = str(tmp_path / "state")
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs"))
+    import run_pipeline
+
+    old = sys.argv
+    try:
+        sys.argv = ["run_pipeline.py", "--pages", src, "--out", out, "--decontaminate", ev]
+        run_pipeline.main()
+        store = StageStore(out)
+        m1 = store.manifest("curated_pages")
+        assert m1["row_count"] == 6
+        # same path, new content: page 3's text is now in the eval set
+        spark.createDataFrame([("e0", rows[3][2])], "eval_id string, text string") \
+            .write.mode("overwrite").parquet(ev)
+        run_pipeline.main()
+        m2 = store.manifest("curated_pages")
+        assert m2["written_at"] != m1["written_at"] and m2["row_count"] == 5
+        assert rows[3][0] not in {r.url for r in store.read(spark, "curated_pages").collect()}
+    finally:
+        sys.argv = old
+
+
+def test_every_prepass_option_is_part_of_curated_pages_identity(tmp_path):
+    """Enumerates the job's 'curated_pages' option group: setting any one
+    option (or changing its value) changes the stage's identity, and
+    every pre-pass step reads an option of that group."""
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs"))
+    import run_pipeline
+
+    side_input = tmp_path / "side_input"
+    side_input.write_text("example.org\n")
+    actions = {a.dest: a for a in run_pipeline.PARSER._actions}
+    # the options some others require, on in every baseline but their own
+    companions = {"url_curation": ["--url-curation"], "lm_select_permille": ["--lm-select-permille", "500"]}
+
+    def value(a):
+        if a.nargs == 0:
+            return []
+        if a.type is run_pipeline._path:
+            return [str(side_input)]
+        if a.choices:
+            return [a.choices[-1]]
+        return ["7"] if a.type is int else ["0.5"]
+
+    def identity(argv):
+        args = run_pipeline.parse_args(["--pages", str(side_input), "--out", "-", *argv])
+        return run_pipeline._identity(args, run_pipeline.CURATE_OPTIONS)
+
+    assert {d for d, _ in run_pipeline.PREPASSES} <= set(run_pipeline.CURATE_OPTIONS)
+    for dest in run_pipeline.CURATE_OPTIONS:
+        a = actions[dest]
+        base = [t for d, tokens in companions.items() if d != dest for t in tokens]
+        assert identity(base) != identity(base + [a.option_strings[0], *value(a)]), dest

@@ -124,13 +124,10 @@ def test_job_robots_and_delta_prepasses(spark, tmp_path):
     """--robots drops disallowed pages first; --delta-against keeps only
     new/changed content — composed, the job re-processes exactly the
     allowed delta."""
-    import argparse
-
     sys.path.insert(
         0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs")
     )
     import run_pipeline
-    from pyspark.sql import functions as F
 
     rows = [
         ("https://a.example/p/1", None, "unchanged text", "en"),
@@ -153,14 +150,10 @@ def test_job_robots_and_delta_prepasses(spark, tmp_path):
         "url string, text string",
     ).write.parquet(old_dir)
 
-    args = argparse.Namespace(
-        url_curation=False, pii_redact=False, paragraph_dedup=False, line_dedup=False,
-        clean=False, decontaminate=None, lm_select_permille=None, lm_reference=None,
-        robots=robots_dir, delta_against=old_dir,
+    args = run_pipeline.parse_args(
+        ["--pages", "-", "--out", "-", "--robots", robots_dir, "--delta-against", old_dir]
     )
-    out = sorted(
-        r.url for r in run_pipeline._apply_prepasses(spark, pages, args, F).collect()
-    )
+    out = sorted(r.url for r in run_pipeline._apply_prepasses(spark, args, pages).collect())
     # p/1 unchanged -> dropped; p/2 changed + p/3 added -> kept;
     # b.example/blocked/1 is new but robots-disallowed -> dropped
     assert out == ["https://a.example/p/2", "https://a.example/p/3"]

@@ -192,7 +192,6 @@ def test_job_substring_dedup_prepass(spark):
     """--substring-dedup MIN_SPAN wired through _apply_prepasses: the
     duplicated run vanishes from both pages, unique text survives, and
     non-text columns pass through."""
-    import argparse
     import os
     import sys
 
@@ -209,12 +208,8 @@ def test_job_substring_dedup_prepass(spark):
     }
     rows = [(u, None, " ".join(t), "en") for u, t in toks.items()]
     pages = spark.createDataFrame(rows, "url string, html binary, text string, lang string")
-    args = argparse.Namespace(
-        url_curation=False, pii_redact=False, paragraph_dedup=False, line_dedup=False,
-        clean=False, decontaminate=None, lm_select_permille=None, lm_reference=None,
-        substring_dedup=20,
-    )
-    out = {r.url: r for r in run_pipeline._apply_prepasses(spark, pages, args, F).collect()}
+    args = run_pipeline.parse_args(["--pages", "-", "--out", "-", "--substring-dedup", "20"])
+    out = {r.url: r for r in run_pipeline._apply_prepasses(spark, args, pages).collect()}
     # expected output from the pure-Python reference at the job's
     # defaults (p=16, min_span from the flag)
     want_spans = _ref_spans(toks, p=16, min_span=20)

@@ -51,6 +51,18 @@ def test_sample_table_slices_exact_frame_bytes():
         assert [ts for _, _, ts in vt["samples"]] == [k * 250 for k in range(7)]
 
 
+def test_expand_samples_anchors_stsc_runs_to_chunk_numbers():
+    """stsc first_chunk values are absolute 1-based chunk numbers: when
+    the first run starts at chunk 2, chunk 1 holds no samples."""
+    from coap_rfc_knowledge_graph_spark.functions.mp4 import _expand_samples
+
+    offsets, stts = [100, 200, 300], [(4, 1)]
+    got = _expand_samples([10, 11, 12, 13], offsets, [(2, 2)], stts, 1000)
+    assert got == [(200, 10, 0), (210, 11, 1), (300, 12, 2), (312, 13, 3)]
+    got = _expand_samples([10, 11, 12], offsets, [(2, 1), (3, 2)], stts, 1000)
+    assert got == [(200, 10, 0), (300, 11, 1), (311, 12, 2)]
+
+
 def test_decode_video_frames_bit_exact_vs_direct_jpeg():
     """Each yielded frame equals decode_jpeg of the original frame
     bytes (bit-exact — same bytes, same decoder), for gray 4:4:4 and

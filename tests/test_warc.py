@@ -215,13 +215,10 @@ def test_job_html_extract_and_normalize_prepasses(spark):
     """--html-extract fills NULL text from html (rows with text pass
     through untouched) and --normalize-unicode runs the NFC corpus
     pass — wired through the same _apply_prepasses the job runs."""
-    import argparse
-
     sys.path.insert(
         0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs")
     )
     import run_pipeline
-    from pyspark.sql import functions as F
 
     decomposed = "café"
     rows = [
@@ -230,12 +227,10 @@ def test_job_html_extract_and_normalize_prepasses(spark):
         ("u2", None, None, "en"),
     ]
     pages = spark.createDataFrame(rows, "url string, html binary, text string, lang string")
-    args = argparse.Namespace(
-        url_curation=False, pii_redact=False, paragraph_dedup=False, line_dedup=False,
-        clean=False, decontaminate=None, lm_select_permille=None, lm_reference=None,
-        html_extract=True, normalize_unicode="NFC",
+    args = run_pipeline.parse_args(
+        ["--pages", "-", "--out", "-", "--html-extract", "--normalize-unicode", "NFC"]
     )
-    out = {r.url: r.text for r in run_pipeline._apply_prepasses(spark, pages, args, F).collect()}
+    out = {r.url: r.text for r in run_pipeline._apply_prepasses(spark, args, pages).collect()}
     assert "specialized web transfer protocol" in out["u0"]
     assert out["u1"] == "existing café text"  # untouched by extract, NFC-composed
     assert out["u2"] is None  # nothing to extract from, nulls flow
@@ -353,6 +348,31 @@ def test_job_wet_out(spark, tmp_path):
     assert sorted(u for u, _, _ in got) == sorted(r[0] for r in rows)
     texts = {u: p.decode() for u, _, p in got}
     assert texts["https://s3.example/p"] == rows[3][2]
+
+
+def test_write_wet_rerun_leaves_only_manifest_segments(spark, tmp_path):
+    """A re-run into the same directory with fewer records: a partition
+    that now writes nothing removes its own earlier segment, so the
+    directory holds exactly the files the manifest names."""
+    from coap_rfc_knowledge_graph_spark.sources.warc import write_wet
+
+    out = str(tmp_path / "wet")
+
+    def run(n):
+        rows = [(f"https://r.example/{i}", datetime(2024, 1, 1), f"text {i}") for i in range(n)]
+        pages = spark.createDataFrame(rows, "url string, warc_ts timestamp, text string")
+        return write_wet(pages.repartition(4), out).collect()
+
+    assert sum(r.n_records for r in run(8)) == 8 and len(os.listdir(out)) == 4
+    manifest = run(1)
+    assert sorted(os.path.join(out, f) for f in os.listdir(out)) == sorted(
+        r.path for r in manifest if r.path
+    )
+    got = []
+    for name in os.listdir(out):
+        with open(os.path.join(out, name), "rb") as fh:
+            got.extend(parse_warc(fh.read(), record_types=("conversion",)))
+    assert [(u, p) for u, _, p in got] == [("https://r.example/0", b"text 0")]
 
 
 def test_write_wet_sanitizes_crlf_in_url(spark, tmp_path):

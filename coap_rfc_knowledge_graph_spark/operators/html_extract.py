@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.rows import map_rows
+
 # subtrees whose text is never content
 _SKIP_TAGS = {"script", "style", "noscript", "template", "head", "svg", "iframe"}
 # tags that open/close a text block
@@ -142,29 +144,11 @@ def html_blocks(pages: DataFrame, url_col: str = "url", html_col: str = "html") 
     """pages -> one row per text block (url, block_id, tag, text,
     n_words, link_words). Column-pruned to (url, html); narrow."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, bids, tags, texts, nws, lws = [], [], [], [], [], []
-            for url, html in zip(pdf[url_col], pdf[html_col]):
-                for i, (tag, text, nw, lw) in enumerate(parse_blocks(html)):
-                    urls.append(url)
-                    bids.append(i)
-                    tags.append(tag)
-                    texts.append(text)
-                    nws.append(nw)
-                    lws.append(lw)
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "block_id": pd.array(bids, dtype="int32"),
-                    "tag": tags,
-                    "text": texts,
-                    "n_words": pd.array(nws, dtype="int32"),
-                    "link_words": pd.array(lws, dtype="int32"),
-                }
-            )
+    def page_blocks(url, html):
+        for block_id, block in enumerate(parse_blocks(html)):
+            yield (url, block_id, *block)
 
-    return pages.select(url_col, html_col).mapInPandas(fn, BLOCKS_SCHEMA)
+    return map_rows(pages, [url_col, html_col], BLOCKS_SCHEMA, page_blocks)
 
 
 def keep_block(n_words: int, link_words: int, min_words: int, max_link_density: float) -> bool:
@@ -209,25 +193,10 @@ def main_content(
     draft re-assembled via groupBy(url); pointless — the page is
     already co-located with itself)."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, texts, keptc, totc = [], [], [], []
-            for url, html in zip(pdf[url_col], pdf[html_col]):
-                text, n_kept, n_total = extract_main_text(html, min_words, max_link_density)
-                urls.append(url)
-                texts.append(text)
-                keptc.append(n_kept)
-                totc.append(n_total)
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "text": texts,
-                    "n_blocks_kept": pd.array(keptc, dtype="int32"),
-                    "n_blocks_total": pd.array(totc, dtype="int32"),
-                }
-            )
+    def page_main(url, html):
+        yield (url, *extract_main_text(html, min_words, max_link_density))
 
-    return pages.select(url_col, html_col).mapInPandas(fn, MAIN_SCHEMA)
+    return map_rows(pages, [url_col, html_col], MAIN_SCHEMA, page_main)
 
 
 class _LinkParser(HTMLParser):
@@ -310,23 +279,16 @@ def html_links(pages: DataFrame, url_col: str = "url", html_col: str = "html") -
     (url, url, anchor) triples, never page bytes."""
     from urllib.parse import urldefrag, urljoin
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            srcs, dsts, anchors = [], [], []
-            for url, html in zip(pdf[url_col], pdf[html_col]):
-                for href, anchor in parse_links(html):
-                    try:
-                        dst = urldefrag(urljoin(url or "", href)).url
-                    except ValueError:
-                        continue  # pathological href (bad IPv6 bracket etc.)
-                    if not dst.startswith(("http://", "https://")):
-                        continue
-                    srcs.append(url)
-                    dsts.append(dst)
-                    anchors.append(anchor)
-            yield pd.DataFrame({"src": srcs, "dst": dsts, "anchor": anchors})
+    def page_links(url, html):
+        for href, anchor in parse_links(html):
+            try:
+                dst = urldefrag(urljoin(url or "", href)).url
+            except ValueError:
+                continue  # pathological href (bad IPv6 bracket etc.)
+            if dst.startswith(("http://", "https://")):
+                yield url, dst, anchor
 
-    return pages.select(url_col, html_col).mapInPandas(fn, EDGES_SCHEMA)
+    return map_rows(pages, [url_col, html_col], EDGES_SCHEMA, page_links)
 
 
 def anchor_text_stats(edges: DataFrame, k_anchors: int = 5) -> DataFrame:
@@ -520,22 +482,17 @@ def html_head_meta(pages: DataFrame, url_col: str = "url", html_col: str = "html
     per page, no visible-text collection."""
     from urllib.parse import urldefrag, urljoin
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in HEAD_META_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf[url_col], pdf[html_col]):
-                m = parse_head_meta(html)
+    def page_meta(url, html):
+        m = parse_head_meta(html)
+        canon = None
+        if m["canonical"]:
+            try:
+                canon = urldefrag(urljoin(url or "", m["canonical"])).url
+            except ValueError:
                 canon = None
-                if m["canonical"]:
-                    try:
-                        canon = urldefrag(urljoin(url or "", m["canonical"])).url
-                    except ValueError:
-                        canon = None
-                    if canon and not canon.startswith(("http://", "https://")):
-                        canon = None
-                rows.append((url, m["title"], canon, m["og_url"], m["og_title"],
-                             m["description"], m["html_lang"]))
-            yield pd.DataFrame(rows, columns=cols)
+            if canon and not canon.startswith(("http://", "https://")):
+                canon = None
+        yield (url, m["title"], canon, m["og_url"], m["og_title"],
+               m["description"], m["html_lang"])
 
-    return pages.select(url_col, html_col).mapInPandas(fn, HEAD_META_SCHEMA)
+    return map_rows(pages, [url_col, html_col], HEAD_META_SCHEMA, page_meta)

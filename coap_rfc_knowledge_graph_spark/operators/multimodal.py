@@ -46,6 +46,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.rows import map_rows
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -644,29 +646,21 @@ def extract_features(media: DataFrame, dim: int = 32, use_backend: bool = False)
     for that row; the mime and byte count still flow, so the failure
     set is queryable downstream (features = all-zeros)."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "mime": [], "n_bytes": [], "features": []}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(payload) if payload is not None else b""
-                mime = sniff_mime(payload)
-                if use_backend:
-                    try:
-                        feats = real_features(decode_backend(payload, mime), mime, dim)
-                    except Exception:
-                        # corrupt/truncated/stub-format payload: zero
-                        # vector, never a task failure
-                        feats = np.zeros(dim, dtype=np.float32)
-                else:
-                    feats = _fake_features(payload, dim)
-                out["media_id"].append(int(mid))
-                out["mime"].append(mime)
-                out["n_bytes"].append(len(payload))
-                out["features"].append(feats.astype(np.float32))
-            yield pd.DataFrame(out)
+    def media_features(mid, payload):
+        payload = bytes(payload) if payload is not None else b""
+        mime = sniff_mime(payload)
+        if use_backend:
+            try:
+                feats = real_features(decode_backend(payload, mime), mime, dim)
+            except Exception:
+                # corrupt/truncated/stub-format payload: zero
+                # vector, never a task failure
+                feats = np.zeros(dim, dtype=np.float32)
+        else:
+            feats = _fake_features(payload, dim)
+        yield int(mid), mime, len(payload), feats.astype(np.float32)
 
-    pruned = media.select("media_id", "payload")  # explicit column pruning
-    return pruned.mapInPandas(fn, FEATURES_SCHEMA)
+    return map_rows(media, ["media_id", "payload"], FEATURES_SCHEMA, media_features)
 
 
 def sample_video_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
@@ -714,37 +708,26 @@ def video_metadata(media: DataFrame, id_col: str = "media_id",
     (id, payload) projection."""
     from ..functions.mp4 import parse_mp4
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in VIDEO_META_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                if sniff_mime(payload) != "video/mp4":
-                    continue
-                try:
-                    meta = parse_mp4(payload)
-                except (ValueError, struct.error):
-                    continue
-                for t in meta["tracks"]:
-                    rows.append(
-                        (
-                            int(mid),
-                            meta["brand"],
-                            meta["duration_ms"],
-                            t["track_id"],
-                            t["kind"],
-                            t["codec"],
-                            t["width"],
-                            t["height"],
-                            t["n_samples"],
-                            t["duration_ms"],
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def media_tracks(mid, payload):
+        payload = bytes(payload) if payload is not None else b""
+        if sniff_mime(payload) != "video/mp4":
+            return
+        meta = parse_mp4(payload)
+        for t in meta["tracks"]:
+            yield (
+                int(mid),
+                meta["brand"],
+                meta["duration_ms"],
+                t["track_id"],
+                t["kind"],
+                t["codec"],
+                t["width"],
+                t["height"],
+                t["n_samples"],
+                t["duration_ms"],
+            )
 
-    pruned = media.select(id_col, payload_col)
-    return pruned.mapInPandas(fn, VIDEO_META_SCHEMA)
+    return map_rows(media, [id_col, payload_col], VIDEO_META_SCHEMA, media_tracks)
 
 
 # Motion-JPEG sample-entry fourccs (QuickTime photo-JPEG + the common
@@ -818,30 +801,21 @@ def video_frame_features(
     Motion-JPEG tracks (container sample table -> JFIF slice -> own
     JPEG codec -> 8x8 luma-thumbnail features, all stdlib+numpy).
     Video rows in codecs needing an external library, and corrupt
-    payloads, contribute zero rows — a queryable absence, never a task
-    failure (anti-join against this output to find them). Arrow-batched
-    mapInPandas over the column-pruned (id, payload) projection of
+    payloads, contribute zero rows (a frame that fails to decode ends
+    its video's rows) — a queryable absence, never a task failure
+    (anti-join against this output to find them). ``map_rows`` over
+    the column-pruned (id, payload) projection of
     kind='video' rows only; ``max_frames`` bounds the per-row fan-out
     so one pathological 10-hour video cannot skew a task."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in FRAME_FEATURES_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(payload) if payload is not None else b""
-                try:
-                    for idx, ts, px in decode_video_frames(payload, every_ms, max_frames):
-                        feats = real_features(px, "image/jpeg", dim)
-                        rows.append(
-                            (int(mid), idx, ts, int(px.shape[0]), int(px.shape[1]), feats)
-                        )
-                except Exception:
-                    continue  # non-MJPEG codec / corrupt container
-            yield pd.DataFrame(rows, columns=cols)
+    def video_frames(mid, payload):
+        payload = bytes(payload) if payload is not None else b""
+        for idx, ts, px in decode_video_frames(payload, every_ms, max_frames):
+            feats = real_features(px, "image/jpeg", dim)
+            yield int(mid), idx, ts, int(px.shape[0]), int(px.shape[1]), feats
 
-    vids = media.filter(F.col("kind") == "video").select("media_id", "payload")
-    return vids.mapInPandas(fn, FRAME_FEATURES_SCHEMA)
+    vids = media.filter(F.col("kind") == "video")
+    return map_rows(vids, ["media_id", "payload"], FRAME_FEATURES_SCHEMA, video_frames)
 
 
 def synthetic_mjpeg_media(
@@ -932,26 +906,15 @@ def _media_hashes(
     corrupt file must cost its own hash, not the task. Column-pruned
     mapInPandas, zero shuffle."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, mimes, hashes = [], [], []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                data = bytes(payload)
-                mime = sniff_mime(data)
-                if not mime.startswith(mime_prefix):
-                    continue
-                try:
-                    h = hash_fn(decode_backend(data, mime))
-                except Exception:
-                    continue
-                ids.append(int(mid))
-                mimes.append(mime)
-                hashes.append(h)
-            yield pd.DataFrame({"media_id": ids, "mime": mimes, "dhash": hashes})
+    def media_hash(mid, payload):
+        if payload is None:
+            return
+        data = bytes(payload)
+        mime = sniff_mime(data)
+        if mime.startswith(mime_prefix):
+            yield int(mid), mime, hash_fn(decode_backend(data, mime))
 
-    return media.select(id_col, payload_col).mapInPandas(fn, IMAGE_HASH_SCHEMA)
+    return map_rows(media, [id_col, payload_col], IMAGE_HASH_SCHEMA, media_hash)
 
 
 def image_hashes(

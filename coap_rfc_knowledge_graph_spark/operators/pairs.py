@@ -13,22 +13,19 @@ equi-join + filter that reshuffles the corpus and re-tokenizes per
 pair). At 10^12 documents the blowup is bounded per row (mentions per
 sentence <= tens), never per partition, and the stage stays narrow —
 pipelined straight from the mention stage.
-
-``generate_pairs_selfjoin`` keeps the join formulation for reference/
-comparison (used in plan tests to show the explain difference).
 """
 
 from __future__ import annotations
 
 import re
+from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from ..functions import tokenizer
+from ..functions.rows import map_rows
 
 PAIRS_SCHEMA = T.StructType(
     [
@@ -141,6 +138,23 @@ def make_sentence_marker(toks: list[str]):
     return mark
 
 
+def _sentence_pairs(sentence: str, mentions) -> Iterator[tuple[str, str, str]]:
+    """One sentence's pair fan-out -> (e1, e2, marked_sentence) for every
+    C(n,2) combination of its mention spans, in (begin, end) order. The
+    sentence is tokenized once and each pair costs O(1) slices; fewer
+    than two mentions yield nothing."""
+    if mentions is None or len(mentions) < 2:
+        return
+    mark = make_sentence_marker(tokenizer.tokenize(sentence, pad=False))
+    spans = sorted(
+        ((int(m["begin"]), int(m["end"]), m["surface"]) for m in mentions),
+        key=lambda x: (x[0], x[1]),
+    )
+    for i, (b1, e1, s1) in enumerate(spans):
+        for b2, e2, s2 in spans[i + 1 :]:
+            yield s1, s2, mark(b1, e1, b2, e2)
+
+
 def generate_pairs_from_arrays(mentions_arr: DataFrame) -> DataFrame:
     """mentions in array form (url, sent_id, sentence, mentions) ->
     pairs(url, sent_id, e1, e2, marked_sentence). Narrow, shuffle-free.
@@ -154,45 +168,16 @@ def generate_pairs_from_arrays(mentions_arr: DataFrame) -> DataFrame:
     filter on a UDF-produced column makes Catalyst evaluate the mention
     UDF TWICE (once for the predicate, once for the projection — two
     ArrowEvalPython nodes); the <2-mention rows are skipped inside the
-    loop instead (tests/test_plans.py pins the single-evaluation shape)."""
-    pruned = mentions_arr.select("url", "sent_id", "sentence", "mentions")
+    row function instead (tests/test_plans.py pins the single-evaluation
+    shape)."""
 
-    def fn(batches):
-        for pdf in batches:
-            urls: list[str] = []
-            sids: list[int] = []
-            e1s: list[str] = []
-            e2s: list[str] = []
-            marked: list[str] = []
-            for url, sid, sent, ms in zip(pdf["url"], pdf["sent_id"], pdf["sentence"], pdf["mentions"]):
-                if ms is None or len(ms) < 2:
-                    continue
-                toks = tokenizer.tokenize(sent, pad=False)
-                mark = make_sentence_marker(toks)  # O(len) once, O(1)/pair
-                spans = sorted(
-                    ((int(m["begin"]), int(m["end"]), m["surface"]) for m in ms),
-                    key=lambda x: (x[0], x[1]),
-                )
-                for i in range(len(spans)):
-                    b1, e1, s1 = spans[i]
-                    for j in range(i + 1, len(spans)):
-                        b2, e2, s2 = spans[j]
-                        urls.append(url)
-                        sids.append(sid)
-                        e1s.append(s1)
-                        e2s.append(s2)
-                        marked.append(mark(b1, e1, b2, e2))
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "sent_id": pd.array(sids, dtype="int32"),
-                    "e1": e1s,
-                    "e2": e2s,
-                    "marked_sentence": marked,
-                }
-            )
+    def sentence_pairs(url, sent_id, sentence, mentions):
+        for e1, e2, marked in _sentence_pairs(sentence, mentions):
+            yield url, sent_id, e1, e2, marked
 
-    return pruned.mapInPandas(fn, PAIRS_SCHEMA)
+    return map_rows(
+        mentions_arr, ["url", "sent_id", "sentence", "mentions"], PAIRS_SCHEMA, sentence_pairs
+    )
 
 
 def generate_pairs(mentions: DataFrame, sentences: DataFrame) -> DataFrame:
@@ -208,35 +193,3 @@ def generate_pairs(mentions: DataFrame, sentences: DataFrame) -> DataFrame:
         .join(sentences.select("url", "sent_id", "sentence"), on=["url", "sent_id"])
     )
     return generate_pairs_from_arrays(arr)
-
-
-def generate_pairs_selfjoin(mentions: DataFrame, sentences: DataFrame) -> DataFrame:
-    """The theta-self-join formulation (kept for plan comparison; the
-    array-local path above produces identical rows without the shuffle)."""
-
-    @pandas_udf(T.StringType())
-    def _mark_udf(sentence: pd.Series, b1: pd.Series, e1: pd.Series, b2: pd.Series, e2: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                _mark_tokens(tokenizer.tokenize(s, pad=False), int(a), int(b), int(c), int(d))
-                for s, a, b, c, d in zip(sentence, b1, e1, b2, e2)
-            ]
-        )
-
-    a = mentions.select(
-        "url", "sent_id",
-        F.col("begin").alias("b1"), F.col("end").alias("e1"), F.col("surface").alias("e1_surface"),
-    )
-    b = mentions.select(
-        "url", "sent_id",
-        F.col("begin").alias("b2"), F.col("end").alias("e2"), F.col("surface").alias("e2_surface"),
-    )
-    pairs = a.join(b, on=["url", "sent_id"]).filter(F.col("b1") < F.col("b2"))
-    pairs = pairs.join(sentences.select("url", "sent_id", "sentence"), on=["url", "sent_id"])
-    return pairs.select(
-        "url",
-        "sent_id",
-        F.col("e1_surface").alias("e1"),
-        F.col("e2_surface").alias("e2"),
-        _mark_udf("sentence", "b1", "e1", "b2", "e2").alias("marked_sentence"),
-    )

@@ -23,6 +23,8 @@ from pyspark.sql.functions import pandas_udf
 
 from ..config import RELATION_NAMES
 from ..functions import stub_models
+from ..functions.rows import map_rows
+from .pairs import _sentence_pairs
 
 _NAMES = [RELATION_NAMES[i] for i in range(len(RELATION_NAMES))]
 
@@ -125,47 +127,13 @@ def extract_triples_from_arrays(mentions_arr: DataFrame) -> DataFrame:
     tests — but the ~C(n,2)-sized marked-sentence column never crosses
     the JVM<->Python boundary, which at 10^12 documents is the largest
     intermediate of the whole pipeline."""
-    from .pairs import make_sentence_marker  # late import avoids module cycle
-    from ..functions import tokenizer
 
-    names = _NAMES
+    def sentence_triples(url, sent_id, sentence, mentions):
+        for e1, e2, marked in _sentence_pairs(sentence, mentions):
+            pred = stub_models.classify_relation(marked)
+            if pred != 0:
+                yield e1, _NAMES[pred], e2, url, sent_id
 
-    def fn(batches):
-        for pdf in batches:
-            subjs: list[str] = []
-            preds: list[str] = []
-            objs: list[str] = []
-            urls: list[str] = []
-            sids: list[int] = []
-            for url, sid, sent, ms in zip(pdf["url"], pdf["sent_id"], pdf["sentence"], pdf["mentions"]):
-                if ms is None or len(ms) < 2:
-                    continue
-                toks = tokenizer.tokenize(sent, pad=False)
-                mark = make_sentence_marker(toks)  # O(len) once, O(1)/pair
-                spans = sorted(
-                    ((int(m["begin"]), int(m["end"]), m["surface"]) for m in ms),
-                    key=lambda x: (x[0], x[1]),
-                )
-                for i in range(len(spans)):
-                    b1, e1, s1 = spans[i]
-                    for j in range(i + 1, len(spans)):
-                        b2, e2, s2 = spans[j]
-                        pred = stub_models.classify_relation(mark(b1, e1, b2, e2))
-                        if pred != 0:
-                            subjs.append(s1)
-                            preds.append(names[pred])
-                            objs.append(s2)
-                            urls.append(url)
-                            sids.append(sid)
-            yield pd.DataFrame(
-                {
-                    "subj": subjs,
-                    "pred": preds,
-                    "obj": objs,
-                    "url": urls,
-                    "sent_id": pd.array(sids, dtype="int32"),
-                }
-            )
-
-    pruned = mentions_arr.select("url", "sent_id", "sentence", "mentions")
-    return pruned.mapInPandas(fn, TRIPLES_SCHEMA)
+    return map_rows(
+        mentions_arr, ["url", "sent_id", "sentence", "mentions"], TRIPLES_SCHEMA, sentence_triples
+    )

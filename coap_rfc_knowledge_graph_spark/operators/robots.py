@@ -22,12 +22,11 @@ rows — stdlib string handling, one pass per file.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..functions.rows import map_rows
 
 RULES_SCHEMA = T.StructType(
     [
@@ -36,6 +35,23 @@ RULES_SCHEMA = T.StructType(
         T.StructField("path_prefix", T.StringType()),
     ]
 )
+CRAWL_DELAYS_SCHEMA = T.StructType(
+    [T.StructField("host", T.StringType()), T.StructField("delay_millis", T.LongType())]
+)
+SITEMAP_URLS_SCHEMA = T.StructType(
+    [T.StructField("host", T.StringType()), T.StructField("sitemap_url", T.StringType())]
+)
+
+
+def _robots_text(payload: bytes | str | None) -> str:
+    """A robots payload as text: binary decodes UTF-8 with replacement
+    (crawled robots files are not reliably clean); a NULL payload is an
+    empty file, which declares nothing."""
+    if payload is None:
+        return ""
+    if isinstance(payload, (bytes, bytearray)):
+        return bytes(payload).decode("utf-8", errors="replace")
+    return str(payload)
 
 
 def _iter_group_directives(text: str, agent: str = "*"):
@@ -127,26 +143,12 @@ def parse_crawl_delays(
     mapInPandas, zero shuffle — feeds
     :func:`operators.frontier.schedule_fetches`."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hosts, delays = [], []
-            for host, payload in zip(pdf[host_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                text = (
-                    bytes(payload).decode("utf-8", errors="replace")
-                    if isinstance(payload, (bytes, bytearray))
-                    else str(payload)
-                )
-                d = parse_crawl_delay_text(text, agent)
-                if d is not None:
-                    hosts.append(host)
-                    delays.append(d)
-            yield pd.DataFrame({"host": hosts, "delay_millis": delays})
+    def host_delay(host, payload):
+        delay = parse_crawl_delay_text(_robots_text(payload), agent)
+        if delay is not None:
+            yield host, delay
 
-    return robots.select(host_col, payload_col).mapInPandas(
-        fn, "host string, delay_millis bigint"
-    )
+    return map_rows(robots, [host_col, payload_col], CRAWL_DELAYS_SCHEMA, host_delay)
 
 
 def parse_sitemap_urls(
@@ -161,30 +163,15 @@ def parse_sitemap_urls(
     Arrow-batched mapInPandas, zero shuffle; duplicate directives in
     one file are kept once (first occurrence)."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hosts, urls = [], []
-            for host, payload in zip(pdf[host_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                text = (
-                    bytes(payload).decode("utf-8", errors="replace")
-                    if isinstance(payload, (bytes, bytearray))
-                    else str(payload)
-                )
-                seen: set[str] = set()
-                # group-independent: ignore the active flag entirely
-                for field, value, _ in _iter_group_directives(text):
-                    if field != "sitemap" or not value or value in seen:
-                        continue
-                    seen.add(value)
-                    hosts.append(host)
-                    urls.append(value)
-            yield pd.DataFrame({"host": hosts, "sitemap_url": urls})
+    def host_sitemaps(host, payload):
+        seen: set[str] = set()
+        # group-independent: ignore the active flag entirely
+        for field, value, _ in _iter_group_directives(_robots_text(payload)):
+            if field == "sitemap" and value and value not in seen:
+                seen.add(value)
+                yield host, value
 
-    return robots.select(host_col, payload_col).mapInPandas(
-        fn, "host string, sitemap_url string"
-    )
+    return map_rows(robots, [host_col, payload_col], SITEMAP_URLS_SCHEMA, host_sitemaps)
 
 
 def parse_robots(robots: DataFrame, agent: str = "*", host_col: str = "host",
@@ -194,24 +181,11 @@ def parse_robots(robots: DataFrame, agent: str = "*", host_col: str = "host",
     string (binary decodes UTF-8 with replacement — crawled robots
     files are not reliably clean)."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hosts, allows, prefixes = [], [], []
-            for host, payload in zip(pdf[host_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                text = (
-                    bytes(payload).decode("utf-8", errors="replace")
-                    if isinstance(payload, (bytes, bytearray))
-                    else str(payload)
-                )
-                for allow, prefix in parse_robots_text(text, agent):
-                    hosts.append(host)
-                    allows.append(allow)
-                    prefixes.append(prefix)
-            yield pd.DataFrame({"host": hosts, "allow": allows, "path_prefix": prefixes})
+    def host_rules(host, payload):
+        for allow, prefix in parse_robots_text(_robots_text(payload), agent):
+            yield host, allow, prefix
 
-    return robots.select(host_col, payload_col).mapInPandas(fn, RULES_SCHEMA)
+    return map_rows(robots, [host_col, payload_col], RULES_SCHEMA, host_rules)
 
 
 def robots_filter(

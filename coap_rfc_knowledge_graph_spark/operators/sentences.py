@@ -15,13 +15,10 @@ only (url, html, text, lang) reach the Python worker.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.rows import map_rows
 from ..functions.text_extract import extract_document
 
 SENTENCES_SCHEMA = T.StructType(
@@ -38,19 +35,12 @@ def extract_sentences(pages: DataFrame, url_partitions: int | None = None) -> Da
     position within the document (the alignment key replacing the
     reference's parallel-list indexing)."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls: list[str] = []
-            ids: list[int] = []
-            sents: list[str] = []
-            for url, html, text, lang in zip(pdf["url"], pdf["html"], pdf["text"], pdf["lang"]):
-                doc_sents = extract_document(url, html, text, lang)
-                urls.extend([url] * len(doc_sents))
-                ids.extend(range(len(doc_sents)))
-                sents.extend(doc_sents)
-            yield pd.DataFrame({"url": urls, "sent_id": pd.array(ids, dtype="int32"), "sentence": sents})
+    def doc_sentences(url, html, text, lang):
+        for sent_id, sentence in enumerate(extract_document(url, html, text, lang)):
+            yield url, sent_id, sentence
 
-    pruned = pages.select("url", "html", "text", "lang")
+    cols = ["url", "html", "text", "lang"]
+    pruned = pages.select(*cols)
     if url_partitions:
         pruned = pruned.repartition(url_partitions, "url")
-    return pruned.mapInPandas(fn, SENTENCES_SCHEMA)
+    return map_rows(pruned, cols, SENTENCES_SCHEMA, doc_sentences)

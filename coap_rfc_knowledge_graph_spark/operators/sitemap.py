@@ -34,12 +34,13 @@ from __future__ import annotations
 import gzip
 import re
 import xml.etree.ElementTree as ET
-from collections.abc import Iterator
+import zlib
 from html import unescape
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from ..functions.rows import map_rows
 
 SITEMAP_SCHEMA = T.StructType(
     [
@@ -160,8 +161,8 @@ def parse_sitemap_text(payload: bytes | str) -> list[_Entry]:
         if data[:2] == b"\x1f\x8b":
             try:
                 data = gzip.decompress(data)
-            except OSError:
-                return []
+            except (OSError, EOFError, zlib.error):
+                return []  # truncated or corrupt gzip
         text = data.decode("utf-8", errors="replace")
     else:
         text = payload
@@ -182,17 +183,10 @@ def parse_sitemaps(
     binary (possibly gzipped) or string. Rows with kind='sitemap' are
     index pointers — re-fetch and feed back through this op."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for host, payload in zip(pdf[host_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                for kind, loc, lastmod, changefreq, prio in parse_sitemap_text(payload):
-                    rows.append((host, kind, loc, lastmod, changefreq, prio))
-            yield pd.DataFrame(
-                rows,
-                columns=["host", "kind", "loc", "lastmod", "changefreq", "priority_millis"],
-            )
+    def host_entries(host, payload):
+        if payload is None:
+            return
+        for entry in parse_sitemap_text(payload):
+            yield (host, *entry)
 
-    return sitemaps.select(host_col, payload_col).mapInPandas(fn, SITEMAP_SCHEMA)
+    return map_rows(sitemaps, [host_col, payload_col], SITEMAP_SCHEMA, host_entries)

@@ -42,6 +42,7 @@ from datetime import datetime, timezone
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.rows import map_rows
 from .pages import PAGES_SCHEMA
 
 _CRLF2 = b"\r\n\r\n"
@@ -124,6 +125,8 @@ def parse_warc(
             length = int(fields.get("content-length", ""))
         except ValueError:
             break
+        if length < 0:
+            break  # malformed record; pos would move backwards
         body_start = hdr_end + 4
         body = data[body_start : body_start + length]
         if len(body) < length:
@@ -162,29 +165,14 @@ def pages_from_warc_files(files: DataFrame) -> DataFrame:
     by the batch reader and the streaming source — the parse is
     identical; only the file source differs."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, tss, htmls = [], [], []
-            for content in pdf["content"]:
-                for url, ts, payload in parse_warc(bytes(content)):
-                    urls.append(url)
-                    tss.append(ts)
-                    htmls.append(payload)
-            # tz-AWARE UTC series: Arrow maps it to the correct instant
-            # on any session timezone; a naive series would be
-            # reinterpreted in spark.sql.session.timeZone, shifting
-            # every warc_ts on a non-UTC cluster
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "warc_ts": pd.Series(tss, dtype="datetime64[us, UTC]"),
-                    "html": htmls,
-                    "text": pd.Series([None] * len(urls), dtype="object"),
-                    "lang": pd.Series([None] * len(urls), dtype="object"),
-                }
-            )
+    def file_pages(content):
+        # warc_ts is tz-AWARE UTC: Arrow maps it to the correct instant
+        # on any session timezone, where a naive value would be
+        # reinterpreted in spark.sql.session.timeZone
+        for url, ts, payload in parse_warc(bytes(content)):
+            yield url, ts, payload, None, None
 
-    return files.select("content").mapInPandas(fn, PAGES_SCHEMA)
+    return map_rows(files, ["content"], PAGES_SCHEMA, file_pages)
 
 
 def read_warc(spark: SparkSession, path: str, glob: str = "*.warc*") -> DataFrame:

@@ -57,17 +57,14 @@ def stream_triples(
     stop it. ``available_now=True`` drains everything currently present
     then stops (the batch-backfill trigger)."""
     from ..operators.mentions import extract_mentions
-    from ..operators.pairs import generate_pairs_from_arrays
-    from ..operators.relations import extract_triples
+    from ..operators.relations import extract_triples_from_arrays
     from ..operators.sentences import extract_sentences
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        triples = extract_triples(
-            generate_pairs_from_arrays(
-                extract_mentions(
-                    extract_sentences(batch_df, url_partitions=url_partitions),
-                    explode=False,
-                )
+        triples = extract_triples_from_arrays(
+            extract_mentions(
+                extract_sentences(batch_df, url_partitions=url_partitions),
+                explode=False,
             )
         )
         # idempotent: a retry of this micro-batch overwrites the same

@@ -6,6 +6,7 @@ pipeline's ordered sentence list equals the in-process oracle's, byte for
 byte."""
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from coap_rfc_knowledge_graph_spark.config import MODAL_KEYWORDS
@@ -27,6 +28,7 @@ def _oracle_sentences(pages_rows):
     return out
 
 
+@pytest.mark.reference_data
 def test_sentences_byte_identical_rfc(spark):
     pages = rfc_pages(spark)
     got = (
@@ -123,6 +125,7 @@ def test_pairs_cn2_and_markers(spark):
         assert r["e1"] in inner or inner in r["e1"]
 
 
+@pytest.mark.reference_data
 def test_triples_schema_and_no_relation_dropped(spark):
     pages = rfc_pages(spark).limit(1)
     sents = extract_sentences(pages, url_partitions=2)
@@ -140,6 +143,7 @@ def test_triples_schema_and_no_relation_dropped(spark):
     assert triples.filter(F.col("pred") == "NO RELATION").count() == 0
 
 
+@pytest.mark.reference_data
 def test_triples_parity_with_recorded_golden(spark, tmp_path):
     """P/R gate scaffold: pipeline triples vs an independently-computed
     in-process golden on the same corpus must match at P/R >= 0.95 (they

@@ -23,7 +23,8 @@ from coap_rfc_knowledge_graph_spark.functions.text_extract import (
     extract_mqtt_sentences,
 )
 
-DATA = "/root/reference/data"
+from coap_rfc_knowledge_graph_spark.sources.pages import _REFERENCE_DATA as DATA
+
 MQTT_PDF = os.path.join(DATA, "mqtt_specification.pdf")
 
 
@@ -95,7 +96,7 @@ def test_truncated_pdf_raises():
         PDFDocument(b"%PDF-1.4 garbage").pages()
 
 
-@pytest.mark.skipif(not os.path.exists(MQTT_PDF), reason="reference corpus absent")
+@pytest.mark.reference_data
 def test_mqtt_pdf_page_count_and_sample():
     doc = PDFDocument(open(MQTT_PDF, "rb").read())
     pages = doc.pages()
@@ -104,7 +105,7 @@ def test_mqtt_pdf_page_count_and_sample():
     assert any("Intellectual property rights policy" in ln for ln in lines)
 
 
-@pytest.mark.skipif(not os.path.exists(MQTT_PDF), reason="reference corpus absent")
+@pytest.mark.reference_data
 def test_mqtt_pdf_matches_reference_corpus():
     """North-rule parity: the full S2+P6+P7 path reproduces the reference's
     frozen pdfplumber+nltk output EXACTLY (ordered, sentence-for-sentence),
@@ -120,7 +121,7 @@ def test_mqtt_pdf_matches_reference_corpus():
     assert mine == ref
 
 
-@pytest.mark.skipif(not os.path.exists(MQTT_PDF), reason="reference corpus absent")
+@pytest.mark.reference_data
 def test_dispatcher_routes_pdf_binary():
     data = open(MQTT_PDF, "rb").read()
     via_doc = extract_document("https://docs.oasis-open.org/mqtt/v5.0/mqtt_spec.pdf", data, None, "en")

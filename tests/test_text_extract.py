@@ -15,8 +15,7 @@ from coap_rfc_knowledge_graph_spark.functions.text_extract import (
     sent_tokenize,
     strip_html,
 )
-
-DATA = "/root/reference/data"
+from coap_rfc_knowledge_graph_spark.sources.pages import _REFERENCE_DATA as DATA
 
 
 def test_sent_tokenize_basic():
@@ -72,6 +71,7 @@ def test_sent_tokenize_initials():
     assert out == ["Written by B. Frank.", "The spec is final."]
 
 
+@pytest.mark.reference_data
 @pytest.mark.parametrize("name", ["rfc7252", "rfc7959", "rfc8613", "rfc8974"])
 def test_rfc_extraction_shape(name):
     author, heading = RFC_HEADINGS[name]
@@ -92,6 +92,7 @@ def test_rfc_extraction_shape(name):
         assert not ("Table" in s and ":" in s)
 
 
+@pytest.mark.reference_data
 def test_rfc_extraction_deterministic():
     raw = open(os.path.join(DATA, "rfc7252.txt"), encoding="utf-8").read()
     a = extract_rfc_sentences(raw, "Shelby, et al.", "RFC 7252")
@@ -99,6 +100,7 @@ def test_rfc_extraction_deterministic():
     assert a == b
 
 
+@pytest.mark.reference_data
 @pytest.mark.parametrize("i,name", list(enumerate(["rfc7252", "rfc7959", "rfc8613", "rfc8974"])))
 def test_rfc_extraction_byte_identical_to_reference_corpus(i, name):
     """The full byte-identical contract (north rule): our extraction vs
@@ -139,6 +141,7 @@ def test_strip_html_and_web_path():
     assert sents == ["The server MUST reply.", "Done now."]
 
 
+@pytest.mark.reference_data
 def test_extract_document_routing():
     raw = open(os.path.join(DATA, "rfc7252.txt"), encoding="utf-8").read()
     via_doc = extract_document("https://spec.example/rfc7252", None, raw, "en")

@@ -90,7 +90,17 @@ def test_native_family_matches_duckdb(spark, name, min_rows):
     assert a.equals(b)
 
 
-@pytest.mark.parametrize("name", sorted(FLAGSHIP_HASHES))
+# kg_coref and kg_variables read the RFC pages from the reference corpus
+_READS_REFERENCE = {"kg_coref", "kg_variables"}
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        pytest.param(n, marks=pytest.mark.reference_data) if n in _READS_REFERENCE else n
+        for n in sorted(FLAGSHIP_HASHES)
+    ],
+)
 def test_flagship_content_hash_pinned(spark, name):
     import __spark_entry__ as entry
 

@@ -6,8 +6,11 @@ from __future__ import annotations
 
 import gzip
 import os
+import signal
 import sys
 from datetime import datetime, timezone
+
+from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -71,6 +74,30 @@ def test_truncated_tail_keeps_earlier_records(tmp_path):
     assert [u for u, _, _ in parse_warc(data[: len(data) // 2] + b"NOT A HEADER")] != []
 
 
+def test_negative_content_length_ends_parse(tmp_path):
+    """A Content-Length of minus the header's own length would move the
+    cursor back onto the same header, re-appending its record forever;
+    it is a malformed record and ends the file's parse."""
+    p = str(tmp_path / "v.warc")
+    write_warc(p, [_records()[0]], compress=False)
+    with open(p, "rb") as fh:
+        valid = fh.read()
+    bad = b"WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: http://c/\r\nContent-Length: -82\r\n\r\n"
+    assert len(bad) == 82
+
+    def timeout(signum, frame):
+        raise TimeoutError("parse_warc did not return")
+
+    old = signal.signal(signal.SIGALRM, timeout)
+    signal.alarm(10)
+    try:
+        got = parse_warc(valid + bad)
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, old)
+    assert [u for u, _, _ in got] == ["https://a.example/one"]
+
+
 def test_corrupt_gzip_member_salvages_prior_records(tmp_path):
     """A bit-flipped/garbage member mid-archive must cost the file's
     REMAINING records, never raise into the Spark task (the module's
@@ -119,6 +146,35 @@ def test_read_warc_spark_to_pages_and_extractor(spark, tmp_path):
     texts = {r["url"]: r["text"] for r in main_content(pages).collect()}
     assert "specialized web transfer protocol" in texts["https://a.example/one"]
     assert "request response semantics" in texts["https://b.example/two"]
+
+
+def test_read_warc_instants_under_non_utc_session(spark, tmp_path):
+    """warc_ts keeps the record's UTC instant whatever the session time
+    zone; a record without a WARC-Date reads as NULL next to dated ones."""
+    d = tmp_path / "tz"
+    d.mkdir()
+    far = datetime(9999, 12, 31, 23, 59, 59)
+    write_warc(str(d / "a.warc"), [_records()[0], ("https://c.example/far", far, HTML1)],
+               compress=False)
+    undated = (
+        b"WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: https://d.example/undated\r\n"
+        b"Content-Length: 11\r\n\r\n<p>body</p>\r\n\r\n"
+    )
+    with open(d / "a.warc", "ab") as fh:
+        fh.write(undated)
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")  # UTC+9, no DST
+        got = dict(
+            read_warc(spark, str(d)).select("url", F.col("warc_ts").cast("long")).collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+    assert got == {
+        "https://a.example/one": int(TS.replace(tzinfo=timezone.utc).timestamp()),
+        "https://c.example/far": int(far.replace(tzinfo=timezone.utc).timestamp()),
+        "https://d.example/undated": None,
+    }
 
 
 def test_stream_warc_pages_matches_batch(spark, tmp_path):

@@ -1098,31 +1098,39 @@ def q_kg_contradictions(spark, sf_dir):
     return check_entity_contradiction(res.rules)
 
 
-def q_kg_coref(spark, sf_dir):
-    """P9+M8: pronoun fan-out + windowed-context QA resolution, run over
-    the RFC correctness corpus (the synthetic documents are lowercase
-    word salad — the QA stub's capitalized-antecedent heuristic has
-    nothing to resolve there). QA model UDF -> rows-only check."""
-    from coap_rfc_knowledge_graph_spark.operators.coref import resolve_coreferences
+def _kg_model_sentences(spark):
+    """Sentences of 32 seeded synthetic pages: the fixed in-repo input
+    of the coref and variable-extractor model stages. Unlike the
+    lowercase ``documents`` word salad, these pages carry capitalized
+    sentence heads, the "Server" head entity, uppercase MUST rules and
+    "When the value is set to N" conditionals, so both stubs have
+    something to resolve."""
     from coap_rfc_knowledge_graph_spark.operators.sentences import extract_sentences
-    from coap_rfc_knowledge_graph_spark.sources.pages import rfc_pages
+    from coap_rfc_knowledge_graph_spark.sources.pages import synthetic_pages
 
-    sents = extract_sentences(rfc_pages(spark), url_partitions=4)
-    return resolve_coreferences(sents, pronouns=["it", "they"])
+    return extract_sentences(synthetic_pages(spark, 32, seed=3), url_partitions=4)
+
+
+def q_kg_coref(spark, sf_dir):
+    """P9+M8: pronoun fan-out (the reference's pronoun list) +
+    windowed-context QA resolution over the seeded synthetic pages.
+    QA model UDF -> rows-only check; content pinned by table hash in
+    tests/test_triples_native.py."""
+    from coap_rfc_knowledge_graph_spark.operators.coref import resolve_coreferences
+
+    return resolve_coreferences(_kg_model_sentences(spark))
 
 
 def q_kg_variables(spark, sf_dir):
     """M13: sentence-only GPT-2 variable extractor (stub head) over the
-    RFC corpus's rule sentences — the single-shot alternative to the
-    M9+M10 two-stage path (ref variable_extractor_generate_GPT-2.py:
-    56-91). Generative model UDF -> rows-only check."""
+    seeded synthetic pages' rule sentences — the single-shot alternative
+    to the M9+M10 two-stage path (ref variable_extractor_generate_GPT-2.py:
+    56-91). Generative model UDF -> rows-only check; content pinned by
+    table hash in tests/test_triples_native.py."""
     from coap_rfc_knowledge_graph_spark.operators.rule_filter import rule_sentences
-    from coap_rfc_knowledge_graph_spark.operators.sentences import extract_sentences
     from coap_rfc_knowledge_graph_spark.operators.variables import extract_variables
-    from coap_rfc_knowledge_graph_spark.sources.pages import rfc_pages
 
-    sents = extract_sentences(rfc_pages(spark), url_partitions=4)
-    return extract_variables(rule_sentences(sents)).select(
+    return extract_variables(rule_sentences(_kg_model_sentences(spark))).select(
         "url", "sent_id", "sentence", "behaviours"
     )
 

@@ -7,20 +7,16 @@ Env:
   SPARK_GRAFT_SF_DIR     input dir (default /root/testdata/sf0.1)
   SPARK_GRAFT_CPUS       local[] parallelism (default 32)
   SPARK_GRAFT_DOCS_MULT  flagship corpus replication factor (default 1).
-                         The scaling harness sets this >1 so per-level
-                         compute dominates fixed job overhead (at sf0.1
-                         the optimized flagship is ~7s, mostly overhead —
-                         meaningless for efficiency ratios).
+                         Set it >1 so compute dominates fixed job
+                         overhead (at sf0.1 the flagship is mostly
+                         overhead).
 
 The flagship metric is the end-to-end KG extraction (pages -> sentences
 -> mentions -> pairs -> triples) over the documents-as-pages corpus;
 docs_per_sec is the north-rule throughput number. Additional timed
 queries cover canonicalization, dedup families, ANN and the native text
-stage. Scaling evidence across two parallelism levels is produced by
-tools/bench_scaling.py (same job at N vs 4N cores; the faithful pairs
-on this 32-core host are local[2]/local[8] and local[4]/local[16] —
-local[32] shares its 32 physical cores between task threads AND Python
-workers, so the 8v32 pair under-measures).
+stage. ``perfbench/run.py`` is the repository benchmark: per-workload
+end-to-end and per-layer metrics over repeated, output-checked runs.
 """
 
 from __future__ import annotations

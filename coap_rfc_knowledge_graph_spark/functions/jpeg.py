@@ -37,7 +37,9 @@ compression ratio does not.
 
 The DCT basis is the orthonormal 8x8 DCT-II matrix, which is exactly
 T.81's FDCT/IDCT definition; float64 throughout, rounded once at the
-end, so results are deterministic across partitionings and hosts.
+end. The encoder snaps each quantized coefficient to 9 decimals before
+rounding, so an exact tie rounds the same way whatever summation order
+the host's BLAS uses.
 """
 
 from __future__ import annotations
@@ -575,7 +577,12 @@ def _block_coefs(block: np.ndarray, q: np.ndarray) -> np.ndarray:
     AC magnitude categories stop at size 10: clamp the rare |coef| >
     1023 (possible only at quality ~100 with q=1 and a pathological
     block) — an encoder-side choice any decoder accepts."""
-    coef = np.round(_fdct2(block.astype(np.float64) - 128.0) / q).astype(np.int64)
+    x = np.round(_fdct2(block.astype(np.float64) - 128.0) / q, 9)
+    # half away from zero, as IJG quantizes. The (0|4, 0|4) terms are
+    # exact multiples of 1/(8q), so a true half-integer is common; the
+    # matmul lands it a ulp either side depending on the host's BLAS
+    # kernel, and the 9-digit snap above puts it back on the tie
+    coef = (np.sign(x) * np.floor(np.abs(x) + 0.5)).astype(np.int64)
     zz = coef.reshape(-1)[_ZZ]
     zz[1:] = np.clip(zz[1:], -1023, 1023)
     return zz

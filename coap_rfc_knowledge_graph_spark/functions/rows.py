@@ -1,11 +1,16 @@
-"""``map_rows``: the one Arrow-batch scaffold for stateless per-row
-``mapInPandas`` operators, each of which supplies only a row function."""
+"""The two Arrow-batch scaffolds: ``map_rows`` for stateless per-row
+``mapInPandas`` operators, each of which supplies only a row function,
+and ``model_udf`` for model stages, each of which supplies only a model
+loader and a batch function."""
 
 from __future__ import annotations
+
+from typing import Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.functions import pandas_udf
 
 
 def map_rows(df: DataFrame, cols: list, schema: T.StructType, row_fn) -> DataFrame:
@@ -29,3 +34,26 @@ def map_rows(df: DataFrame, cols: list, schema: T.StructType, row_fn) -> DataFra
             yield pd.DataFrame(rows, columns=names)
 
     return df.select(*cols).mapInPandas(fn, schema)
+
+
+def _call_model(model, *columns):
+    return model(*columns)
+
+
+def model_udf(return_type, model_loader, apply=_call_model, *, name: str):
+    """One model stage's iterator pandas UDF (load once, score many).
+    ``model_loader()`` runs once per task, outside the Arrow-batch loop;
+    ``apply(model, *columns)`` maps one batch, each argument column as a
+    list, to that batch's output values (by default it calls the model
+    with the columns). ``name`` labels the UDF in plans and event logs.
+    ``model_loader`` must be a pickle-able zero-arg callable."""
+
+    def fn(batches: Iterator[Tuple[pd.Series, ...]]) -> Iterator[pd.Series]:
+        model = model_loader()
+        for cols in batches:
+            # a one-argument call receives each batch as a bare Series
+            cols = cols if isinstance(cols, tuple) else (cols,)
+            yield pd.Series(apply(model, *(list(c) for c in cols)))
+
+    fn.__name__ = name
+    return pandas_udf(fn, return_type)

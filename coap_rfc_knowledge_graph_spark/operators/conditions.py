@@ -16,24 +16,23 @@ Reference semantics:
 
 Spark shape: the context is a **window frame** (rowsBetween(-5, 0) +
 collect_list) over the url-partitioned sentences — one shuffle, reused
-from the url partitioning upstream. Both generative models are Arrow-
-batched pandas UDFs over that frame; the split fan-out is an explode of
-an array<struct> column.
+from the url partitioning upstream. Both generative models are load-once
+``functions.rows.model_udf`` pandas UDFs over that frame, whose
+``model_loader`` defaults to the deterministic stub; the split fan-out
+is an explode of an array<struct> column.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from ..config import CONTEXT_WINDOW
 from ..functions import stub_models
+from ..functions.rows import model_udf
 
 # --- M8 context construction --------------------------------------------------
 
@@ -63,15 +62,9 @@ _SPLIT_SCHEMA = T.ArrayType(
 )
 
 
-@pandas_udf(_SPLIT_SCHEMA)
-def _split_udf(sentences: pd.Series) -> pd.Series:
-    """Generative condition splitter stand-in (swap point: GPT-2 prompt
-    "Sentence: X\\nAntecedent:" batch generation, parse A/C pairs)."""
-    return pd.Series(stub_models.split_condition_batch(list(sentences)))
-
-
 def _stub_split_loader():
-    """Default model factory: the deterministic condition splitter.
+    """Default model factory: the deterministic condition splitter
+    (stand-in for GPT-2 "Sentence: X\\nAntecedent:" batch generation).
     Returns ``split(sentences) -> [(condition, clause), ...] lists``."""
     return stub_models.split_condition_batch
 
@@ -129,25 +122,11 @@ def _hf_split_loader():  # pragma: no cover - requires transformers+torch
     return split
 
 
-def make_split_udf(model_loader=_stub_split_loader):
-    """Iterator-form pandas UDF: the splitter factory runs once per
-    TASK, then decodes every Arrow batch (load-once/score-many — the
-    shared swap shape; see ``mentions.make_mentions_udf``)."""
-
-    @pandas_udf(_SPLIT_SCHEMA)
-    def udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        split = model_loader()  # once per task, NOT per batch
-        for sentences in batches:
-            yield pd.Series(split(list(sentences)))
-
-    return udf
-
-
-def split_conditions(rule_sentences_df: DataFrame, model_loader=None) -> DataFrame:
+def split_conditions(rule_sentences_df: DataFrame, model_loader=_stub_split_loader) -> DataFrame:
     """rule sentences -> clauses(url, sent_id, rule_num, is_strong,
     sentence, condition, clause, clause_id). ``model_loader`` swaps in a
     real checkpoint factory (``_hf_split_loader``)."""
-    split_udf = _split_udf if model_loader is None else make_split_udf(model_loader)
+    split_udf = model_udf(_SPLIT_SCHEMA, model_loader, name="_split_udf")
     arr = rule_sentences_df.withColumn("splits", split_udf(F.col("sentence")))
     # posexplode_outer + null-position drop, not posexplode: the latter
     # makes InferFiltersFromGenerate evaluate the splitter a second time
@@ -169,20 +148,14 @@ def split_conditions(rule_sentences_df: DataFrame, model_loader=None) -> DataFra
 # --- M10 properties generation ------------------------------------------------
 
 
-@pandas_udf(T.StringType())
-def _properties_udf(clauses: pd.Series, entities: pd.Series) -> pd.Series:
-    """Generative properties model stand-in (swap point: GPT-2 prompt
-    "Context: C\\nSentence: S\\nProperties:" batch generation)."""
-    return pd.Series(stub_models.generate_properties_batch(list(clauses), list(entities)))
-
-
 def _stub_properties_loader():
-    """Default model factory for the make-form properties UDF: adapts
-    the deterministic grammar stub to the (context, clause, entity) row
-    contract (the stub ignores context — the real model consumes it)."""
+    """Default model factory: adapts the deterministic grammar stub
+    (stand-in for GPT-2 "Context: C\\nSentence: S\\nProperties:" batch
+    generation) to the (context, clause, entity) row contract (the stub
+    ignores context — the real model consumes it)."""
 
     def generate(contexts, clauses, entities):
-        return stub_models.generate_properties_batch(list(clauses), list(entities))
+        return stub_models.generate_properties_batch(clauses, entities)
 
     return generate
 
@@ -222,20 +195,8 @@ def _hf_properties_loader():  # pragma: no cover - requires transformers+torch
     return generate
 
 
-def make_properties_udf(model_loader=_stub_properties_loader):
-    """Iterator-form pandas UDF over (context, clause, entity): the
-    generative model factory runs once per TASK (load-once/score-many)."""
-
-    @pandas_udf(T.StringType())
-    def udf(batches: Iterator[tuple[pd.Series, pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        generate = model_loader()  # once per task, NOT per batch
-        for contexts, clauses, entities in batches:
-            yield pd.Series(generate(list(contexts), list(clauses), list(entities)))
-
-    return udf
-
-
-def generate_behaviours(clauses: DataFrame, mentions: DataFrame, model_loader=None) -> DataFrame:
+def generate_behaviours(clauses: DataFrame, mentions: DataFrame,
+                        model_loader=_stub_properties_loader) -> DataFrame:
     """clauses + mentions -> behaviours: each clause gains a ``subject``
     (the sentence's first mention surface — the reference's generative
     model infers the subject from context; the stub needs it explicit)
@@ -249,8 +210,6 @@ def generate_behaviours(clauses: DataFrame, mentions: DataFrame, model_loader=No
     )
     joined = clauses.join(first_mention, on=["url", "sent_id"], how="left")
     subject = F.coalesce(F.col("subject"), F.lit("unknown entity"))
-    if model_loader is None:
-        return joined.withColumn("behaviours", _properties_udf(F.col("clause"), subject))
     ctx = F.col("context") if "context" in joined.columns else F.col("clause")
-    udf = make_properties_udf(model_loader)
+    udf = model_udf(T.StringType(), model_loader, name="_properties_udf")
     return joined.withColumn("behaviours", udf(ctx, F.col("clause"), subject))

@@ -13,22 +13,19 @@ Reference semantics:
 Spark shape: the pronoun fan-out is native (regexp_extract_all counts ->
 sequence -> explode, codegen end-to-end); the context is the same window
 frame as conditions.with_context; only the QA model itself is a pandas
-UDF (deterministic stub here; swap point documented in
-``stub_models.answer_coref``).
+UDF, one load-once ``functions.rows.model_udf`` whose ``model_loader``
+defaults to the deterministic span stub (``stub_models.answer_coref``).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from ..config import PRONOUNS
 from ..functions import stub_models
+from ..functions.rows import model_udf
 from .conditions import with_context
 
 
@@ -63,18 +60,11 @@ def find_pronouns(sentences: DataFrame, pronouns: list[str] | None = None) -> Da
     return out
 
 
-@pandas_udf(T.StringType())
-def _coref_udf(context: pd.Series, pronoun: pd.Series, occurrence: pd.Series) -> pd.Series:
-    """QA model stand-in (swap point: BertForQuestionAnswering batch,
-    start/end span argmax over the tokenized context)."""
-    rows = list(zip(context, pronoun, (int(o) for o in occurrence)))
-    return pd.Series(stub_models.answer_coref_batch(rows))
-
-
 def _stub_coref_loader():
-    """Default model factory: the deterministic span stub. Returns an
-    ``answer(rows) -> antecedent list`` callable over (context, pronoun,
-    occurrence) rows."""
+    """Default model factory: the deterministic span stub, standing in
+    for a BertForQuestionAnswering batch (start/end span argmax over the
+    tokenized context). Returns an ``answer(rows) -> antecedent list``
+    callable over (context, pronoun, occurrence) rows."""
     return stub_models.answer_coref_batch
 
 
@@ -116,30 +106,19 @@ def _hf_coref_loader():  # pragma: no cover - requires transformers+torch
     return answer
 
 
-def make_coref_udf(model_loader=_stub_coref_loader):
-    """Iterator-form pandas UDF: the QA model factory runs once per
-    TASK, then answers every Arrow batch (load-once/score-many, same
-    swap shape as :func:`..operators.mentions.make_mentions_udf`)."""
-
-    @pandas_udf(T.StringType())
-    def udf(batches: Iterator[tuple[pd.Series, pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        answer = model_loader()  # once per task, NOT per batch
-        for context, pronoun, occurrence in batches:
-            rows = list(zip(context, pronoun, (int(o) for o in occurrence)))
-            yield pd.Series(answer(rows))
-
-    return udf
+def _answer_rows(answer, context, pronoun, occurrence):
+    return answer(list(zip(context, pronoun, (int(o) for o in occurrence))))
 
 
 def resolve_coreferences(sentences: DataFrame, pronouns: list[str] | None = None,
-                         model_loader=None) -> DataFrame:
+                         model_loader=_stub_coref_loader) -> DataFrame:
     """sentences -> coref(url, sent_id, pronoun, occurrence, antecedent).
 
     Window context (5 preceding sentences) + QA UDF; rows whose model
     answer is empty are dropped (reference treats no-span as no answer).
     ``model_loader`` swaps in a real checkpoint factory
     (``_hf_coref_loader``)."""
-    qa_udf = _coref_udf if model_loader is None else make_coref_udf(model_loader)
+    qa_udf = model_udf(T.StringType(), model_loader, _answer_rows, name="_coref_udf")
     found = find_pronouns(sentences, pronouns).drop("sentence")
     ctx = with_context(found, sentences)
     resolved = ctx.withColumn(
@@ -166,8 +145,8 @@ def native_coref(docs: DataFrame, pronoun: str = "the value", k: int = 5) -> Dat
     last-candidate select), with the QA span model replaced by a
     deterministic last-content-word rule so DuckDB reproduces every
     value. (The real path's capitalized-run stub is vacuous on the
-    lowercase synthetic corpus — ``q_kg_coref`` runs it over the RFC
-    corpus instead; its content is pinned by table hash in
+    lowercase synthetic corpus — ``q_kg_coref`` runs it over seeded
+    ``synthetic_pages`` instead; its content is pinned by table hash in
     tests/test_triples_native.py.) The default anaphor is the reference
     pronoun list's noun-phrase entry "the value"
     (``src/corefernece_resolution.py:108``) — the single-word pronouns

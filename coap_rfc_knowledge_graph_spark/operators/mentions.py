@@ -7,25 +7,23 @@ batched pandas UDF returning ``array<struct<begin,end,surface>>`` which
 is then exploded — no per-row Python at the Spark boundary, no shuffle
 (narrow transformation over the url-partitioned sentences).
 
-Model swap point (IMPLEMENTED below): :func:`make_mentions_udf` takes a
-zero-arg model factory and builds an iterator-form pandas UDF — the
-factory runs once per task, then scores every Arrow batch
-(load-once/score-many); :func:`_hf_loader` is the real-checkpoint
-factory (torch ``no_grad`` batch scoring, used when transformers is
-installed), ``_stub_loader`` the deterministic default.
+Model swap point: the tagger is one ``functions.rows.model_udf``, whose
+zero-arg model factory runs once per task and then scores every Arrow
+batch (load-once/score-many). ``extract_mentions(model_loader=...)``
+swaps the factory: ``_stub_loader`` (the deterministic rule tagger) is
+the default, :func:`_hf_loader` loads a real checkpoint (torch
+``no_grad`` batch scoring, when transformers is installed) and
+:func:`_numpy_checkpoint_loader` runs the vendored one.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from ..functions import stub_models, tokenizer
+from ..functions.rows import model_udf
 
 MENTION_STRUCT = T.ArrayType(
     T.StructType(
@@ -36,22 +34,6 @@ MENTION_STRUCT = T.ArrayType(
         ]
     )
 )
-
-
-@pandas_udf(MENTION_STRUCT)
-def _mentions_udf(sentences: pd.Series) -> pd.Series:
-    token_lists = [tokenizer.tokenize(s, pad=False) for s in sentences]
-    tag_lists = stub_models.tag_batch(token_lists)
-    out = []
-    for toks, tags in zip(token_lists, tag_lists):
-        spans = stub_models.decode_spans(tags)
-        row = []
-        for b, e in spans:
-            surface = tokenizer.decode_span(toks, b, e)
-            if surface != "":  # ref drops empty decodes (CoAP_contradiction_checking.py:259)
-                row.append((b, e, surface))
-        out.append(row)
-    return pd.Series(out)
 
 
 def _stub_loader():
@@ -191,40 +173,16 @@ def _numpy_checkpoint_loader():
     return tag
 
 
-def make_mentions_udf(model_loader=_stub_loader):
-    """Iterator-form pandas UDF (``Iterator[Series] -> Iterator[Series]``):
-    the model factory runs once per TASK, then scores every Arrow batch —
-    the load-once/score-many pattern a broadcast torch checkpoint needs.
-    ``model_loader`` must be a top-level (pickle-able) zero-arg callable.
-    """
-
-    @pandas_udf(MENTION_STRUCT)
-    def udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        tag = model_loader()  # once per task, NOT per batch
-        for sentences in batches:
-            token_lists = [tokenizer.tokenize(s, pad=False) for s in sentences]
-            tag_lists = tag(token_lists)
-            out = []
-            for toks, tags in zip(token_lists, tag_lists):
-                row = []
-                for b, e in stub_models.decode_spans(tags):
-                    surface = tokenizer.decode_span(toks, b, e)
-                    if surface != "":
-                        row.append((b, e, surface))
-                out.append(row)
-            yield pd.Series(out)
-
-    return udf
-
-
-def extract_mentions_with_model(sentences: DataFrame, model_loader=_stub_loader,
-                                explode: bool = True) -> DataFrame:
-    """:func:`extract_mentions` with a pluggable model factory via the
-    iterator-UDF swap point (``_hf_loader`` for a real HF checkpoint)."""
-    with_arr = sentences.withColumn("mentions", make_mentions_udf(model_loader)(F.col("sentence")))
-    if not explode:
-        return with_arr
-    return _explode_mentions(with_arr)
+def _tag_mentions(tag, sentences):
+    """tokenize -> ``tag`` -> BIO span decode for one batch of sentences:
+    each sentence's ``[(begin, end, surface), ...]``."""
+    token_lists = [tokenizer.tokenize(s, pad=False) for s in sentences]
+    out = []
+    for toks, tags in zip(token_lists, tag(token_lists)):
+        spans = [(b, e, tokenizer.decode_span(toks, b, e)) for b, e in stub_models.decode_spans(tags)]
+        # ref drops empty decodes (CoAP_contradiction_checking.py:259)
+        out.append([span for span in spans if span[2] != ""])
+    return out
 
 
 def _explode_mentions(with_arr: DataFrame) -> DataFrame:
@@ -240,12 +198,15 @@ def _explode_mentions(with_arr: DataFrame) -> DataFrame:
     )
 
 
-def extract_mentions(sentences: DataFrame, explode: bool = True) -> DataFrame:
+def extract_mentions(sentences: DataFrame, explode: bool = True, model_loader=_stub_loader) -> DataFrame:
     """sentences -> mentions(url, sent_id, begin, end, surface).
 
     ``explode=False`` returns the array form (one row per sentence) for
-    consumers that need per-sentence mention sets (pair generation)."""
-    with_arr = sentences.withColumn("mentions", _mentions_udf(F.col("sentence")))
+    consumers that need per-sentence mention sets (pair generation).
+    ``model_loader`` swaps the tagger factory (``_hf_loader`` for a real
+    HF checkpoint)."""
+    udf = model_udf(MENTION_STRUCT, model_loader, _tag_mentions, name="_mentions_udf")
+    with_arr = sentences.withColumn("mentions", udf(F.col("sentence")))
     if not explode:
         return with_arr
     return _explode_mentions(with_arr)

@@ -25,8 +25,8 @@ Scale + determinism design:
 - MLM masking is a ``transform(tokens, (t, i) -> ...)`` over the token
   array: per-position congruential draw < 15%, specials exempt. No
   Python worker anywhere in either operator; the real wordpiece
-  tokenizer is the documented swap point (same iterator-UDF shape as
-  ``operators.mentions.make_mentions_udf``).
+  tokenizer is the documented swap point (it would be one load-once
+  ``functions.rows.model_udf``, like every model stage).
 """
 
 from __future__ import annotations

@@ -5,33 +5,24 @@ classes (``src/relation_extractor.py:59-68``; inference twin
 ``src/MQTT_relation.py:114-146``); pairs predicted NO RELATION (0) are
 dropped, the rest become triples.
 
-Spark shape: one Arrow-batched pandas UDF producing ``pred`` + a native
-filter + projection. The relation-id -> name decode is a broadcast-free
-native CASE (``element_at`` on an array literal), so everything after the
-UDF stays in whole-stage codegen.
+Spark shape: one load-once ``functions.rows.model_udf`` producing
+``pred`` + a native filter + projection. The relation-id -> name decode
+is a broadcast-free native CASE (``element_at`` on an array literal), so
+everything after the UDF stays in whole-stage codegen.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from ..config import RELATION_NAMES
 from ..functions import stub_models
-from ..functions.rows import map_rows
+from ..functions.rows import map_rows, model_udf
 from .pairs import _sentence_pairs
 
 _NAMES = [RELATION_NAMES[i] for i in range(len(RELATION_NAMES))]
-
-
-@pandas_udf(T.IntegerType())
-def _relation_udf(marked: pd.Series) -> pd.Series:
-    return pd.Series(stub_models.classify_relation_batch(list(marked)), dtype="int32")
 
 
 def _stub_relation_loader():
@@ -65,26 +56,11 @@ def _hf_relation_loader():  # pragma: no cover - requires transformers+torch
     return classify
 
 
-def make_relation_udf(model_loader=_stub_relation_loader):
-    """Iterator-form pandas UDF: the model factory runs once per TASK,
-    then scores every Arrow batch (load-once/score-many — the same swap
-    shape as :func:`..operators.mentions.make_mentions_udf`).
-    ``model_loader`` must be a top-level (pickle-able) zero-arg callable
-    returning ``classify(marked_sentences) -> class ids``."""
-
-    @pandas_udf(T.IntegerType())
-    def udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        classify = model_loader()  # once per task, NOT per batch
-        for marked in batches:
-            yield pd.Series(classify(list(marked)), dtype="int32")
-
-    return udf
-
-
-def classify_pairs(pairs: DataFrame, model_loader=None) -> DataFrame:
+def classify_pairs(pairs: DataFrame, model_loader=_stub_relation_loader) -> DataFrame:
     """pairs -> pairs + pred (int) + pred_name. ``model_loader`` swaps
-    in a real checkpoint factory (``_hf_relation_loader``)."""
-    rel_udf = _relation_udf if model_loader is None else make_relation_udf(model_loader)
+    in a real checkpoint factory (``_hf_relation_loader``). The fused
+    :func:`extract_triples_from_arrays` path does not take it."""
+    rel_udf = model_udf(T.IntegerType(), model_loader, name="_relation_udf")
     names = F.array(*[F.lit(n) for n in _NAMES])
     return pairs.withColumn("pred", rel_udf(F.col("marked_sentence"))).withColumn(
         "pred_name", F.element_at(names, F.col("pred") + 1)
@@ -126,7 +102,9 @@ def extract_triples_from_arrays(mentions_arr: DataFrame) -> DataFrame:
     ``extract_triples(generate_pairs_from_arrays(...))`` — pinned by
     tests — but the ~C(n,2)-sized marked-sentence column never crosses
     the JVM<->Python boundary, which at 10^12 documents is the largest
-    intermediate of the whole pipeline."""
+    intermediate of the whole pipeline. It classifies with
+    ``stub_models.classify_relation`` directly: a relation model swapped
+    in through ``model_loader`` reaches :func:`classify_pairs` only."""
 
     def sentence_triples(url, sent_id, sentence, mentions):
         for e1, e2, marked in _sentence_pairs(sentence, mentions):

@@ -7,26 +7,23 @@ prompt ``<|startoftext|>Sentence: {rule}\nBehaviours:`` into a
 fine-tuned GPT-2, greedy decode (do_sample=False), take the text after
 ``Behaviours:`` as the grammar string. SURVEY lists M13 as superseded
 by the M9/M10 two-stage path for the KG build; it is implemented here
-as the standalone single-shot alternative with the same swap-point
-shape as every other model stage (iterator pandas UDF, load-once
-factory, deterministic stub default).
+as the standalone single-shot alternative with the same swap point as
+every other model stage: one ``functions.rows.model_udf`` whose
+``model_loader`` defaults to the deterministic stub.
 
 Scale shape: one Arrow-batched UDF over the rule-sentence projection —
 no shuffle of its own (inherits the upstream url partitioning); the
-model loads once per TASK via the iterator form.
+model loads once per TASK.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from ..functions import stub_models
+from ..functions.rows import model_udf
 
 
 def _stub_variables_loader():
@@ -77,25 +74,11 @@ def _hf_variables_loader():  # pragma: no cover - requires transformers+torch
     return generate
 
 
-def make_variables_udf(model_loader=_stub_variables_loader):
-    """Iterator-form pandas UDF: the generative model factory runs once
-    per TASK, then decodes every Arrow batch (load-once/score-many —
-    the same swap shape as ``mentions.make_mentions_udf``)."""
-
-    @pandas_udf(T.StringType())
-    def udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        generate = model_loader()  # once per task, NOT per batch
-        for sentences in batches:
-            yield pd.Series(generate(list(sentences)))
-
-    return udf
-
-
-def extract_variables(rule_sentences_df: DataFrame, model_loader=None) -> DataFrame:
+def extract_variables(rule_sentences_df: DataFrame, model_loader=_stub_variables_loader) -> DataFrame:
     """rule sentences -> + ``behaviours`` (grammar string). The output
     column feeds the same ``operators.properties`` grammar parser as the
     M10 path, so either head can drive the N6+ rule build.
     ``model_loader`` swaps in a real checkpoint factory
     (``_hf_variables_loader``)."""
-    udf = make_variables_udf(model_loader) if model_loader is not None else make_variables_udf()
+    udf = model_udf(T.StringType(), model_loader, name="_variables_udf")
     return rule_sentences_df.withColumn("behaviours", udf(F.col("sentence")))

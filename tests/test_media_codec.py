@@ -381,6 +381,51 @@ def test_jpeg_progressive_refine_restores_precision():
     assert err_full < err_coarse
 
 
+def test_jpeg_quantization_rounds_exact_ties_half_away():
+    """The (0|4, 0|4) DCT terms of an integer block are exact multiples
+    of 1/(8q), so true half-integer ties are common. The encoder must
+    round each one half away from zero whatever float error the host's
+    matmul leaves on it: one such DC tie, rounded the other way on
+    another host, once moved a frame-features pin. Checked against
+    exact rational arithmetic, with every other block steered onto a
+    DC tie."""
+    from fractions import Fraction
+
+    from coap_rfc_knowledge_graph_spark.functions.jpeg import (
+        _ZZ,
+        _block_coefs,
+        _quality_tables,
+    )
+
+    q = _quality_tables(85)[0]
+    sign = {0: [1] * 8, 4: [1, -1, -1, 1, 1, -1, -1, 1]}  # 8 * T[u, x] * T[u, x'] parity
+    rng = np.random.Generator(np.random.Philox(key=7))
+    ties = 0
+    for trial in range(300):
+        block = rng.integers(0, 256, size=(8, 8))
+        if trial % 2 == 0:
+            delta = 4 * int(q[0, 0]) * (2 * int(rng.integers(-20, 20)) + 1) - int((block - 128).sum())
+            for idx in np.ndindex(8, 8):
+                step = int(np.clip(block[idx] + delta, 0, 255)) - int(block[idx])
+                block[idx] += step
+                delta -= step
+        coefs = np.empty(64, dtype=np.int64)
+        coefs[_ZZ] = _block_coefs(block, q)
+        coefs = coefs.reshape(8, 8)
+        for u in (0, 4):
+            for v in (0, 4):
+                total = sum(
+                    sign[u][x] * sign[v][y] * (int(block[x, y]) - 128)
+                    for x in range(8)
+                    for y in range(8)
+                )
+                exact = Fraction(total, 8 * int(q[u, v]))
+                half_away = (1 if exact >= 0 else -1) * int(abs(exact) + Fraction(1, 2))
+                ties += exact.denominator == 2
+                assert coefs[u, v] == half_away, (trial, u, v, exact)
+    assert ties >= 150
+
+
 def test_spark_jpeg_features_match_local(spark):
     """JPEG payloads through the full Spark feature path
     (sniff_mime -> decode_backend -> real_features), partitioning

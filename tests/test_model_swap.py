@@ -1,6 +1,9 @@
-"""The mention-tagger model swap point (M2): iterator-UDF load-once
-semantics with the stub factory (always runs), and the real-HF factory
-(skipped when transformers/torch are absent — VERDICT round-1 item 9).
+"""The model-stage swap points: every model stage's UDF is one
+load-once ``functions.rows.model_udf``. Each stage with an explicit stub
+factory equals its default path, every factory runs once per task (not
+per Arrow batch), and the real-HF factories run when transformers/torch
+and a checkpoint are available (skipped otherwise — VERDICT round-1
+item 9).
 """
 
 import importlib.util
@@ -10,97 +13,152 @@ import uuid
 
 import pytest
 
-from coap_rfc_knowledge_graph_spark.operators.mentions import (
-    extract_mentions,
-    extract_mentions_with_model,
-)
+from coap_rfc_knowledge_graph_spark.operators import conditions, coref, mentions, relations, variables
+from coap_rfc_knowledge_graph_spark.operators.mentions import extract_mentions
 
-def test_iterator_udf_parity_and_load_once(spark):
-    mark_dir = os.path.join(tempfile.gettempdir(), f"kg_swap_marks_{uuid.uuid4().hex}")
 
-    def counting_loader():
-        # defined inside the test so cloudpickle ships it by VALUE (the
-        # test module itself is not importable on executors); leaves one
-        # marker file per invocation to count factory calls
+def _counting(inner, mark_dir):
+    """Wrap the stub factory ``inner`` so that each call leaves one
+    marker file in ``mark_dir``. The wrapper is a closure, so cloudpickle
+    ships it by value (the test module itself is not importable on
+    executors)."""
+
+    def loader():
         import os as _os
         import uuid as _uuid
 
         _os.makedirs(mark_dir, exist_ok=True)
         with open(_os.path.join(mark_dir, _uuid.uuid4().hex), "w") as fh:
             fh.write("x")
+        return inner()
+
+    return loader
+
+
+def _sentences(spark, n):
+    rows = [
+        ("u%d" % (i % 4), i, "The CoAP server sends a Reset message. It MUST be empty %d." % i)
+        for i in range(n)
+    ]
+    return spark.createDataFrame(rows, "url string, sent_id long, sentence string").coalesce(2)
+
+
+def _rule_sentences(spark, n):
+    rows = [
+        ("u%d" % (i % 4), i, i, i % 2 == 0, "If the server restarts, the token MUST be set to %d." % i)
+        for i in range(n)
+    ]
+    return spark.createDataFrame(
+        rows, "url string, sent_id long, rule_num long, is_strong boolean, sentence string"
+    ).coalesce(2)
+
+
+def _pairs(spark, n):
+    rows = [
+        ("u%d" % (i % 4), i, "server", "Reset message",
+         "The [E1]server[/E1] MUST send a [E2]Reset message[/E2] now %d." % i)
+        for i in range(n)
+    ]
+    return spark.createDataFrame(
+        rows, "url string, sent_id long, e1 string, e2 string, marked_sentence string"
+    ).coalesce(2)
+
+
+def _behaviours(spark, n, loader):
+    clauses = spark.createDataFrame(
+        [("u%d" % (i % 4), i, "the token MUST be set to %d" % i) for i in range(n)],
+        "url string, sent_id long, clause string",
+    ).coalesce(2)
+    first = spark.createDataFrame(
+        [("u%d" % (i % 4), i, 0, "token") for i in range(n)],
+        "url string, sent_id long, begin int, surface string",
+    )
+    return conditions.generate_behaviours(clauses, first, model_loader=loader)
+
+
+# stage -> (its default stub factory, run(spark, n_rows, model_loader))
+_STAGES = {
+    "mentions": (
+        mentions._stub_loader,
+        lambda spark, n, loader: extract_mentions(_sentences(spark, n), model_loader=loader),
+    ),
+    "split": (
+        conditions._stub_split_loader,
+        lambda spark, n, loader: conditions.split_conditions(_rule_sentences(spark, n), model_loader=loader),
+    ),
+    "properties": (conditions._stub_properties_loader, _behaviours),
+    "coref": (
+        coref._stub_coref_loader,
+        lambda spark, n, loader: coref.resolve_coreferences(_sentences(spark, n), model_loader=loader),
+    ),
+    "variables": (
+        variables._stub_variables_loader,
+        lambda spark, n, loader: variables.extract_variables(_sentences(spark, n), model_loader=loader),
+    ),
+    "relation": (
+        relations._stub_relation_loader,
+        lambda spark, n, loader: relations.classify_pairs(_pairs(spark, n), model_loader=loader),
+    ),
+}
+
+
+@pytest.mark.parametrize("stage", sorted(_STAGES))
+def test_model_stage_loads_once_per_task(spark, stage):
+    """64 rows in 8-row Arrow batches over 2 tasks: the stage's model
+    factory runs once per task (at most 2 calls), never once per batch
+    (8 or more)."""
+    inner, run = _STAGES[stage]
+    mark_dir = os.path.join(tempfile.gettempdir(), f"kg_{stage}_marks_{uuid.uuid4().hex}")
+    conf = {"spark.sql.execution.arrow.maxRecordsPerBatch": "8", "spark.sql.shuffle.partitions": "2"}
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        # inputs are coalesced to 2 partitions and shuffles run at 2;
+        # collect unsorted (a Spark-side sort would re-evaluate the UDF
+        # to sample range bounds)
+        out = run(spark, 64, _counting(inner, mark_dir)).collect()
+        assert len(out) > 0
+        n_loads = len(os.listdir(mark_dir))
+        assert 1 <= n_loads <= 2, n_loads
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_mentions_swap_parity(spark):
+    """M2 swap point: extract_mentions with an explicit stub factory
+    must equal the default path."""
+
+    def stub_loader():
         from coap_rfc_knowledge_graph_spark.functions import stub_models
 
         return stub_models.tag_batch
 
-    rows = [
-        ("u%d" % (i % 4), i, "The CoAP server MUST send a Reset message %d." % i)
-        for i in range(64)
-    ]
-    sdf = spark.createDataFrame(rows, "url string, sent_id long, sentence string")
-    # force many small Arrow batches through few tasks; coalesce is
-    # narrow (no Exchange for the projection to straddle)
-    sdf = sdf.coalesce(2)
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "8")
-    try:
-        # collect unsorted (sorting Spark-side would re-evaluate the UDF
-        # for range-partition sampling and skew the factory-call count)
-        key = lambda r: (r.url, r.sent_id, r.begin)
-        base = sorted(extract_mentions(sdf).collect(), key=key)
-        swapped = sorted(extract_mentions_with_model(sdf, counting_loader).collect(), key=key)
-        assert base == swapped and len(base) > 0
-        n_loads = len(os.listdir(mark_dir))
-        # one factory call per task (2 partitions), NOT per 8-row Arrow
-        # batch (64 rows / 8 = 8 batches)
-        assert 1 <= n_loads < 8, n_loads
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-        else:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    sdf = _sentences(spark, 64)
+    key = lambda r: (r.url, r.sent_id, r.begin)
+    base = sorted(extract_mentions(sdf).collect(), key=key)
+    swapped = sorted(extract_mentions(sdf, model_loader=stub_loader).collect(), key=key)
+    assert base == swapped and len(base) > 0
 
 
-def test_relation_swap_parity_and_load_once(spark):
-    """M6 swap point: classify_pairs with a counting factory must equal
-    the default stub path, and the factory must run per TASK, not per
-    Arrow batch (same contract as the mention tagger swap)."""
-    from coap_rfc_knowledge_graph_spark.operators.relations import classify_pairs
+def test_relation_swap_parity(spark):
+    """M6 swap point: classify_pairs with an explicit stub factory must
+    equal the default path."""
 
-    mark_dir = os.path.join(tempfile.gettempdir(), f"kg_rel_marks_{uuid.uuid4().hex}")
-
-    def counting_loader():
-        import os as _os
-        import uuid as _uuid
-
-        _os.makedirs(mark_dir, exist_ok=True)
-        with open(_os.path.join(mark_dir, _uuid.uuid4().hex), "w") as fh:
-            fh.write("x")
+    def stub_loader():
         from coap_rfc_knowledge_graph_spark.functions import stub_models
 
         return stub_models.classify_relation_batch
 
-    rows = [
-        ("u%d" % (i % 4), i, "server", "Reset message",
-         "The [E1]server[/E1] MUST send a [E2]Reset message[/E2] now %d." % i)
-        for i in range(64)
-    ]
-    pairs = spark.createDataFrame(
-        rows, "url string, sent_id long, e1 string, e2 string, marked_sentence string"
-    ).coalesce(2)
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "8")
-    try:
-        key = lambda r: (r.url, r.sent_id)
-        base = sorted(classify_pairs(pairs).collect(), key=key)
-        swapped = sorted(classify_pairs(pairs, model_loader=counting_loader).collect(), key=key)
-        assert base == swapped and len(base) == 64
-        n_loads = len(os.listdir(mark_dir))
-        assert 1 <= n_loads < 8, n_loads  # per task (2), not per batch (8)
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-        else:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    pairs = _pairs(spark, 64)
+    key = lambda r: (r.url, r.sent_id)
+    base = sorted(relations.classify_pairs(pairs).collect(), key=key)
+    swapped = sorted(relations.classify_pairs(pairs, model_loader=stub_loader).collect(), key=key)
+    assert base == swapped and len(base) == 64
 
 
 def test_coref_swap_parity(spark):
@@ -198,7 +256,7 @@ def test_hf_checkpoint_swap(spark):  # pragma: no cover - optional deps
         [("u1", 0, "The CoAP server MUST send a Reset message.")],
         "url string, sent_id long, sentence string",
     )
-    out = extract_mentions_with_model(sdf, _hf_loader).collect()
+    out = extract_mentions(sdf, model_loader=_hf_loader).collect()
     assert out is not None  # schema-stable; span content depends on checkpoint
 
 

@@ -30,7 +30,7 @@ from coap_rfc_knowledge_graph_spark.operators.mentions import (
     _label_to_tag_id,
     _numpy_checkpoint_loader,
     _realign_wordpiece_labels,
-    extract_mentions_with_model,
+    extract_mentions,
 )
 
 B, I, O = stub_models.B, stub_models.I, stub_models.O
@@ -130,7 +130,7 @@ def test_label_to_tag_id_contract():
 
 
 def test_numpy_checkpoint_through_swap_point(spark):
-    """extract_mentions_with_model with the vendored checkpoint: the full
+    """extract_mentions with the vendored checkpoint: the full
     iterator-UDF path (load-once factory, WordPiece encode, numpy
     forward, realign, span decode, surface decode) executes on Spark and
     yields the exact certified spans."""
@@ -142,7 +142,7 @@ def test_numpy_checkpoint_through_swap_point(spark):
     sdf = spark.createDataFrame(rows, "url string, sent_id long, sentence string")
     got = {
         (r.url, r.sent_id, r.begin, r.end, r.surface)
-        for r in extract_mentions_with_model(sdf, _numpy_checkpoint_loader).collect()
+        for r in extract_mentions(sdf, model_loader=_numpy_checkpoint_loader).collect()
     }
     # repo token positions include [CLS] at 0
     assert got == {
@@ -159,6 +159,6 @@ def test_numpy_checkpoint_partitioning_invariant(spark):
         for i in range(40)
     ]
     sdf = spark.createDataFrame(rows, "url string, sent_id long, sentence string")
-    a = sorted(map(tuple, extract_mentions_with_model(sdf.coalesce(1), _numpy_checkpoint_loader).collect()))
-    b = sorted(map(tuple, extract_mentions_with_model(sdf.repartition(16), _numpy_checkpoint_loader).collect()))
+    a = sorted(map(tuple, extract_mentions(sdf.coalesce(1), model_loader=_numpy_checkpoint_loader).collect()))
+    b = sorted(map(tuple, extract_mentions(sdf.repartition(16), model_loader=_numpy_checkpoint_loader).collect()))
     assert a == b and len(a) > 0

@@ -43,8 +43,10 @@ FLAGSHIP_HASHES = {
     # their model UDFs (kg_contradictions count includes the Q5/Q6
     # probe-page findings added this round)
     "kg_sentences": (500, "7a4fd9b287ca8538dd38ff774e7b450296593a76f0cad1d10da947001837b30e"),
-    "kg_coref": (369, "feedf257cefd39e28bf10656407ea39ef89909a54482c16931459503989c4c2a"),
-    "kg_variables": (431, "2faf3388954316056f777750c0536b78d45165ebf2a01beaf0bf5415b1fbb4e3"),
+    # kg_coref and kg_variables run over 32 seeded synthetic pages
+    # (their RFC-corpus pins moved to RFC_MODEL_HASHES below)
+    "kg_coref": (78, "bce373005da83ed1e0b0702e4989f968001ec03bf784a7576eeff50ad42d94d6"),
+    "kg_variables": (125, "208b177833f90f2e7cb87557752045a752b602170b48e228dc56480918863c0f"),
     "kg_contradictions": (47, "ff70c032eecf3d7ce7f843085b027898f5f4f923f7788a27ace35ab0cc9dd0c6"),
     "kg_single_rule": (1, "0a49d010831eeebe03eac80389d6d7515bf4a4bce076f239db22be9568c0414f"),
     "kg_direct_type1": (591, "cb4de13850c44e8668ba290841b0d3474dc223771647a9ae940d19ee1261bbbe"),
@@ -90,23 +92,40 @@ def test_native_family_matches_duckdb(spark, name, min_rows):
     assert a.equals(b)
 
 
-# kg_coref and kg_variables read the RFC pages from the reference corpus
-_READS_REFERENCE = {"kg_coref", "kg_variables"}
-
-
-@pytest.mark.parametrize(
-    "name",
-    [
-        pytest.param(n, marks=pytest.mark.reference_data) if n in _READS_REFERENCE else n
-        for n in sorted(FLAGSHIP_HASHES)
-    ],
-)
+@pytest.mark.parametrize("name", sorted(FLAGSHIP_HASHES))
 def test_flagship_content_hash_pinned(spark, name):
     import __spark_entry__ as entry
 
     n, h = _table_hash(entry.queries()[name](spark, SF))
     exp_n, exp_h = FLAGSHIP_HASHES[name]
     assert (n, h) == (exp_n, exp_h)
+
+
+# the coref and variable-extractor stages over the four RFC documents
+# (pinned at round 3, when kg_coref and kg_variables read this corpus)
+RFC_MODEL_HASHES = {
+    "coref": (369, "feedf257cefd39e28bf10656407ea39ef89909a54482c16931459503989c4c2a"),
+    "variables": (431, "2faf3388954316056f777750c0536b78d45165ebf2a01beaf0bf5415b1fbb4e3"),
+}
+
+
+def _rfc_model_stage(spark, name):
+    from coap_rfc_knowledge_graph_spark.operators.coref import resolve_coreferences
+    from coap_rfc_knowledge_graph_spark.operators.rule_filter import rule_sentences
+    from coap_rfc_knowledge_graph_spark.operators.sentences import extract_sentences
+    from coap_rfc_knowledge_graph_spark.operators.variables import extract_variables
+    from coap_rfc_knowledge_graph_spark.sources.pages import rfc_pages
+
+    sents = extract_sentences(rfc_pages(spark), url_partitions=4)
+    if name == "coref":
+        return resolve_coreferences(sents, pronouns=["it", "they"])
+    return extract_variables(rule_sentences(sents)).select("url", "sent_id", "sentence", "behaviours")
+
+
+@pytest.mark.reference_data
+@pytest.mark.parametrize("name", sorted(RFC_MODEL_HASHES))
+def test_rfc_model_stage_hash_pinned(spark, name):
+    assert _table_hash(_rfc_model_stage(spark, name)) == RFC_MODEL_HASHES[name]
 
 
 def test_native_entities_no_global_sort(spark):

@@ -17,14 +17,16 @@ import pytest
 from coap_rfc_knowledge_graph_spark.functions.jpeg import decode_jpeg, encode_jpeg
 from coap_rfc_knowledge_graph_spark.functions.mp4 import build_mp4, parse_mp4
 from coap_rfc_knowledge_graph_spark.operators.multimodal import (
+    _luma,
     decode_video_frames,
+    resize_nearest,
     synthetic_mjpeg_media,
     video_frame_features,
 )
 
-# order-insensitive sha256 over the seeded 12-row MJPEG table's frame
-# features (see FIXTURES.md for pin history)
-FRAME_FEATURES_PIN = (48, "6c3dbdd27c085a281aecec21c86375b2ab76a90419840c1740ee176774ec69c1")
+# order-insensitive sha256 over the seeded 12-row MJPEG table's integer
+# frame thumbnails (see FIXTURES.md for pin history)
+FRAME_FEATURES_PIN = (48, "3451283ab50d2e0754f18fe766f98cff8510827dfba40afdd1147edc6e1c11fb")
 
 
 def _frames(n=6, shape=(16, 16), seed=3, **enc):
@@ -142,15 +144,25 @@ def test_spark_video_frame_features(spark):
         "payload", F.expr("substring(payload, 1, 40)")
     )
     assert video_frame_features(bad, every_ms=250, dim=8).count() == 0
-    # content pin, order-insensitive
-    digests = sorted(
-        hashlib.sha256(
-            (
-                f"{r.media_id}|{r.frame_idx}|{r.ts_ms}|{r.height}|{r.width}|"
-                + ",".join(f"{v:.5f}" for v in r.features)
-            ).encode()
-        ).hexdigest()
-        for r in a.itertuples()
-    )
-    combined = hashlib.sha256("".join(digests).encode()).hexdigest()
+    # content pin over integer-domain values only, order-insensitive:
+    # each frame's 8x8 integer-luma thumbnail, re-decoded locally from
+    # the same payloads; the Spark features must be its first `dim`
+    # values L2-normalized
+    payloads = dict(media.select("media_id", "payload").toLocalIterator())
+    frames = {
+        (mid, idx): px
+        for mid in set(a["media_id"])
+        for idx, _, px in decode_video_frames(bytes(payloads[mid]), every_ms=250)
+    }
+    digests = []
+    for r in a.itertuples():
+        thumb = resize_nearest(_luma(frames[r.media_id, r.frame_idx]), 8, 8).reshape(-1)
+        head = thumb[:8].astype(np.float64)
+        np.testing.assert_allclose(r.features, head / (np.linalg.norm(head) or 1), rtol=1e-6, atol=1e-7)
+        digests.append(
+            hashlib.sha256(
+                f"{r.media_id}|{r.frame_idx}|{r.ts_ms}|{r.height}|{r.width}|{','.join(map(str, thumb))}".encode()
+            ).hexdigest()
+        )
+    combined = hashlib.sha256("".join(sorted(digests)).encode()).hexdigest()
     assert (len(a), combined) == FRAME_FEATURES_PIN

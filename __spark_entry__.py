@@ -1807,7 +1807,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """All contract queries, ordered so every oracle_sql()-backed entry
     precedes the rows-only ones: the external driver hash-verifies a
     prefix sample of this dict, so front-loading the oracle-backed keys
-    maximizes the number of hash verdicts it records."""
+    maximizes the number of hash verdicts it records. The sort is
+    stable: oracle-backed keys keep their ``_query_impls`` order."""
     base = _query_impls()
     oracled = set(oracle_sql())
     return {k: base[k] for k in sorted(base, key=lambda k: k not in oracled)}
@@ -1815,6 +1816,44 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def _query_impls() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
+        # first: the oracle-backed keys the last correctness sample
+        # (CORRECTNESS_r05.json) did not verify, so the next prefix
+        # sample does
+        "literal_overlap": q_literal_overlap,
+        "fewshot_prompts": q_fewshot_prompts,
+        "gpt3_completions": q_gpt3_completions,
+        "decontaminate": q_decontaminate,
+        "dup_clusters": q_dup_clusters,
+        "weburl_normalize": q_weburl_normalize,
+        "weburl_latest_snapshot": q_weburl_latest_snapshot,
+        "weburl_host_stats": q_weburl_host_stats,
+        "weburl_domain_filter": q_weburl_domain_filter,
+        "weburl_registered_domain": q_weburl_registered_domain,
+        "graph_pagerank": q_graph_pagerank,
+        "graph_hits": q_graph_hits,
+        "graph_degrees": q_graph_degrees,
+        "graph_triangles": q_graph_triangles,
+        "graph_two_hop": q_graph_two_hop,
+        "graph_pagerank_weighted": q_graph_pagerank_weighted,
+        "graph_harmonic": q_graph_harmonic,
+        "graph_components": q_graph_components,
+        "crawl_delta": q_crawl_delta,
+        "html_head_meta": q_html_head_meta,
+        "token_budget": q_token_budget,
+        "mixture_rates": q_mixture_rates,
+        "kmeans_clusters": q_kmeans_clusters,
+        "semantic_dedup": q_semantic_dedup,
+        "lm_coverage": q_lm_coverage,
+        "dsir_evidence": q_dsir_evidence,
+        "line_dedup": q_line_dedup,
+        "coverage_buckets": q_coverage_buckets,
+        "dsir_resample": q_dsir_resample,
+        "shard_counts": q_shard_counts,
+        "paragraph_dedup": q_paragraph_dedup,
+        "pii_redact": q_pii_redact,
+        "hash_split": q_hash_split,
+        "stratified_sample": q_stratified_sample,
+        "lexical_topk": q_lexical_topk,
         "modal_filter": q_modal_filter,
         "rule_numbering": q_rule_numbering,
         "distinct_surfaces": q_distinct_surfaces,
@@ -1877,41 +1916,6 @@ def _query_impls() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "nsp_pairs": q_nsp_pairs,
         "mlm_examples": q_mlm_examples,
         "pack_sequences": q_pack_sequences,
-        "literal_overlap": q_literal_overlap,
-        "fewshot_prompts": q_fewshot_prompts,
-        "gpt3_completions": q_gpt3_completions,
-        "decontaminate": q_decontaminate,
-        "dup_clusters": q_dup_clusters,
-        "weburl_normalize": q_weburl_normalize,
-        "weburl_latest_snapshot": q_weburl_latest_snapshot,
-        "weburl_host_stats": q_weburl_host_stats,
-        "weburl_domain_filter": q_weburl_domain_filter,
-        "weburl_registered_domain": q_weburl_registered_domain,
-        "graph_pagerank": q_graph_pagerank,
-        "graph_hits": q_graph_hits,
-        "graph_degrees": q_graph_degrees,
-        "graph_triangles": q_graph_triangles,
-        "graph_two_hop": q_graph_two_hop,
-        "graph_pagerank_weighted": q_graph_pagerank_weighted,
-        "graph_harmonic": q_graph_harmonic,
-        "graph_components": q_graph_components,
-        "crawl_delta": q_crawl_delta,
-        "html_head_meta": q_html_head_meta,
-        "token_budget": q_token_budget,
-        "mixture_rates": q_mixture_rates,
-        "kmeans_clusters": q_kmeans_clusters,
-        "semantic_dedup": q_semantic_dedup,
-        "lm_coverage": q_lm_coverage,
-        "dsir_evidence": q_dsir_evidence,
-        "line_dedup": q_line_dedup,
-        "coverage_buckets": q_coverage_buckets,
-        "dsir_resample": q_dsir_resample,
-        "shard_counts": q_shard_counts,
-        "paragraph_dedup": q_paragraph_dedup,
-        "pii_redact": q_pii_redact,
-        "hash_split": q_hash_split,
-        "stratified_sample": q_stratified_sample,
-        "lexical_topk": q_lexical_topk,
         "kg_single_rule": q_kg_single_rule,
         "kg_direct_type1": q_kg_direct_type1,
         "kg_direct_type2": q_kg_direct_type2,

@@ -90,10 +90,6 @@ for _u in range(8):
         _T[_u, _x] = _a * np.cos((2 * _x + 1) * _u * np.pi / 16.0)
 
 
-def _idct2(block: np.ndarray) -> np.ndarray:
-    return _T.T @ block @ _T
-
-
 def _fdct2(block: np.ndarray) -> np.ndarray:
     return _T @ block @ _T.T
 

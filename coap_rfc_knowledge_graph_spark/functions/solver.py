@@ -132,8 +132,3 @@ def check_sat(clauses: list[Clause], max_branches: int = 200_000) -> bool:
         return False
 
     return branch(0, [])
-
-
-def pairwise_unsat(clause_a: Clause, clause_b: Clause) -> bool:
-    """Is And(clause_a, clause_b) unsatisfiable? (the Q3-Q6 pair shape)"""
-    return not check_sat([clause_a, clause_b])

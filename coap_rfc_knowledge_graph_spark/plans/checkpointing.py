@@ -3,37 +3,46 @@
 North rule: "resumable from checkpoint with per-partition lineage +
 metrics". Every pipeline stage writes its output table plus a manifest:
 
-    <root>/<stage>/data/...parquet      the stage output
+    <root>/<stage>/data/part-*.parquet  the stage output
     <root>/<stage>/manifest.json        stage-level lineage + metrics
-                                        incl. per-partition rows + an
+                                        incl. rows per written file + an
                                         order-insensitive content hash
 
-A stage is COMPLETE iff its manifest exists and carries ``complete``;
-the manifest is written AFTER the parquet commit (write-then-publish),
-so a crash mid-stage leaves no manifest and the stage re-runs cleanly
+A stage commits in one Spark job: the write itself counts and hashes
+the rows it writes (an ``Observation``), and the rows per written
+``part-*`` file come from the files' parquet footers, read on the
+driver. There is no per-file content hash.
+
+A stage is COMPLETE iff its manifest exists and carries ``complete``.
+A rewrite removes the old manifest before it starts, and the new one is
+written AFTER the parquet commit (write-then-publish), so a crash or a
+failed job mid-stage leaves no manifest and the stage re-runs cleanly
 from its (complete) inputs. A stage is REUSED iff it is complete and
 its manifest ``params`` carry the stage's identity: the options its
 build reads plus its inputs' identities (an upstream stage's
 ``table_hash``). Resume = reuse every such stage and rebuild the rest
 from the stored inputs — exactly the pickle-per-stage
 hand-off of the reference (``src/entity_extractor.py:61-62`` et al.)
-upgraded to audited, partition-aware table snapshots.
+upgraded to content-hashed table snapshots with per-file row counts.
 
 In production these directories are Iceberg tables and the manifest
 content lives in snapshot summary metadata; the layout here is plain
 parquet + JSON so the mechanism is testable in-sandbox. The content
-hash is ``sum(xxhash64(row))`` — order- and partitioning-insensitive,
-so equality across runs at different parallelism certifies identical
-output tables (used by the kill/resume test).
+hash is ``sum(xxhash64(row))`` over string-cast columns — order- and
+partitioning-insensitive, so equality across runs at different
+parallelism certifies identical output tables (used by the kill/resume
+test).
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -98,51 +107,47 @@ class StageStore:
         df: DataFrame,
         stage: str,
         inputs: list[str] | None = None,
-        partition_by: str | None = None,
         params: dict | None = None,
     ) -> DataFrame:
-        """Materialize ``df`` as the stage output; publish the manifest
-        last. Returns the re-read DataFrame (so downstream stages consume
-        the committed snapshot, not the live lineage)."""
+        """Materialize ``df`` as the stage output in one Spark job and
+        publish the manifest last. The write observes ``row_count`` and
+        ``table_hash``; ``partitions`` lists each written ``part-*`` file
+        with its rows, read from the file's parquet footer. Returns the
+        re-read DataFrame (so downstream stages consume the committed
+        snapshot, not the live lineage)."""
         data_dir = os.path.join(self._dir(stage), "data")
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(partition_by)
+        # unpublish first: the overwrite empties data/ before its job
+        # runs, so a failed rewrite must not leave the old manifest
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(self.manifest_path(stage))
+        row_hash = F.xxhash64(*[F.col(c).cast("string") for c in df.columns])
+        obs = Observation()
+        observed = df.observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            # decimal sum: multiset digest (xor would cancel duplicate
+            # rows), overflow-safe to ~10^19 rows
+            F.coalesce(F.sum(row_hash.cast("decimal(38,0)")), F.lit(0)).alias("hash"),
+        )
         t0 = time.time()
-        writer.parquet(data_dir)
+        observed.write.mode("overwrite").parquet(data_dir)
         compute_sec = time.time() - t0  # plan execution + parquet commit
+        metrics = obs.get
 
-        spark = df.sparkSession
-        committed = spark.read.parquet(data_dir)
-        cols = [c for c in committed.columns]
-        hashed = committed.withColumn("__pid", F.spark_partition_id()).withColumn(
-            "__h", F.xxhash64(*[F.col(c).cast("string") for c in cols])
-        )
-        stats = (
-            hashed.groupBy("__pid")
-            .agg(
-                F.count("*").alias("rows"),
-                # decimal sum: multiset digest (xor would cancel duplicate
-                # rows), overflow-safe to ~10^19 rows per partition
-                F.sum(F.col("__h").cast("decimal(38,0)")).alias("content_hash"),
-            )
-            .collect()
-        )
-        partitions = [
-            {"partition_id": int(r["__pid"]), "rows": int(r["rows"]), "content_hash": int(r["content_hash"])}
-            for r in sorted(stats, key=lambda r: r["__pid"])
-        ]
+        committed = df.sparkSession.read.parquet(data_dir)
         manifest = {
             "stage": stage,
             "inputs": inputs or [],
             "params": params,
             "schema": committed.schema.simpleString(),
-            "row_count": sum(p["rows"] for p in partitions),
+            "row_count": int(metrics["rows"]),
             # order- AND partitioning-insensitive multiset digest
-            "table_hash": int(sum(p["content_hash"] for p in partitions)),
-            "partitions": partitions,
-            # metrics: wall time of the stage's plan execution + parquet
-            # commit (the audit pass below is bookkeeping, not stage cost)
+            "table_hash": int(metrics["hash"]),
+            "partitions": [
+                {"file": f, "rows": pq.read_metadata(os.path.join(data_dir, f)).num_rows}
+                for f in sorted(os.listdir(data_dir))
+                if f.startswith("part-")
+            ],
             "compute_sec": round(compute_sec, 3),
             "written_at": time.time(),
             "complete": True,

@@ -90,10 +90,6 @@ def save_table(
         save_bucketed(df, table, buckets=buckets, key=key)
 
 
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def bucketed_join(
     spark: SparkSession, left_table: str, right_table: str, on: list[str], hint: str | None = None
 ) -> DataFrame:

@@ -195,13 +195,3 @@ def contradiction_probe_pages(spark: SparkSession) -> DataFrame:
         for key, text in _CONTRADICTION_PROBES
     ]
     return spark.createDataFrame(rows, PAGES_SCHEMA)
-
-
-def full_corpus(spark: SparkSession, sf_dir: str | None = None, filler: int = 0, seed: int = 42) -> DataFrame:
-    """rfc corpus (+ optional documents adaptation + filler), unioned by name."""
-    df = rfc_pages(spark)
-    if sf_dir:
-        df = df.unionByName(pages_from_documents(spark, sf_dir))
-    if filler:
-        df = df.unionByName(synthetic_pages(spark, filler, seed=seed))
-    return df

@@ -4,8 +4,6 @@
   one sentence per line, one blank line between documents
   (``src/prepare_pretrain_data.py:250-272``), as a distributed text
   write (one file per url-partition; cat-able).
-- :func:`write_table` — parquet table write with the layout discipline
-  of the production Iceberg tables (partition columns, overwrite mode).
 """
 
 from __future__ import annotations
@@ -35,13 +33,6 @@ def write_sentences_text(sentences: DataFrame, path: str) -> None:
     per_doc.select(F.concat(F.col("block"), F.lit("\n")).alias("value")).write.mode(
         "overwrite"
     ).text(path)
-
-
-def write_table(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
 
 
 def _nt_escape(col):

@@ -72,6 +72,23 @@ def test_run_resumable_releases_rules_caches(spark, tmp_path, monkeypatch):
         mine.unpersist()
 
 
+def _reread_digest(spark, store, stage):
+    """(rows, sum(xxhash64)) of the committed parquet, computed apart
+    from the write: the manifest's row_count and table_hash must match."""
+    df = store.read(spark, stage)
+    h = F.xxhash64(*[F.col(c).cast("string") for c in df.columns]).cast("decimal(38,0)")
+    rows, total = df.select(F.count(F.lit(1)), F.coalesce(F.sum(h), F.lit(0))).first()
+    return rows, int(total)
+
+
+def _assert_partitions_are_the_files(store, stage):
+    m = store.manifest(stage)
+    data = os.path.join(os.path.dirname(store.manifest_path(stage)), "data")
+    parts = sorted(f for f in os.listdir(data) if f.startswith("part-"))
+    assert [p["file"] for p in m["partitions"]] == parts, stage
+    assert sum(p["rows"] for p in m["partitions"]) == m["row_count"], stage
+
+
 def test_manifest_contents(spark, tmp_path):
     store = StageStore(str(tmp_path))
     df = spark.range(100).select(F.col("id"), (F.col("id") * 2).alias("v"))
@@ -84,6 +101,78 @@ def test_manifest_contents(spark, tmp_path):
     assert isinstance(m["table_hash"], int)
     # re-read round-trip
     assert store.read(spark, "demo").count() == 100
+    # one partitions entry per written file, rows from its footer
+    store.write(df.repartition(16, "id"), "wide")
+    m = store.manifest("wide")
+    assert len(m["partitions"]) == 16 and all(p["rows"] > 0 for p in m["partitions"])
+    assert (m["row_count"], m["table_hash"]) == (100, store.table_hash("demo"))
+    for stage in ("demo", "wide"):
+        _assert_partitions_are_the_files(store, stage)
+
+
+def test_committed_digest_equals_reread_digest(spark, tmp_path):
+    """The row_count/table_hash the write observes equal a separate
+    re-read hash of the committed parquet: for pages (timestamp and
+    binary columns) and every stage of a resumable run, sentences and
+    mention arrays among them."""
+    pages = synthetic_pages(spark, 8, seed=5)
+    store = StageStore(str(tmp_path))
+    store.write(pages, "pages")
+    run_resumable(spark, pages, str(tmp_path), url_partitions=4)
+    for stage in ["pages", *KG_STAGES]:
+        m = store.manifest(stage)
+        assert (m["row_count"], m["table_hash"]) == _reread_digest(spark, store, stage), stage
+        _assert_partitions_are_the_files(store, stage)
+    assert store.manifest("sentences")["row_count"] > 0 and store.manifest("mentions")["row_count"] > 0
+
+
+def test_empty_stage_commits_zero(spark, tmp_path):
+    """An empty frame commits row_count 0 and table_hash 0; the alarm
+    turns an observation that never reports into a failure, not a hang."""
+    import signal
+
+    def timeout(signum, frame):
+        raise TimeoutError("the write's observation never reported")
+
+    store = StageStore(str(tmp_path))
+    empties = {
+        "no_partitions": spark.createDataFrame([], "a int, b string"),
+        "filtered": spark.range(10).filter("id < 0"),
+        "limit_zero": spark.range(10).limit(0),
+    }
+    previous = signal.signal(signal.SIGALRM, timeout)
+    try:
+        for stage, df in empties.items():
+            signal.alarm(120)
+            store.write(df, stage)
+            signal.alarm(0)
+            m = store.manifest(stage)
+            assert (m["row_count"], m["table_hash"]) == (0, 0), stage
+            _assert_partitions_are_the_files(store, stage)
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, previous)
+
+
+def test_failed_rewrite_unpublishes_the_old_stage(spark, tmp_path):
+    """A rewrite whose job fails has already emptied data/; the old
+    manifest must not survive it, or a later run with the old options
+    would reuse a stage that has no data."""
+    store = StageStore(str(tmp_path))
+    identity_a = {"opt": "A", "inputs": {"src": 1}}
+    store.materialize(spark, "demo", lambda: spark.range(10), {"src": 1}, params={"opt": "A"})
+    assert store.has("demo", identity_a)
+    first = store.manifest("demo")["written_at"]
+
+    def failing():
+        return spark.range(10).select(F.when(F.col("id") >= 0, F.raise_error(F.lit("task failure"))).alias("id"))
+
+    with pytest.raises(Exception, match="task failure"):
+        store.materialize(spark, "demo", failing, {"src": 1}, params={"opt": "B"})
+    assert not store.has("demo", identity_a)
+    out = store.materialize(spark, "demo", lambda: spark.range(10), {"src": 1}, params={"opt": "A"})
+    assert out.count() == 10
+    assert store.has("demo", identity_a) and store.manifest("demo")["written_at"] != first
 
 
 # --- coref -------------------------------------------------------------------

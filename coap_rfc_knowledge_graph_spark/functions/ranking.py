@@ -2,16 +2,21 @@
 DataFrame ops — the shared scale-path replacement for a global
 ``Window.orderBy(...)`` (a single-task sort).
 
-Shape: range-partition on the order keys -> per-partition row_number
-(parallel window — partitionBy prevents the global sort) -> broadcast
-per-partition cumulative offsets. No DF->RDD round-trip (which would
-eagerly execute under AQE), no single-task stage.
+One kernel, :func:`zip_with_cumsum` (an exclusive prefix sum under a
+total order): range-partition on the order keys -> per-partition
+running sum (parallel window — partitionBy prevents the global sort)
+-> broadcast per-partition cumulative offsets. No DF->RDD round-trip
+(which would eagerly execute under AQE), no single-task stage. A rank
+is that cumulative sum over a column of ones (:func:`zip_with_rank`).
 
 The pid-stamped frame is localCheckpoint-ed: the offsets side and the
-row_number side must see the SAME physical partitioning (a re-evaluated
+running-sum side must see the SAME physical partitioning (a re-evaluated
 range exchange may re-sample split points); a plain persist could
 silently recompute through a NEW exchange on executor loss, corrupting
 the rank — the truncated-lineage checkpoint fails loudly instead.
+
+Top-k has one kernel too, :func:`two_level_topk_per_key`; a global
+top-k is its call with no key columns.
 
 Used by ``operators.linking.embedded_surfaces`` (N1 first-seen index)
 and ``operators.rules.value_dictionary`` (N7 non-float value ids —
@@ -29,53 +34,10 @@ from pyspark.sql import functions as F
 def zip_with_rank(df: DataFrame, order_cols: list[str], idx_col: str = "idx") -> DataFrame:
     """Add ``idx_col``: the 0-based rank of each row under the total
     lexicographic order of ``order_cols`` (which must be a unique key —
-    ties would make the rank nondeterministic across partitionings)."""
-    spark = df.sparkSession
-    # defaultParallelism, NOT df.rdd.getNumPartitions(): under AQE the
-    # .rdd access eagerly executes the upstream query stages
-    n_parts = spark.sparkContext.defaultParallelism
-    ordered = df.repartitionByRange(n_parts, *order_cols)
-    part = ordered.withColumn("__pid", F.spark_partition_id()).localCheckpoint(eager=False)
-    in_part = Window.partitionBy("__pid").orderBy(*order_cols)
-    local = part.withColumn("__local", F.row_number().over(in_part) - 1)
-    counts = part.groupBy("__pid").count()
-    off_w = (
-        Window.orderBy("__pid")  # tiny: one row per partition
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.withColumn(
-        "__off", F.coalesce(F.sum("count").over(off_w), F.lit(0))
-    ).select("__pid", "__off")
-    return (
-        local.join(F.broadcast(offsets), on="__pid")
-        .withColumn(idx_col, (F.col("__local") + F.col("__off")).cast("long"))
-        .drop("__pid", "__local", "__off")
-    )
-
-
-def two_level_topk(df: DataFrame, order_by: list, k: int) -> DataFrame:
-    """Global top-k under ``order_by`` (a list of Column sort
-    expressions forming a deterministic total order) WITHOUT a global
-    sort: level 1 takes the top k per partition in parallel (every
-    global top-k row is necessarily in its own partition's top k, so no
-    candidate is lost); level 2 re-ranks the <= k * n_partitions
-    survivors — bounded by construction, the only single-task step.
-    Exactly equal to the naive ``Window.orderBy`` form, including
-    tie-breaks. Shared by ``corpus_lm.prune_top_bigrams`` and
-    ``data_selection.dsir_resample``."""
-    per_part = Window.partitionBy("__pid").orderBy(*order_by)
-    candidates = (
-        df.withColumn("__pid", F.spark_partition_id())
-        .withColumn("__r", F.row_number().over(per_part))
-        .filter(F.col("__r") <= k)
-        .drop("__pid", "__r")
-    )
-    final = Window.orderBy(*order_by)
-    return (
-        candidates.withColumn("__r", F.row_number().over(final))
-        .filter(F.col("__r") <= k)
-        .drop("__r")
-    )
+    ties would make the rank nondeterministic across partitionings).
+    The rank is :func:`zip_with_cumsum` over a column of ones."""
+    ones = df.withColumn("__one", F.lit(1))
+    return zip_with_cumsum(ones, order_cols, "__one", out_col=idx_col).drop("__one")
 
 
 def two_level_topk_per_key(
@@ -128,11 +90,11 @@ def zip_with_cumsum(
     df: DataFrame, order_cols: list[str], value_col: str, out_col: str = "cum"
 ) -> DataFrame:
     """Add ``out_col``: the EXCLUSIVE prefix sum of ``value_col`` under
-    the total lexicographic order of ``order_cols`` — the same two-stage
-    shape as :func:`zip_with_rank` (parallel per-partition window +
-    broadcast per-partition offsets), so no single-task global sort at
-    any size. Used by ``operators.pretrain.pack_sequences`` (global
-    token offsets for concat-and-chunk packing)."""
+    the total lexicographic order of ``order_cols`` in two stages
+    (parallel per-partition window + broadcast per-partition offsets),
+    so no single-task global sort at any size. Used by
+    :func:`zip_with_rank` and ``operators.pretrain.pack_sequences``
+    (global token offsets for concat-and-chunk packing)."""
     spark = df.sparkSession
     n_parts = spark.sparkContext.defaultParallelism
     ordered = df.repartitionByRange(n_parts, *order_cols)

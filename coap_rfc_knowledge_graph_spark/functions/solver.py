@@ -19,7 +19,6 @@ language (linear unary constraints), and deterministic.
 
 from __future__ import annotations
 
-import itertools
 from dataclasses import dataclass
 
 Atom = tuple[str, str, float]  # (var, op, value)

@@ -79,14 +79,14 @@ def prune_top_bigrams(lm: DataFrame, top_m: int) -> DataFrame:
     """Top-M vocabulary cut (count desc, bigram asc tiebreak) — bounds
     the LM so scoring can broadcast it.
 
-    Two-level selection (shared ``ranking.two_level_topk``), NOT a
-    global ``Window.orderBy``: a raw web bigram LM is corpus-sized
-    (distinct bigrams grow with the crawl), so a global window would
-    funnel the whole LM through one task. Same deterministic total
-    order as the naive form, tie-breaks included."""
-    from ..functions.ranking import two_level_topk
+    Two-level selection (``ranking.two_level_topk_per_key`` with no
+    key), NOT a global ``Window.orderBy``: a raw web bigram LM is
+    corpus-sized (distinct bigrams grow with the crawl), so a global
+    window would funnel the whole LM through one task. Same
+    deterministic total order as the naive form, tie-breaks included."""
+    from ..functions.ranking import two_level_topk_per_key
 
-    return two_level_topk(lm, [F.desc("cnt"), F.asc("bigram")], top_m)
+    return two_level_topk_per_key(lm, [], [F.desc("cnt"), F.asc("bigram")], top_m)
 
 
 def lm_coverage(

@@ -43,7 +43,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.ranking import two_level_topk, zip_with_rank
+from ..functions.ranking import two_level_topk_per_key, zip_with_rank
 from .corpus_lm import doc_bigrams, lm_coverage
 
 _U_MOD = 1 << 62  # Gumbel draw granularity (fits bigint; > double mantissa)
@@ -169,15 +169,15 @@ def dsir_resample(
     congruential draw on the id, so the selection is reproducible and
     partitioning-independent (pinned by test).
 
-    Selection is the shared two-level top-k (``ranking.two_level_topk``
-    — per-partition candidates, then a bounded final rank over
-    <= k * n_partitions survivors), so the corpus never funnels through
-    one task. Key collisions (two ids sharing both weight and the
+    Selection is the shared two-level top-k
+    (``ranking.two_level_topk_per_key`` with no key — per-partition
+    candidates, then a bounded final rank over <= k * n_partitions
+    survivors), so the corpus never funnels through one task. Key collisions (two ids sharing both weight and the
     62-bit noise draw) break by id ascending."""
     keyed = weights.withColumn(
         "gumbel_key", F.col(weight_col) / F.lit(float(temperature)) + _gumbel(id_col)
     )
-    return two_level_topk(keyed, [F.desc("gumbel_key"), F.asc(id_col)], k)
+    return two_level_topk_per_key(keyed, [], [F.desc("gumbel_key"), F.asc(id_col)], k)
 
 
 def coverage_buckets(

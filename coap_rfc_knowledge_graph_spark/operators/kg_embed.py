@@ -146,8 +146,6 @@ def negative_samples_typed(
     per-pred counts ride a broadcast. Draws are the same independent
     congruential pair as :func:`negative_samples` with distinct
     offsets, mirrored in the DuckDB oracle."""
-    from pyspark.sql import Window
-
     subj, obj = F.col(subj_col).cast("long"), F.col(obj_col).cast("long")
     t = triples.select(
         subj.alias("subj_id"), F.col(pred_col).alias("pred"), obj.alias("obj_id")

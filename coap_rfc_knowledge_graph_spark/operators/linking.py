@@ -34,10 +34,15 @@ and chains through earlier overwrites. That is a functional forest with
 ordering, which we pin as lexicographic (url, sent_id, begin) of first
 occurrence.
 
-The N4 link join back to mentions is a broadcast equi-join on the
-deduped surface (no shuffle of the big side). When the dictionary is too
-large to broadcast, ``salted_top1_join`` implements the north rule's
-salted shuffle join for head-entity skew.
+N4 (link a surface column to its top-1 canonical entity and join the
+result back) has one entry point, ``link_mentions``: mentions, both
+sides of the triples and the rules' entity surfaces all go through it.
+It links the distinct lowercased surfaces and picks the physical path
+from the dictionary size: while the dictionary fits the broadcast
+budget, a broadcast matmul link and a broadcast equi-join back (no
+shuffle of the big side); past it, the distributed argmax and
+``salted_top1_join``, the north rule's salted shuffle join for
+head-entity skew.
 """
 
 from __future__ import annotations
@@ -416,16 +421,6 @@ def canonical_entities(mentions: DataFrame, use_lsh: bool | None = None, **lsh_k
     return entities
 
 
-def surface_to_entity(mentions: DataFrame, use_lsh: bool | None = None, **lsh_kw) -> DataFrame:
-    """Map each distinct (lowercased) surface to its canonical entity:
-    surface_map(surface, entity_id, canonical)."""
-    entities, members = _build_canonical(mentions, use_lsh=use_lsh, **lsh_kw)
-    return (
-        members.join(entities.select("entity_id", "canonical"), on="entity_id")
-        .select("surface", "entity_id", "canonical")
-    )
-
-
 # --- N4: top-1 cosine link (broadcast + salted variants) ----------------------
 
 
@@ -622,50 +617,39 @@ def _entity_count_hint(entities: DataFrame) -> int:
     return int(n) if n is not None else entities.count()
 
 
-def link_surfaces_auto(
-    query_surfaces: DataFrame,
+def link_mentions(
+    df: DataFrame,
     entities: DataFrame,
     surface_col: str = "surface",
     max_broadcast_entities: int = DICTIONARY_BROADCAST_MAX_ROWS,
 ) -> DataFrame:
-    """N4 link with automatic physical-path selection: broadcast matmul
-    while the dictionary fits the broadcast budget, distributed shuffle
-    argmax above it. Same output either way (pinned by test) up to
-    float near-ties: the broadcast path scores in float32 numpy, the
-    distributed path in float64 SQL, so two entities whose true dots
-    differ by < f32 epsilon can rank differently across the path
-    boundary — acceptable for a 0.9-threshold similarity link."""
+    """N4 link plus join-back, the one path every caller takes: ``df``
+    with ``entity_id``, ``canonical`` and ``sim`` appended, linked on
+    ``lower(df[surface_col])``; rows whose surface links to nothing are
+    dropped. The argmax runs per DISTINCT surface.
+
+    One decision picks both physical paths. While the dictionary fits
+    ``max_broadcast_entities``, the link is the broadcast matmul
+    (:func:`link_surfaces`) and the join-back a **broadcast** equi-join
+    (zero shuffle of the big side — head-entity skew never
+    materialises). Past the budget, the link is the distributed argmax
+    (:func:`link_surfaces_distributed`) and the join-back the north
+    rule's **salted** shuffle join (``salted_top1_join``), spreading
+    each head surface over ``LINK_SALT_BUCKETS`` reducers. Same output
+    either way (pinned by test) up to float near-ties: the broadcast
+    path scores in float32 numpy, the distributed path in float64 SQL,
+    so two entities whose true dots differ by < f32 epsilon can rank
+    differently across the path boundary — acceptable for a
+    0.9-threshold similarity link."""
+    keyed = df.withColumn("q_surface", F.lower(F.col(surface_col)))
     if _entity_count_hint(entities) <= max_broadcast_entities:
-        return link_surfaces(query_surfaces, entities, surface_col)
-    return link_surfaces_distributed(query_surfaces, entities, surface_col)
-
-
-def link_mentions(
-    mentions: DataFrame,
-    entities: DataFrame,
-    max_broadcast_entities: int = DICTIONARY_BROADCAST_MAX_ROWS,
-) -> DataFrame:
-    """mentions -> linked mentions(url, sent_id, begin, end, surface,
-    entity_id, canonical, sim). The argmax runs per DISTINCT surface.
-
-    Join-back selection mirrors the link itself: while the surface map
-    is dictionary-sized it is a **broadcast** equi-join (zero shuffle of
-    the big side — head-entity skew never materialises); past the
-    broadcast budget it becomes the north rule's **salted** shuffle join
-    (``salted_top1_join``), spreading each head surface over
-    ``LINK_SALT_BUCKETS`` reducers."""
-    qs = mentions.select(F.lower(F.col("surface")).alias("q_surface"))
-    broadcast_ok = _entity_count_hint(entities) <= max_broadcast_entities
-    if broadcast_ok:
-        linked = link_surfaces(qs, entities, surface_col="q_surface")
-        return mentions.join(
-            F.broadcast(linked.withColumnRenamed("surface", "q_surface")),
-            on=F.lower(mentions["surface"]) == F.col("q_surface"),
+        linked = link_surfaces(keyed, entities, surface_col="q_surface")
+        return keyed.join(
+            F.broadcast(linked.withColumnRenamed("surface", "q_surface")), on="q_surface"
         ).drop("q_surface")
-    linked = link_surfaces_distributed(qs, entities, surface_col="q_surface")
-    big = mentions.withColumn("q_surface", F.lower(F.col("surface")))
+    linked = link_surfaces_distributed(keyed, entities, surface_col="q_surface")
     return salted_top1_join(
-        big,
+        keyed,
         linked.withColumnRenamed("surface", "q_surface"),
         key="q_surface",
         order_col="sim",

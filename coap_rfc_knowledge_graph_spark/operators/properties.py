@@ -21,7 +21,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 _ATOMS_TYPE = "array<struct<var:string,op:string,value:string>>"
 

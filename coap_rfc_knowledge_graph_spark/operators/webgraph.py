@@ -21,9 +21,9 @@ ranking order is unaffected for any realistically-sized graph.
 Scale shape (10^12 edges):
 - every iteration is one equi-join of ranks onto edges keyed ``src``
   plus one hash aggregate keyed ``dst`` — two shuffles of the edge
-  table per iteration, the textbook distributed-PageRank plan. Edges
-  are re-used across iterations: pre-partition them on ``src`` once
-  (``prepartition``) so only the (node-sized) rank table re-shuffles.
+  table per iteration, the textbook distributed-PageRank plan. The
+  unweighted operator is the weighted one with unit weights, so both
+  share one loop.
 - ranks are localCheckpoint'ed every ``checkpoint_every`` iterations to
   cut lineage growth (an unbounded iterative plan otherwise re-plans
   O(k) joins at every action).
@@ -186,7 +186,6 @@ def pagerank_fixedpoint(
     scale: int = SCALE,
     damp_num: int = DAMP_NUM,
     damp_den: int = DAMP_DEN,
-    prepartition: int | None = None,
     checkpoint_every: int = 4,
 ) -> DataFrame:
     """Fixed-point integer PageRank: after ``iterations`` rounds returns
@@ -199,52 +198,24 @@ def pagerank_fixedpoint(
         rank'(v)   = (scale * (damp_den - damp_num)) div damp_den
                      + sum over in-edges contrib(u)
 
+    This is :func:`pagerank_weighted` with every edge weighing 1: then
+    ``out_w`` is ``out_degree`` (duplicate edges counted) and each
+    edge's contribution is the one above.
+
     Dangling nodes (no out-edges) leak their damped mass — the standard
     "no dangling redistribution" variant; redistribute via a scalar agg
     + broadcast if mass conservation matters. Ties and totals are exact:
     the result is invariant to partitioning and summation order, which
     is what lets the DuckDB oracle hash-match it.
     """
-    base = (scale * (damp_den - damp_num)) // damp_den
-    if prepartition:
-        # localCheckpoint, NOT persist(): CacheManager retains a persisted
-        # plan until an explicit unpersist, so repeated calls in a long-
-        # lived session would pin one cached edge table per call (the
-        # ADVICE-r3 leak fixed in linking.py). Checkpointed blocks are
-        # released by the ContextCleaner once the returned plan is GC'd,
-        # and the lineage cut serves the same reuse-across-iterations goal.
-        edges = edges.repartition(prepartition, "src").localCheckpoint(eager=False)
-    # out_d and nodes are consumed by EVERY iteration: without lineage
-    # truncation the final plan re-derives each from the full edge table
-    # once per round (k redundant edge-table aggregations in one action —
-    # measured at ~2 s/iteration of pure re-aggregation on a 50M-edge
-    # graph, dwarfing the actual rank join). The repo's double-eval class,
-    # inside its own operator.
-    out_d = (
-        edges.groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).alias("out_degree"))
-        .localCheckpoint(eager=False)
+    return pagerank_weighted(
+        edges.select("src", "dst", F.lit(1).alias("weight")),
+        iterations,
+        scale,
+        damp_num,
+        damp_den,
+        checkpoint_every=checkpoint_every,
     )
-    nodes = graph_nodes(edges).localCheckpoint(eager=False)
-    ranks = nodes.select("node", F.lit(scale).cast("long").alias("rank"))
-    for i in range(iterations):
-        contribs = (
-            ranks.join(out_d, "node")
-            .select(
-                "node",
-                F.expr(f"(rank * {damp_num}) div (out_degree * {damp_den})").alias("c"),
-            )
-            .join(edges.select(F.col("src").alias("node"), "dst"), "node")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("c").alias("in_mass"))
-        )
-        ranks = nodes.join(contribs, "node", "left").select(
-            "node",
-            (F.lit(base) + F.coalesce("in_mass", F.lit(0))).cast("long").alias("rank"),
-        )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks
 
 
 def pagerank_weighted(
@@ -272,15 +243,18 @@ def pagerank_weighted(
 
     Overflow bound: rank * damp_num * max-weight must stay below 2^63
     (rank is at most ~total mass = N * scale micro-units); on graphs
-    with very heavy edges pass a smaller ``scale``. Same shuffle shape
-    as the unweighted operator: one equi-join + one hash aggregate per
-    iteration, loop invariants lineage-truncated."""
+    with very heavy edges pass a smaller ``scale``. Shuffle shape: one
+    equi-join + one hash aggregate per iteration, loop invariants
+    lineage-truncated."""
     base = (scale * (damp_den - damp_num)) // damp_den
     e = edges.select(
         F.col(src_col).alias("src"),
         F.col(dst_col).alias("dst"),
         F.col(weight_col).cast("long").alias("w"),
     ).localCheckpoint(eager=False)
+    # out_w and nodes are consumed by EVERY iteration: without lineage
+    # truncation the final plan re-derives each from the full edge table
+    # once per round (k redundant edge-table aggregations in one action)
     out_w = (
         e.groupBy(F.col("src").alias("node"))
         .agg(F.sum("w").alias("out_w"))
@@ -481,7 +455,7 @@ def hits_fixedpoint(
     any partitioning — the DuckDB oracle unrolls the same chain.
 
     Each round adds two joins + two broadcast normalizations to the
-    plan, so (like ``pagerank_fixedpoint``) lineage is truncated every
+    plan, so (like ``pagerank_weighted``) lineage is truncated every
     ``checkpoint_every`` rounds — without it a 20-iteration run hands
     Catalyst an exponentially deep plan."""
     if iterations < 1:
@@ -489,7 +463,7 @@ def hits_fixedpoint(
             f"hits_fixedpoint needs iterations >= 1 (got {iterations}): the "
             "two-phase auth/hub update defines no round-0 auth score"
         )
-    # same reuse-across-iterations truncation as pagerank_fixedpoint
+    # same reuse-across-iterations truncation as pagerank_weighted
     nodes = graph_nodes(edges).localCheckpoint(eager=False)
     hubs = nodes.select("node", F.lit(scale).cast("long").alias("hub"))
     auth = None

@@ -9,9 +9,11 @@ metrics". Every pipeline stage writes its output table plus a manifest:
                                         order-insensitive content hash
 
 A stage commits in one Spark job: the write itself counts and hashes
-the rows it writes (an ``Observation``), and the rows per written
+the rows it writes (an ``Observation``), the rows per written
 ``part-*`` file come from the files' parquet footers, read on the
-driver. There is no per-file content hash.
+driver, and the committed table is re-read with the written frame's
+schema, so no schema-inference job runs. There is no per-file content
+hash.
 
 A stage is COMPLETE iff its manifest exists and carries ``complete``.
 A rewrite removes the old manifest before it starts, and the new one is
@@ -134,7 +136,9 @@ class StageStore:
         compute_sec = time.time() - t0  # plan execution + parquet commit
         metrics = obs.get
 
-        committed = df.sparkSession.read.parquet(data_dir)
+        # the written schema, not inference: inference is a Spark job.
+        # File sources read every field as nullable either way.
+        committed = df.sparkSession.read.schema(df.schema).parquet(data_dir)
         manifest = {
             "stage": stage,
             "inputs": inputs or [],

@@ -21,7 +21,9 @@ Shuffle budget at scale (the plan we want, verified via .explain in
 tests/test_plans.py): one url-repartition feeding sentences; the window
 stages and the pair self-join reuse that url partitioning; dictionary-
 sized stages (entity canonicalization, value dictionary) shuffle only
-dictionary rows; every join back to corpus-sized tables is broadcast.
+dictionary rows; every join back to corpus-sized tables is broadcast
+while the dictionary fits the broadcast budget (salted past it, see
+``linking.link_mentions``).
 The rules stage caches its atomic rules where they fan out into a
 dictionary-sized branch plus that branch's join-back (see ``rules_stage``):
 uncached, every such read re-runs the Python-UDF chain above them (split,
@@ -43,12 +45,8 @@ from ..operators.contradictions import (
     check_entity_contradiction,
     check_single_rule_contradiction,
 )
-from ..operators.linking import (
-    canonicalize_variables,
-    link_surfaces_auto,
-    salted_top1_join,
-    surface_to_entity,
-)
+from ..config import DICTIONARY_BROADCAST_MAX_ROWS
+from ..operators.linking import canonicalize_variables, link_mentions
 from ..operators.mentions import extract_mentions
 from ..operators.properties import parse_atomic_rules
 from ..operators.relations import extract_triples_from_arrays
@@ -124,53 +122,23 @@ def extract_stage(pages: DataFrame, url_partitions: int | None = None) -> KGResu
     return result
 
 
-def canonical_triples(result: KGResult, max_broadcast_entities: int | None = None) -> DataFrame:
+def canonical_triples(
+    result: KGResult, max_broadcast_entities: int = DICTIONARY_BROADCAST_MAX_ROWS
+) -> DataFrame:
     """Rewrite triples' surfaces to canonical entity ids (N4 over both
     subj and obj): triples_canonical(subj_id, subj, pred, obj_id, obj,
-    url, sent_id). The surface->entity maps come from
-    ``link_surfaces_auto`` (broadcast matmul vs distributed argmax by
-    dictionary size); the join-back to the corpus-sized triples is
-    broadcast while the map fits the budget, salted shuffle otherwise."""
-    from ..config import DICTIONARY_BROADCAST_MAX_ROWS
-    from ..operators.linking import _entity_count_hint
-
-    budget = DICTIONARY_BROADCAST_MAX_ROWS if max_broadcast_entities is None else max_broadcast_entities
-    t = result.triples
+    url, sent_id). Each side is one ``link_mentions`` call, which picks
+    the broadcast or the salted path by dictionary size."""
     entities = result.entities
-    broadcast_ok = _entity_count_hint(entities) <= budget
-    subj_map = link_surfaces_auto(
-        t.select(F.lower("subj").alias("surface")), entities, max_broadcast_entities=budget
-    ).select(
-        F.col("surface").alias("subj_key"),
-        F.col("entity_id").alias("subj_id"),
-        F.col("canonical").alias("subj_canonical"),
-        F.col("sim").alias("subj_sim"),
-    )
-    obj_map = link_surfaces_auto(
-        t.select(F.lower("obj").alias("surface")), entities, max_broadcast_entities=budget
-    ).select(
-        F.col("surface").alias("obj_key"),
-        F.col("entity_id").alias("obj_id"),
-        F.col("canonical").alias("obj_canonical"),
-        F.col("sim").alias("obj_sim"),
-    )
-    if broadcast_ok:
-        joined = t.join(F.broadcast(subj_map), F.lower(t["subj"]) == F.col("subj_key")).join(
-            F.broadcast(obj_map), F.lower(t["obj"]) == F.col("obj_key")
-        )
-    else:
-        joined = salted_top1_join(
-            t.withColumn("subj_key", F.lower("subj")), subj_map, key="subj_key", order_col="subj_sim"
-        )
-        joined = salted_top1_join(
-            joined.withColumn("obj_key", F.lower("obj")), obj_map, key="obj_key", order_col="obj_sim"
-        )
-    return joined.select(
+    linked = link_mentions(result.triples, entities, "subj", max_broadcast_entities)
+    linked = linked.withColumnsRenamed({"entity_id": "subj_id", "canonical": "subj_canonical"})
+    linked = link_mentions(linked.drop("sim"), entities, "obj", max_broadcast_entities)
+    return linked.select(
         "subj_id",
         F.col("subj_canonical").alias("subj"),
         "pred",
-        "obj_id",
-        F.col("obj_canonical").alias("obj"),
+        F.col("entity_id").alias("obj_id"),
+        F.col("canonical").alias("obj"),
         "url",
         "sent_id",
     )
@@ -192,17 +160,7 @@ def rules_stage(result: KGResult) -> KGResult:
     result.cached.append(atomic)
 
     # N4: link each atomic rule's entity surface to its canonical entity
-    # (atomic is rule-sentence-sized — far smaller than mentions — so the
-    # broadcast join-back below is safe even when the link itself runs
-    # the distributed path)
-    link = link_surfaces_auto(
-        atomic.select(F.col("entity_surface").alias("surface")), result.entities
-    ).select(
-        F.col("surface").alias("entity_surface"),
-        "entity_id",
-        F.col("canonical"),
-    )
-    atomic = atomic.join(F.broadcast(link), on="entity_surface")
+    atomic = link_mentions(atomic, result.entities, surface_col="entity_surface").drop("sim")
 
     # N5: per-entity variable canonicalization, joined back broadcast
     var_map = canonicalize_variables(atomic.select("entity_id", "var"))
@@ -240,8 +198,3 @@ def query_stage(result: KGResult) -> KGResult:
         "conditional": check_conditional(result.rules, flagged, exclude_rules=bad_rules),
     }
     return result
-
-
-def run_pipeline(pages: DataFrame, url_partitions: int | None = None) -> KGResult:
-    """Full EP1->EP3 chain (lazy; caller materializes)."""
-    return query_stage(rules_stage(extract_stage(pages, url_partitions=url_partitions)))

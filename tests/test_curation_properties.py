@@ -130,12 +130,12 @@ def test_two_level_topk_equals_naive_sort(spark, vals, k, parts):
     ties included, under any partitioning."""
     from pyspark.sql import functions as F
 
-    from coap_rfc_knowledge_graph_spark.functions.ranking import two_level_topk
+    from coap_rfc_knowledge_graph_spark.functions.ranking import two_level_topk_per_key
 
     rows = [(i, v) for i, v in enumerate(vals)]
     df = spark.createDataFrame(rows, "id long, v long").repartition(parts)
     got = sorted(
-        map(tuple, two_level_topk(df, [F.desc("v"), F.asc("id")], k).collect())
+        map(tuple, two_level_topk_per_key(df, [], [F.desc("v"), F.asc("id")], k).collect())
     )
     want = sorted(sorted(rows, key=lambda r: (-r[1], r[0]))[:k])
     assert got == want

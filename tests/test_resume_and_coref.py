@@ -110,20 +110,45 @@ def test_manifest_contents(spark, tmp_path):
         _assert_partitions_are_the_files(store, stage)
 
 
-def test_committed_digest_equals_reread_digest(spark, tmp_path):
+def test_committed_digest_equals_reread_digest(spark, tmp_path, monkeypatch):
     """The row_count/table_hash the write observes equal a separate
     re-read hash of the committed parquet: for pages (timestamp and
     binary columns) and every stage of a resumable run, sentences and
-    mention arrays among them."""
+    mention arrays among them. The committed frame ``write`` returns
+    carries the schema a schema-inferring read of its parquet finds."""
+    committed = {}
+    real = StageStore.write
+
+    def spy(store, df, stage, *a, **kw):
+        committed[stage] = real(store, df, stage, *a, **kw)
+        return committed[stage]
+
+    monkeypatch.setattr(StageStore, "write", spy)
     pages = synthetic_pages(spark, 8, seed=5)
     store = StageStore(str(tmp_path))
     store.write(pages, "pages")
     run_resumable(spark, pages, str(tmp_path), url_partitions=4)
+    assert set(committed) == {"pages", *KG_STAGES}
     for stage in ["pages", *KG_STAGES]:
         m = store.manifest(stage)
         assert (m["row_count"], m["table_hash"]) == _reread_digest(spark, store, stage), stage
         _assert_partitions_are_the_files(store, stage)
+        inferred = spark.read.parquet(str(tmp_path / stage / "data")).schema
+        assert committed[stage].schema.json() == inferred.json(), stage
     assert store.manifest("sentences")["row_count"] > 0 and store.manifest("mentions")["row_count"] > 0
+
+
+def test_commit_runs_one_spark_job(spark, tmp_path):
+    """Committing a narrow frame is one Spark job: the write counts and
+    hashes the rows, and the re-read infers no schema."""
+    sc = spark.sparkContext
+    df = spark.range(100).select("id", (F.col("id") * 2).alias("v"), F.array("id").alias("arr"))
+    sc.setJobGroup("test_commit_runs_one_spark_job", "commit")
+    try:
+        StageStore(str(tmp_path)).write(df, "narrow")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("test_commit_runs_one_spark_job")) == 1
 
 
 def test_empty_stage_commits_zero(spark, tmp_path):

@@ -191,23 +191,61 @@ def test_synthetic_web_edges_shape_and_determinism(spark):
     assert again == sorted((r.src, r.dst) for r in rows)
 
 
-def test_pagerank_weighted_unit_weights_equal_unweighted(spark):
-    """With weight=1 everywhere the weighted update rule degenerates to
-    the unweighted one (out_w == out_degree), so the two operators must
-    be bit-identical."""
-    from pyspark.sql import functions as F
+def _pagerank_reference(edges, iterations, scale=SCALE, damp_num=85, damp_den=100):
+    """The documented BIGINT update rule in plain Python over (src, dst,
+    weight) edges: every node starts at ``scale``; each round a node
+    gets the base mass plus, per in-edge, the floor of its source's
+    damped rank split by weight over the source's total out-weight."""
+    from collections import Counter
 
-    from coap_rfc_knowledge_graph_spark.operators.webgraph import (
-        pagerank_fixedpoint,
-        pagerank_weighted,
-        synthetic_web_edges,
-    )
+    nodes = {n for s, d, _ in edges for n in (s, d)}
+    out_w = Counter()
+    for s, _, w in edges:
+        out_w[s] += w
+    base = (scale * (damp_den - damp_num)) // damp_den
+    rank = dict.fromkeys(nodes, scale)
+    for _ in range(iterations):
+        mass = Counter()
+        for s, d, w in edges:
+            mass[d] += (rank[s] * damp_num * w) // (damp_den * out_w[s])
+        rank = {n: base + mass[n] for n in nodes}
+    return rank
 
-    e = synthetic_web_edges(spark, 3_000, seed=7).distinct()
-    we = e.withColumn("weight", F.lit(1))
-    a = sorted((r.node, r.rank) for r in pagerank_weighted(we, iterations=3).collect())
-    b = sorted((r.node, r.rank) for r in pagerank_fixedpoint(e, iterations=3).collect())
-    assert a == b and len(a) > 0
+
+@pytest.mark.parametrize(
+    "seed,iterations,checkpoint_every", [(0, 1, 0), (1, 2, 1), (2, 3, 0), (3, 4, 1)]
+)
+def test_pagerank_matches_python_reference(spark, seed, iterations, checkpoint_every):
+    """Both PageRank operators equal the pure-Python update rule on a
+    random small graph with duplicate edges, self-loops and a dangling
+    node: ``pagerank_fixedpoint`` and ``pagerank_weighted`` at unit
+    weights, and ``pagerank_weighted`` at weights 1-5."""
+    import random
+
+    from coap_rfc_knowledge_graph_spark.operators.webgraph import pagerank_weighted
+
+    rng = random.Random(seed)
+    n = rng.randint(4, 9)
+    sink = n - 1  # dangling: never a source
+    pairs = [(rng.randrange(sink), rng.randrange(n)) for _ in range(rng.randint(6, 20))]
+    pairs += [pairs[0], (1, 1), (0, sink)]  # a duplicate edge, a self-loop, the sink
+    weights = [rng.randint(1, 5) for _ in pairs]
+    unit = [(s, d, 1) for s, d in pairs]
+    weighted = [(s, d, w) for (s, d), w in zip(pairs, weights)]
+
+    def ranks(df):
+        return {r.node: r.rank for r in df.collect()}
+
+    def frame(rows):
+        return spark.createDataFrame(rows, "src long, dst long, weight long").repartition(3)
+
+    want_unit = _pagerank_reference(unit, iterations)
+    got = pagerank_fixedpoint(frame(unit).drop("weight"), iterations, checkpoint_every=checkpoint_every)
+    assert ranks(got) == want_unit
+    got = pagerank_weighted(frame(unit), iterations, checkpoint_every=checkpoint_every)
+    assert ranks(got) == want_unit
+    got = pagerank_weighted(frame(weighted), iterations, checkpoint_every=checkpoint_every)
+    assert ranks(got) == _pagerank_reference(weighted, iterations)
 
 
 def test_pagerank_weighted_mass_follows_weight(spark):

@@ -208,6 +208,9 @@ def run_resumable(
 
     mentions = _explode_mentions(mentions_arr)  # explode_outer: no UDF re-eval
     entities = stage("entities", lambda: canonical_entities(mentions), ["mentions"])
+    # the committed parquet lacks _build_canonical's size hint; the
+    # manifest's exact count spares the link path a count job
+    entities._kg_n_entities = store.manifest("entities")["row_count"]  # type: ignore[attr-defined]
 
     from .pipeline import KGResult, rules_stage
 

@@ -28,6 +28,11 @@ def build_session(
       executor memory at 512-token sequences.
     - shuffle.partitions defaults to 2x cores locally; on a real cluster
       set it to 2-4x total executor cores (AQE coalesces the excess).
+    - Python workers fork from ``coap_rfc_knowledge_graph_spark._daemon``,
+      which stops each task re-reading the zips on the worker's path; the
+      worker's Python must import the package (cwd or ``PYTHONPATH``).
+      ``extra_conf={"spark.python.daemon.module": "pyspark.daemon"}``
+      restores the stock daemon.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(2 * cpus, 8)
@@ -57,6 +62,7 @@ def build_session(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.daemon.module", "coap_rfc_knowledge_graph_spark._daemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -72,6 +72,31 @@ def test_run_resumable_releases_rules_caches(spark, tmp_path, monkeypatch):
         mine.unpersist()
 
 
+def test_resumed_link_path_counts_no_entities(spark, tmp_path, monkeypatch):
+    """``rules_stage`` links against the committed ``entities`` parquet;
+    its size comes from the stage manifest, so the link path starts no
+    count job."""
+    from coap_rfc_knowledge_graph_spark.operators import linking
+
+    sc = spark.sparkContext
+    group = "test_resumed_link_path_counts_no_entities"
+    real = linking._entity_count_hint
+    sizes = []
+
+    def grouped(entities):
+        sc.setJobGroup(group, "entity count hint")
+        try:
+            sizes.append(real(entities))
+            return sizes[-1]
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(linking, "_entity_count_hint", grouped)
+    store = run_resumable(spark, synthetic_pages(spark, 8, seed=1), str(tmp_path), url_partitions=4)
+    assert sizes == [store.manifest("entities")["row_count"]]
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 def _reread_digest(spark, store, stage):
     """(rows, sum(xxhash64)) of the committed parquet, computed apart
     from the write: the manifest's row_count and table_hash must match."""

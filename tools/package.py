@@ -11,8 +11,14 @@ Cluster launch (north rule deployment shape):
       --conf spark.sql.adaptive.skewJoin.enabled=true \\
       --conf spark.sql.shuffle.partitions=<2-4x total executor cores> \\
       --conf spark.sql.execution.arrow.maxRecordsPerBatch=2048 \\
+      --conf spark.python.daemon.module=coap_rfc_knowledge_graph_spark._daemon \\
       jobs/run_pipeline.py --pages <iceberg table/path> --out <path> \\
           --url-partitions <2-4x cores>
+
+The daemon module line needs the package importable by the executors'
+Python when the daemon starts (their PYTHONPATH), before any task ships
+the --py-files zip; drop the line where that does not hold. This launch
+line has not been verified on a cluster.
 
 Model weights / nltk punkt / z3 wheels ship the same way (--archives /
 --py-files); the deterministic stubs make the zip self-contained here.

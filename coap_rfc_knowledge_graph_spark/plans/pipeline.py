@@ -9,7 +9,7 @@ Dataflow (north rule):
 
     pages ──extract_sentences──> sentences ──rule_sentences──> rules_s
       sentences ──extract_mentions──> mentions
-      mentions x sentences ──generate_pairs──> pairs ──extract_triples──> triples
+      mentions ──extract_triples_from_arrays (pairs + relations, fused)──> triples
       rules_s ──split_conditions──> clauses ──generate_behaviours──> behaviours
       behaviours ──parse_atomic_rules──> atomic
       mentions ──canonical_entities──> entities ; link entity_surface -> entity_id
@@ -19,7 +19,7 @@ Dataflow (north rule):
 
 Shuffle budget at scale (the plan we want, verified via .explain in
 tests/test_plans.py): one url-repartition feeding sentences; the window
-stages and the pair self-join reuse that url partitioning; dictionary-
+stages and the fused pair stage reuse that url partitioning; dictionary-
 sized stages (entity canonicalization, value dictionary) shuffle only
 dictionary rows; every join back to corpus-sized tables is broadcast
 while the dictionary fits the broadcast budget (salted past it, see

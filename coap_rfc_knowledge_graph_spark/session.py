@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def build_session(
     app_name: str = "kg-construct",
@@ -29,10 +31,12 @@ def build_session(
     - shuffle.partitions defaults to 2x cores locally; on a real cluster
       set it to 2-4x total executor cores (AQE coalesces the excess).
     - Python workers fork from ``coap_rfc_knowledge_graph_spark._daemon``,
-      which stops each task re-reading the zips on the worker's path; the
-      worker's Python must import the package (cwd or ``PYTHONPATH``).
+      which stops each task re-reading the zips on the worker's path.
       ``extra_conf={"spark.python.daemon.module": "pyspark.daemon"}``
       restores the stock daemon.
+    - The workers' ``PYTHONPATH`` starts with the directory holding this
+      package, so they import it whatever the driver's cwd; a
+      ``spark.executorEnv.PYTHONPATH`` in ``extra_conf`` follows it.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(2 * cpus, 8)
@@ -44,6 +48,8 @@ def build_session(
     # inherit it. On a real cluster ship via spark.executorEnv.*.)
     for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
         os.environ.setdefault(var, "1")
+    extra_conf = dict(extra_conf or {})
+    worker_path = [_PACKAGE_PARENT, extra_conf.pop("spark.executorEnv.PYTHONPATH", "")]
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -63,8 +69,9 @@ def build_session(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.python.daemon.module", "coap_rfc_knowledge_graph_spark._daemon")
+        .config("spark.executorEnv.PYTHONPATH", os.pathsep.join(p for p in worker_path if p))
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 

@@ -1,5 +1,5 @@
 """Spark-side tests of the extraction slice: pages -> sentences ->
-rule filter -> mentions -> pairs -> triples.
+rule filter -> mentions -> pairs + relations -> triples.
 
 The byte-identical contract (BASELINE.md): for every url, the Spark
 pipeline's ordered sentence list equals the in-process oracle's, byte for
@@ -9,13 +9,17 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from coap_rfc_knowledge_graph_spark.config import MODAL_KEYWORDS
+from coap_rfc_knowledge_graph_spark.config import MODAL_KEYWORDS, RELATION_NAMES
 from coap_rfc_knowledge_graph_spark.functions import stub_models as sm
 from coap_rfc_knowledge_graph_spark.functions import tokenizer as tk
 from coap_rfc_knowledge_graph_spark.functions.text_extract import extract_document
 from coap_rfc_knowledge_graph_spark.operators.mentions import extract_mentions
-from coap_rfc_knowledge_graph_spark.operators.pairs import generate_pairs
-from coap_rfc_knowledge_graph_spark.operators.relations import classify_pairs, extract_triples
+from coap_rfc_knowledge_graph_spark.operators.relations import (
+    _mark_tokens,
+    _marked_pairs,
+    _sentence_pairs,
+    extract_triples_from_arrays,
+)
 from coap_rfc_knowledge_graph_spark.operators.rule_filter import rule_sentences
 from coap_rfc_knowledge_graph_spark.operators.sentences import extract_sentences
 from coap_rfc_knowledge_graph_spark.sources.pages import rfc_pages, synthetic_pages
@@ -108,21 +112,51 @@ def test_mentions_match_inprocess_stub(spark):
     assert "CoAP Server" in {r["surface"] for r in got}
 
 
+def _reference_triples(marr_rows):
+    """The relation layer in plain Python over collected mention arrays:
+    every C(n,2) span pair marked by ``_mark_tokens`` (the reference's
+    ``list.insert`` sequence) and classified one by one."""
+    out = []
+    for r in marr_rows:
+        spans = sorted(((m["begin"], m["end"], m["surface"]) for m in r["mentions"] or []), key=lambda x: x[:2])
+        toks = tk.tokenize(r["sentence"], pad=False)
+        for i, (b1, e1, s1) in enumerate(spans):
+            for b2, e2, s2 in spans[i + 1 :]:
+                pred = sm.classify_relation(_mark_tokens(toks, b1, e1, b2, e2))
+                if pred != 0:
+                    out.append((s1, RELATION_NAMES[pred], s2, r["url"], r["sent_id"]))
+    return sorted(out)
+
+
+def _keep_every_pair():
+    """A relation factory predicting class 1 for every pair, so the fused
+    operator emits one triple per candidate pair. A closure, so that
+    cloudpickle ships it by value (workers cannot import this module)."""
+
+    def loader():
+        return lambda marked: [1] * len(marked)
+
+    return loader
+
+
 def test_pairs_cn2_and_markers(spark):
     rows = [("u", 0, "The Server sends the Token to the Client.")]
     sents = spark.createDataFrame(rows, "url string, sent_id int, sentence string")
-    mentions = extract_mentions(sents)
-    n = mentions.count()
-    pairs = generate_pairs(mentions, sents)
-    got = pairs.collect()
-    assert len(got) == n * (n - 1) // 2
-    for r in got:
-        ms = r["marked_sentence"]
+    marr = extract_mentions(sents, explode=False)
+    mentions = marr.first()["mentions"]
+    n = len(mentions)
+    assert n >= 3
+    # every C(n,2) pair reaches the model: one triple each when all are kept
+    fused = extract_triples_from_arrays(marr, model_loader=_keep_every_pair()).collect()
+    assert len(fused) == n * (n - 1) // 2
+    got = list(_sentence_pairs(rows[0][2], mentions))
+    assert [(r["subj"], r["obj"]) for r in fused] == [(e1, e2) for e1, e2, _ in got]
+    for e1, _, ms in got:
         assert ms.index("[E1]") < ms.index("[/E1]") < ms.index("[E2]") < ms.index("[/E2]")
         assert "[PAD]" not in ms and "[CLS]" not in ms and "  " not in ms
         # surface of E1 appears between its markers
         inner = ms[ms.index("[E1]") + 4 : ms.index("[/E1]")].strip()
-        assert r["e1"] in inner or inner in r["e1"]
+        assert e1 in inner or inner in e1
 
 
 @pytest.mark.reference_data
@@ -130,16 +164,13 @@ def test_triples_schema_and_no_relation_dropped(spark):
     pages = rfc_pages(spark).limit(1)
     sents = extract_sentences(pages, url_partitions=2)
     rules = rule_sentences(sents)
-    mentions = extract_mentions(rules)
-    pairs = generate_pairs(mentions, rules).cache()
-    classified = classify_pairs(pairs)
-    triples = extract_triples(pairs)
+    marr = extract_mentions(rules, explode=False).cache()
+    triples = extract_triples_from_arrays(marr)
     assert triples.columns == ["subj", "pred", "obj", "url", "sent_id"]
-    total = classified.count()
     kept = triples.count()
-    zero = classified.filter(F.col("pred") == 0).count()
-    assert kept == total - zero
-    assert kept > 0
+    total = extract_triples_from_arrays(marr, model_loader=_keep_every_pair()).count()
+    assert 0 < kept < total
+    assert kept == len(_reference_triples(marr.collect()))
     assert triples.filter(F.col("pred") == "NO RELATION").count() == 0
 
 
@@ -165,44 +196,29 @@ def test_triples_parity_with_recorded_golden(spark, tmp_path):
                 for j in range(i + 1, len(spans)):
                     b1, e1, s1 = spans[i]
                     b2, e2, s2 = spans[j]
-                    from coap_rfc_knowledge_graph_spark.operators.pairs import _mark_tokens
-
                     marked = _mark_tokens(toks, b1, e1, b2, e2)
                     pred = sm.classify_relation(marked)
                     if pred != 0:
-                        from coap_rfc_knowledge_graph_spark.config import RELATION_NAMES
-
                         golden.add((s1, RELATION_NAMES[pred], s2))
     sents = extract_sentences(pages, url_partitions=4)
     rules = rule_sentences(sents)
-    mentions = extract_mentions(rules)
-    got = {
-        (r["subj"], r["pred"], r["obj"])
-        for r in extract_triples(generate_pairs(mentions, rules)).collect()
-    }
+    marr = extract_mentions(rules, explode=False)
+    got = {(r["subj"], r["pred"], r["obj"]) for r in extract_triples_from_arrays(marr).collect()}
     assert golden, "golden set must be non-empty"
     precision = len(got & golden) / len(got)
     recall = len(got & golden) / len(golden)
     assert precision >= 0.95 and recall >= 0.95, (precision, recall)
 
 
-def test_fused_triples_equals_unfused(spark):
-    """The fused mapInPandas fast path must emit exactly the rows of the
-    modular pairs -> classify -> filter chain."""
-    from coap_rfc_knowledge_graph_spark.operators.pairs import generate_pairs_from_arrays
-    from coap_rfc_knowledge_graph_spark.operators.relations import (
-        extract_triples,
-        extract_triples_from_arrays,
-    )
-
+def test_fused_triples_equal_python_reference(spark):
+    """The fused relation operator emits exactly the triples of the
+    relation layer written out in plain Python (``_mark_tokens`` +
+    ``classify_relation`` per pair) over the same mention arrays."""
     pages = synthetic_pages(spark, 15, seed=5)
     sents = extract_sentences(pages, url_partitions=4).persist()
     marr = extract_mentions(sents, explode=False).persist()
-    fused = {tuple(r) for r in extract_triples_from_arrays(marr).collect()}
-    unfused = {
-        tuple(r) for r in extract_triples(generate_pairs_from_arrays(marr)).collect()
-    }
-    assert fused == unfused and fused
+    fused = sorted(tuple(r) for r in extract_triples_from_arrays(marr).collect())
+    assert fused and fused == _reference_triples(marr.collect())
 
 
 def test_full_extract_stage_partitioning_invariance(spark):
@@ -220,19 +236,24 @@ def test_full_extract_stage_partitioning_invariance(spark):
     assert a == b and len(a) > 0
 
 
-def test_fast_marker_byte_identical_to_reference_inserts():
-    """make_sentence_marker (the O(1)-per-pair slicing fast path) must be
-    byte-identical to _mark_tokens (the reference's list.insert sequence,
-    src/relation_extractor.py:25-39) on every canonical span layout, and
-    must DISPATCH to _mark_tokens for non-canonical ones (overlap, spans
-    touching [CLS]/[SEP], padded token lists)."""
-    import random
+def _check_every_pair(toks, spans):
+    """``_marked_pairs`` over ``spans`` equals ``_mark_tokens`` on every
+    C(n,2) pair, in order."""
+    want = [
+        _mark_tokens(toks, b1, e1, b2, e2)
+        for i, (b1, e1) in enumerate(spans)
+        for b2, e2 in spans[i + 1 :]
+    ]
+    assert list(_marked_pairs(toks, spans)) == want, (toks, spans)
 
-    from coap_rfc_knowledge_graph_spark.functions import tokenizer
-    from coap_rfc_knowledge_graph_spark.operators.pairs import (
-        _mark_tokens,
-        make_sentence_marker,
-    )
+
+def test_fast_marker_byte_identical_to_reference_inserts():
+    """The per-span marker table is byte-identical to ``_mark_tokens``
+    (the reference's list.insert sequence, src/relation_extractor.py:25-39)
+    on every pair of every span set: canonical layouts through the table,
+    and overlapping spans, spans touching [CLS]/[SEP] and padded token
+    lists through the fallback."""
+    import random
 
     rng = random.Random(7)
     vocab = [
@@ -240,21 +261,37 @@ def test_fast_marker_byte_identical_to_reference_inserts():
         ")", "CoAP", "token-ID", "3.2", "'", "-", "{", "}", "%", "$", "#",
         '"', "option:", "client's", "[bracket]", "co-located",
     ]
-    for _ in range(1500):
-        nw = rng.randint(2, 40)
-        toks = [tokenizer.CLS] + [rng.choice(vocab) for _ in range(nw)] + [tokenizer.SEP]
-        mark = make_sentence_marker(toks)
-        for _ in range(4):
-            b1 = rng.randint(1, nw)
-            e1 = rng.randint(b1, nw)
-            if e1 + 1 > nw:
-                continue
-            b2 = rng.randint(e1 + 1, nw)
-            e2 = rng.randint(b2, nw)
-            assert mark(b1, e1, b2, e2) == _mark_tokens(toks, b1, e1, b2, e2)
+    for _ in range(800):
+        nw = rng.randint(1, 30)
+        toks = [tk.CLS] + [rng.choice(vocab) for _ in range(nw)] + [tk.SEP]
+        # disjoint spans over the words, sorted as the fan-out sorts them
+        spans, pos = [], 1
+        while pos <= nw:
+            pos += rng.randint(0, 2)
+            if pos > nw:
+                break
+            end = min(nw, pos + rng.randint(0, 3))
+            spans.append((pos, end))
+            pos = end + 1
+        if rng.random() < 0.2:  # an overlapping or special-touching span
+            b = rng.randint(0, nw + 1)
+            spans.append((b, min(nw + 1, b + rng.randint(0, 2))))
+        _check_every_pair(toks, sorted(spans))
+
+    words = ["a", "b", "c", "d", "e", "f"]
+    toks = [tk.CLS] + words + [tk.SEP]
+    # adjacent spans (empty middle), the first and the last word
+    _check_every_pair(toks, [(1, 1), (2, 2), (3, 4), (5, 5), (6, 6)])
+    _check_every_pair(toks, [(1, 3), (4, 6)])
+    # opener and closer punctuation on both sides of each marker
+    for p in ["(", ")", '"', "'", "-", "."]:
+        for q in ["(", ")", '"', "'", "-", "."]:
+            toks = [tk.CLS, p, "x", q, p, "y", q, "z", p, tk.SEP]
+            _check_every_pair(toks, [(1, 1), (2, 2), (3, 3), (4, 4), (5, 6), (8, 8)])
+            _check_every_pair(toks, [(2, 2), (4, 5), (7, 8)])
+            _check_every_pair(toks, [(1, 2), (3, 4), (6, 8)])
     # non-canonical layouts fall back to the reference arithmetic
-    toks = [tokenizer.CLS, "a", "b", "c", "d", tokenizer.SEP]
-    mk = make_sentence_marker(toks)
-    assert mk(1, 3, 2, 4) == _mark_tokens(toks, 1, 3, 2, 4)  # overlapping
-    padded = toks + [tokenizer.PAD]
-    assert make_sentence_marker(padded)(1, 1, 2, 2) == _mark_tokens(padded, 1, 1, 2, 2)
+    toks = [tk.CLS, "a", "b", "c", "d", tk.SEP]
+    _check_every_pair(toks, [(1, 3), (2, 4)])  # overlapping
+    _check_every_pair(toks, [(0, 1), (2, 2), (3, 5)])  # touching [CLS] / [SEP]
+    _check_every_pair(toks + [tk.PAD], [(1, 1), (2, 2)])  # padded

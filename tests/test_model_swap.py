@@ -1,5 +1,6 @@
 """The model-stage swap points: every model stage's UDF is one
-load-once ``functions.rows.model_udf``. Each stage with an explicit stub
+load-once ``functions.rows.model_udf``, and the fused relation operator
+loads its model once per task in its own batch loop. Each stage with an explicit stub
 factory equals its default path, every factory runs once per task (not
 per Arrow batch), and the real-HF factories run when transformers/torch
 and a checkpoint are available (skipped otherwise — VERDICT round-1
@@ -53,14 +54,18 @@ def _rule_sentences(spark, n):
     ).coalesce(2)
 
 
-def _pairs(spark, n):
+def _mention_arrays(spark, n):
+    """Mention arrays as ``extract_mentions(explode=False)`` emits them:
+    three spans per sentence, so three candidate pairs per row."""
     rows = [
-        ("u%d" % (i % 4), i, "server", "Reset message",
-         "The [E1]server[/E1] MUST send a [E2]Reset message[/E2] now %d." % i)
+        ("u%d" % (i % 4), i, "The CoAP server MUST send a Reset message now %d." % i,
+         [(2, 3, "CoAP server"), (7, 8, "Reset message"), (10, 10, str(i))])
         for i in range(n)
     ]
     return spark.createDataFrame(
-        rows, "url string, sent_id long, e1 string, e2 string, marked_sentence string"
+        rows,
+        "url string, sent_id int, sentence string, "
+        "mentions array<struct<begin:int,end:int,surface:string>>",
     ).coalesce(2)
 
 
@@ -97,7 +102,9 @@ _STAGES = {
     ),
     "relation": (
         relations._stub_relation_loader,
-        lambda spark, n, loader: relations.classify_pairs(_pairs(spark, n), model_loader=loader),
+        lambda spark, n, loader: relations.extract_triples_from_arrays(
+            _mention_arrays(spark, n), model_loader=loader
+        ),
     ),
 }
 
@@ -146,19 +153,51 @@ def test_mentions_swap_parity(spark):
 
 
 def test_relation_swap_parity(spark):
-    """M6 swap point: classify_pairs with an explicit stub factory must
-    equal the default path."""
+    """M6 swap point: the fused relation operator with an explicit stub
+    factory must equal the default path."""
 
     def stub_loader():
         from coap_rfc_knowledge_graph_spark.functions import stub_models
 
         return stub_models.classify_relation_batch
 
-    pairs = _pairs(spark, 64)
-    key = lambda r: (r.url, r.sent_id)
-    base = sorted(relations.classify_pairs(pairs).collect(), key=key)
-    swapped = sorted(relations.classify_pairs(pairs, model_loader=stub_loader).collect(), key=key)
-    assert base == swapped and len(base) == 64
+    marr = _mention_arrays(spark, 64)
+    key = lambda r: (r.url, r.sent_id, r.subj, r.obj)
+    base = sorted(relations.extract_triples_from_arrays(marr).collect(), key=key)
+    swapped = sorted(relations.extract_triples_from_arrays(marr, model_loader=stub_loader).collect(), key=key)
+    assert base == swapped and 0 < len(base) < 3 * 64
+
+
+def test_relation_model_calls_are_sliced(spark):
+    """The fused relation operator keeps what a swapped model predicts,
+    calls it on at most ``maxRecordsPerBatch`` marked pairs at a time,
+    and fails the task when the model raises instead of dropping pairs."""
+
+    def bounded_loader():
+        def classify(marked):
+            if not 0 < len(marked) <= 8:
+                raise ValueError(f"model called on {len(marked)} pairs")
+            return [1] * len(marked)
+
+        return classify
+
+    def failing_loader():
+        def classify(marked):
+            raise RuntimeError("relation model failed")
+
+        return classify
+
+    marr = _mention_arrays(spark, 64)
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "8")
+    try:
+        # 64 rows in 8-row Arrow batches: 24 pairs per batch, scored 8 at a time
+        out = relations.extract_triples_from_arrays(marr, model_loader=bounded_loader).collect()
+        assert len(out) == 3 * 64 and {r.pred for r in out} == {relations._NAMES[1]}
+        with pytest.raises(Exception, match="relation model failed"):
+            relations.extract_triples_from_arrays(marr, model_loader=failing_loader).collect()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
 
 def test_coref_swap_parity(spark):
@@ -191,16 +230,17 @@ def test_coref_swap_parity(spark):
 def test_hf_relation_checkpoint_swap(spark):  # pragma: no cover - optional deps
     from coap_rfc_knowledge_graph_spark.operators.relations import (
         _hf_relation_loader,
-        classify_pairs,
+        extract_triples_from_arrays,
     )
 
-    pairs = spark.createDataFrame(
-        [("u1", 0, "server", "Reset message",
-          "The [E1]server[/E1] MUST send a [E2]Reset message[/E2].")],
-        "url string, sent_id long, e1 string, e2 string, marked_sentence string",
+    marr = spark.createDataFrame(
+        [("u1", 0, "The server MUST send a Reset message.",
+          [(2, 2, "server"), (6, 7, "Reset message")])],
+        "url string, sent_id int, sentence string, "
+        "mentions array<struct<begin:int,end:int,surface:string>>",
     )
-    out = classify_pairs(pairs, model_loader=_hf_relation_loader).collect()
-    assert len(out) == 1 and out[0]["pred"] is not None
+    out = extract_triples_from_arrays(marr, model_loader=_hf_relation_loader).collect()
+    assert len(out) <= 1  # one candidate pair; kept unless predicted NO RELATION
 
 
 @pytest.mark.skipif(

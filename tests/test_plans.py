@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from coap_rfc_knowledge_graph_spark.operators.mentions import extract_mentions
-from coap_rfc_knowledge_graph_spark.operators.pairs import generate_pairs_from_arrays
+from coap_rfc_knowledge_graph_spark.operators.relations import extract_triples_from_arrays
 from coap_rfc_knowledge_graph_spark.operators.sentences import extract_sentences
 from coap_rfc_knowledge_graph_spark.sources.pages import synthetic_pages
 
@@ -55,8 +55,8 @@ def test_pair_stage_has_no_shuffle_after_mentions(spark):
     pages = synthetic_pages(spark, 8)
     sents = extract_sentences(pages, url_partitions=4)
     marr = extract_mentions(sents, explode=False)
-    pairs = generate_pairs_from_arrays(marr)
-    p = plan_str(pairs)
+    triples = extract_triples_from_arrays(marr)
+    p = plan_str(triples)
     tree = p.split("\n\n")[0]  # the indented operator tree section
     # exactly one Exchange: the explicit url repartition feeding sentences
     assert tree.count("Exchange") == 1, tree

@@ -3,6 +3,9 @@
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
+import textwrap
 import uuid
 import zipfile
 
@@ -53,3 +56,39 @@ def test_added_archive_imports_in_a_reused_worker(spark, tmp_path):
 
     rows = spark.range(4).repartition(4).mapInPandas(load, "value string").distinct().collect()
     assert [r.value for r in rows] == [value]
+
+
+def test_workers_import_the_package_from_any_cwd(tmp_path):
+    """A driver that imports the package through ``sys.path`` alone, run
+    from an unrelated cwd with no ``PYTHONPATH``, still starts its Python
+    workers, and a ``spark.executorEnv.PYTHONPATH`` the caller passes is
+    kept on the workers' path."""
+    extra = tmp_path / "extra"
+    extra.mkdir()
+    (extra / "kg_cwd_probe.py").write_text("VALUE = 'probe'\n")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(_daemon.__file__)))
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {root!r})
+        from coap_rfc_knowledge_graph_spark.session import build_session
+
+        def probe(batches):
+            import kg_cwd_probe
+            for pdf in batches:
+                yield pdf.assign(value=kg_cwd_probe.VALUE)
+
+        spark = build_session(
+            app_name="kg-cwd", cpus=1,
+            extra_conf={{"spark.executorEnv.PYTHONPATH": {str(extra)!r}}},
+        )
+        rows = spark.range(3).mapInPandas(probe, "id long, value string").collect()
+        print("ROWS", sorted((r.id, r.value) for r in rows))
+        spark.stop()
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    run = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300
+    )
+    assert "ROWS [(0, 'probe'), (1, 'probe'), (2, 'probe')]" in run.stdout, run.stderr[-3000:]

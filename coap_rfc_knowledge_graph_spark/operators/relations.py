@@ -25,11 +25,12 @@ Model swap point: ``extract_triples_from_arrays(model_loader=...)``.
 The zero-arg factory runs once per task, before the Arrow-batch loop,
 and returns ``classify(marked_sentences) -> class ids``. It is called on
 slices of at most ``spark.sql.execution.arrow.maxRecordsPerBatch``
-marked pairs (read on the driver), so a real BERT never gets more
-sentences per call than one Arrow batch, and a worker holds at most one
-slice of marked strings. ``_stub_relation_loader`` (the deterministic
-hash classifier) is the default; :func:`_hf_relation_loader` loads a
-real checkpoint.
+marked pairs (read on the driver; 0 or less means no limit, as in
+Spark), so a real BERT never gets more sentences per call than one Arrow
+batch, and a worker holds at most one slice of marked strings. It must
+return one class id per sentence; a short or long result fails the
+task. ``_stub_relation_loader`` (the deterministic hash classifier) is
+the default; :func:`_hf_relation_loader` loads a real checkpoint.
 """
 
 from __future__ import annotations
@@ -204,7 +205,10 @@ def extract_triples_from_arrays(mentions_arr: DataFrame, model_loader=_stub_rela
     marked sentences, and drops the pairs predicted 0 (NO RELATION).
     Marking is row-total, as in ``functions.rows.map_rows``: a sentence
     whose marking raises keeps the pairs it already produced and costs
-    only its own pairs. A model that raises fails the task.
+    only its own pairs. A model that raises, or that returns a different
+    number of predictions than it was given sentences, fails the task.
+    A ``maxRecordsPerBatch`` of 0 or less means no limit, as in Spark:
+    the model then gets each Arrow batch's pairs in one call.
 
     Directionality: the reference's label set encodes both directions
     (HAS TYPE vs TYPE OF), so subj/obj are always (e1, e2) in sentence
@@ -216,6 +220,7 @@ def extract_triples_from_arrays(mentions_arr: DataFrame, model_loader=_stub_rela
     ArrowEvalPython nodes); the <2-mention rows are skipped inside the
     task instead (tests/test_plans.py pins the single-evaluation shape)."""
     slice_rows = int(mentions_arr.sparkSession.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    slice_rows = slice_rows if slice_rows > 0 else None  # Spark reads <= 0 as no limit
     names = TRIPLES_SCHEMA.fieldNames()
 
     def batch_pairs(pdf):
@@ -233,7 +238,7 @@ def extract_triples_from_arrays(mentions_arr: DataFrame, model_loader=_stub_rela
             pairs = batch_pairs(pdf)
             while chunk := list(islice(pairs, slice_rows)):
                 preds = model([pair[0] for pair in chunk])
-                for (_, e1, e2, url, sent_id), pred in zip(chunk, preds):
+                for (_, e1, e2, url, sent_id), pred in zip(chunk, preds, strict=True):
                     if pred != 0:
                         rows.append((e1, _NAMES[pred], e2, url, sent_id))
             yield pd.DataFrame(rows, columns=names)

@@ -187,6 +187,9 @@ def test_relation_model_calls_are_sliced(spark):
 
         return classify
 
+    def short_loader():
+        return lambda marked: [1] * (len(marked) - 1)
+
     marr = _mention_arrays(spark, 64)
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "8")
@@ -196,8 +199,28 @@ def test_relation_model_calls_are_sliced(spark):
         assert len(out) == 3 * 64 and {r.pred for r in out} == {relations._NAMES[1]}
         with pytest.raises(Exception, match="relation model failed"):
             relations.extract_triples_from_arrays(marr, model_loader=failing_loader).collect()
+        # one prediction too few must fail the task, not drop the last pair
+        with pytest.raises(Exception, match="zip"):
+            relations.extract_triples_from_arrays(marr, model_loader=short_loader).collect()
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+
+@pytest.mark.parametrize("max_records", ["0", "-1"])
+def test_relation_model_calls_without_batch_limit(spark, max_records):
+    """Spark reads a ``maxRecordsPerBatch`` of 0 or less as no limit; the
+    fused relation operator then scores each Arrow batch's pairs in one
+    call and keeps every triple the model predicts."""
+    marr = _mention_arrays(spark, 64)
+    key = lambda r: (r.url, r.sent_id, r.subj, r.obj)
+    base = sorted(relations.extract_triples_from_arrays(marr).collect(), key=key)
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", max_records)
+    try:
+        out = sorted(relations.extract_triples_from_arrays(marr).collect(), key=key)
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    assert out == base and len(base) > 0
 
 
 def test_coref_swap_parity(spark):
@@ -239,8 +262,15 @@ def test_hf_relation_checkpoint_swap(spark):  # pragma: no cover - optional deps
         "url string, sent_id int, sentence string, "
         "mentions array<struct<begin:int,end:int,surface:string>>",
     )
-    out = extract_triples_from_arrays(marr, model_loader=_hf_relation_loader).collect()
-    assert len(out) <= 1  # one candidate pair; kept unless predicted NO RELATION
+
+    def loader():
+        # keep the pair whatever relation the checkpoint predicts, so the
+        # one candidate pair proves the model was reached and answered
+        classify = _hf_relation_loader()
+        return lambda marked: [1 if 0 <= p < len(relations._NAMES) else 0 for p in classify(marked)]
+
+    out = extract_triples_from_arrays(marr, model_loader=loader).collect()
+    assert len(out) == 1 and (out[0].subj, out[0].obj) == ("server", "Reset message")
 
 
 @pytest.mark.skipif(

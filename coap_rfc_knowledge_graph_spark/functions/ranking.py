@@ -22,13 +22,32 @@ Used by ``operators.linking.embedded_surfaces`` (N1 first-seen index)
 and ``operators.rules.value_dictionary`` (N7 non-float value ids —
 VERDICT r2 item 3: the distinct-behaviour-string set grows with the
 corpus, so the previous dictionary-sized global window was a
-single-task sort on the scale path).
+single-task sort on the scale path). Both take it only above one Arrow
+batch of rows (``functions.rows.collect_one_batch``; N1 also above one
+2048-row ``linking.SCORE_BLOCK``). Below it they
+rank the collected rows with Python's ``sorted`` under
+:func:`spark_order_key`, which gives the same index: a range exchange
+and a ``localCheckpoint`` cost seconds of scheduling on a table that
+fits one batch.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def spark_order_key(value):
+    """Sort key that orders collected values as Spark's ascending sort
+    does: nulls first, at every struct level, and strings in UTF-8 byte
+    order (Python compares strings by code point, which is the same
+    order). For strings, integers and structs (``Row``) of them; not for
+    doubles, which Spark sorts with NaN last."""
+    if value is None:
+        return (0,)
+    if isinstance(value, tuple):
+        return (1, tuple(spark_order_key(v) for v in value))
+    return (1, value)
 
 
 def zip_with_rank(df: DataFrame, order_cols: list[str], idx_col: str = "idx") -> DataFrame:

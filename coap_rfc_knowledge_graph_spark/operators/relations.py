@@ -45,6 +45,7 @@ from pyspark.sql import types as T
 
 from ..config import RELATION_NAMES
 from ..functions import stub_models, tokenizer
+from ..functions.rows import arrow_batch_rows
 
 _NAMES = [RELATION_NAMES[i] for i in range(len(RELATION_NAMES))]
 
@@ -219,8 +220,7 @@ def extract_triples_from_arrays(mentions_arr: DataFrame, model_loader=_stub_rela
     UDF TWICE (once for the predicate, once for the projection — two
     ArrowEvalPython nodes); the <2-mention rows are skipped inside the
     task instead (tests/test_plans.py pins the single-evaluation shape)."""
-    slice_rows = int(mentions_arr.sparkSession.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
-    slice_rows = slice_rows if slice_rows > 0 else None  # Spark reads <= 0 as no limit
+    slice_rows = arrow_batch_rows(mentions_arr.sparkSession)
     names = TRIPLES_SCHEMA.fieldNames()
 
     def batch_pairs(pdf):

@@ -23,7 +23,15 @@ stages and the fused pair stage reuse that url partitioning; dictionary-
 sized stages (entity canonicalization, value dictionary) shuffle only
 dictionary rows; every join back to corpus-sized tables is broadcast
 while the dictionary fits the broadcast budget (salted past it, see
-``linking.link_mentions``).
+``linking.link_mentions``). Up to one Arrow batch of rows
+(``spark.sql.execution.arrow.maxRecordsPerBatch``; for the entities
+also at most one 2048-row ``linking.SCORE_BLOCK``, which caps the
+driver's quadratic pair scoring) the two dictionaries add only their
+distinct aggregate's shuffle: one collect brings the rows to the
+driver, which ranks, embeds and resolves them and returns a local
+frame. Above it they run distributed from that same aggregate: a range
+exchange and a ``localCheckpoint`` for each rank, the embed UDF over
+the cluster's cores, and the pair generators.
 The rules stage caches its atomic rules where they fan out into a
 dictionary-sized branch plus that branch's join-back (see ``rules_stage``):
 uncached, every such read re-runs the Python-UDF chain above them (split,
@@ -151,9 +159,10 @@ def rules_stage(result: KGResult) -> KGResult:
     ``atomic`` is persisted where it fans out: after the parse (read by
     the link and its join-back) and after the variable join-back (read
     by both value-dictionary branches and the encode join-back). Each
-    generative UDF then runs once per job: the value dictionary's eager
-    rank checkpoint fills both caches, and the ``rules`` write reads
-    them. The caches join ``result.cached``."""
+    generative UDF then runs once per job: the value dictionary's
+    collect (its rank checkpoint above one Arrow batch) fills both
+    caches, and the ``rules`` write reads them. The caches join
+    ``result.cached``."""
     clauses = split_conditions(with_context(result.rule_sentences, result.sentences))
     behaviours = generate_behaviours(clauses, result.mentions)
     atomic = parse_atomic_rules(behaviours).persist()

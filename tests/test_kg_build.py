@@ -9,8 +9,10 @@ branch-for-branch, written from the studied behaviour, not copied.
 
 from __future__ import annotations
 
+import contextlib
 import re
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -232,6 +234,9 @@ def test_greedy_resolution_is_last_wins_chain(spark):
 
 
 def test_lsh_pairs_recover_bruteforce_pairs(spark, mention_df):
+    """Both generators run on the distributed path's embedded table:
+    ``embedded_surfaces`` and the two pair generators are that path
+    (they read no batch budget), whatever the dictionary's size."""
     emb = embedded_surfaces(distinct_surfaces(mention_df)).persist()
     bf = {(r["i"], r["j"]) for r in candidate_pairs_bruteforce(emb).collect()}
     lsh = {(r["i"], r["j"]) for r in candidate_pairs_lsh(emb, bands=24, rows_per_band=3).collect()}
@@ -314,15 +319,15 @@ def test_encode_values_roundtrip(spark):
 
 
 def test_value_dictionary_distributed_rank(spark):
-    """N7 non-float ids must come from the distributed two-stage rank
-    (VERDICT r2 item 3): correct lexicographic ids, and no global-order
-    window (single-task sort) anywhere in the plan."""
-    from coap_rfc_knowledge_graph_spark.operators.rules import value_dictionary
-
+    """N7 non-float ids above one Arrow batch must come from the
+    distributed two-stage rank (VERDICT r2 item 3): correct
+    lexicographic ids, and no global-order window (single-task sort)
+    anywhere in the plan. 62 values over an 8-row batch force that path."""
     vals = [f"behaviour {i:03d}" for i in range(60)] + ["1.5", "42"]
     df = spark.createDataFrame([(v,) for v in vals], "value string")
-    out = value_dictionary(df)
-    got = {r["value"]: r["value_num"] for r in out.collect()}
+    with _arrow_batch(spark, 8):
+        out = value_dictionary(df)
+        got = {r["value"]: r["value_num"] for r in out.collect()}
     assert got["1.5"] == 1.5 and got["42"] == 42.0
     for i in range(60):
         assert got[f"behaviour {i:03d}"] == 999999.0 + i
@@ -330,6 +335,7 @@ def test_value_dictionary_distributed_rank(spark):
     # no partition column; the distributed rank partitions by __pid
     p = str(out._jdf.queryExecution().optimizedPlan())
     assert "windowspecdefinition(value" not in p, p
+    assert not _is_local(out), p
 
 
 def test_embedded_surfaces_scale_path_same_index(spark, mention_df):
@@ -471,18 +477,226 @@ def test_link_mentions_head_skew_parity(spark, skew_mention_df):
 
 
 def test_canonical_auto_scale_path_parity(spark, mention_df):
-    """Forcing the above-budget path (LSH candidates + distributed
-    pointer-doubling resolve) yields the same surface->entity map as the
-    broadcast/driver path at recall-safe band settings."""
+    """All three N1-N3 paths give the same surface->entity map: the
+    one-batch driver path (the default here), the distributed
+    brute-force path (forced by a non-positive batch size) and the
+    above-budget path (LSH candidates + distributed pointer-doubling
+    resolve, forced by ``max_broadcast_surfaces=0`` under the same
+    non-positive batch size) at recall-safe band settings."""
     from coap_rfc_knowledge_graph_spark.operators.linking import _build_canonical
 
-    _, members_a = _build_canonical(mention_df)
-    _, members_b = _build_canonical(
-        mention_df, max_broadcast_surfaces=0, bands=24, rows_per_band=3
-    )
+    ents_a, members_a = _build_canonical(mention_df)
+    with _arrow_batch(spark, 0):
+        ents_b, members_b = _build_canonical(mention_df)
+        ents_c, members_c = _build_canonical(
+            mention_df, max_broadcast_surfaces=0, bands=24, rows_per_band=3
+        )
+    assert _is_local(ents_a) and not _is_local(ents_b) and not _is_local(ents_c)
     a = {(r["surface"], r["entity_id"]) for r in members_a.collect()}
     b = {(r["surface"], r["entity_id"]) for r in members_b.collect()}
-    assert a == b
+    c = {(r["surface"], r["entity_id"]) for r in members_c.collect()}
+    assert a == b == c
+
+
+# --- one-Arrow-batch driver paths (N1-N3, N7) ----------------------------------
+
+
+@contextlib.contextmanager
+def _arrow_batch(spark, rows: int):
+    """Run with ``maxRecordsPerBatch = rows``: the budget of the
+    dictionary-sized driver paths (0 or less: no budget, so the
+    distributed path)."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(rows))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _is_local(df) -> bool:
+    """True iff ``df`` is a driver-built frame (its whole plan is one
+    ``LocalRelation``)."""
+    return str(df._jdf.queryExecution().optimizedPlan()).startswith("LocalRelation")
+
+
+def _table_hash(df) -> int:
+    """The stage store's order-insensitive content hash of ``df``."""
+    row_hash = F.xxhash64(*[F.col(c).cast("string") for c in df.columns])
+    return int(df.select(F.coalesce(F.sum(row_hash.cast("decimal(38,0)")), F.lit(0))).first()[0])
+
+
+# Distinct lowercased surfaces of the parity corpus. The first two have
+# cosine exactly 0.9 under the stub embedding (quantized 900000, NOT
+# merged: the threshold is strict); "servers" merges into "server".
+# The last four share one first-seen position, so their rank is Spark's
+# string order alone: UTF-8 bytes, where "ｆ" (U+FF46) sorts before
+# "😀" (U+1F600) although UTF-16 would put the emoji first.
+_PARITY_SURFACES = [
+    "accept client response", "client accept response", "server", "servers",
+    "größe", "token", "é", "z", "ｆｕｌｌ", "😀 emoji",
+]  # fmt: skip
+
+
+@pytest.fixture(scope="module")
+def parity_mentions(spark):
+    """Mentions over ``_PARITY_SURFACES`` plus a case variant, a null
+    surface (names no entity) and a null url (its first-seen position
+    sorts first)."""
+    rows = [("u1", k, 1, 2, s) for k, s in enumerate(_PARITY_SURFACES[:6])]
+    rows += [("u2", 0, 5, 6, s) for s in _PARITY_SURFACES[6:]]
+    rows += [("u1", 9, 1, 2, "SERVERS"), ("u1", 10, 1, 2, None), (None, 0, 1, 2, "Größe")]
+    return spark.createDataFrame(rows, "url string, sent_id int, begin int, end int, surface string")
+
+
+def _canonical_tables(mentions):
+    from coap_rfc_knowledge_graph_spark.operators.linking import _build_canonical
+
+    entities, members = _build_canonical(mentions)
+    ent = entities.select("entity_id", "canonical", "vec")
+    surface_map = {(r["surface"], r["entity_id"]) for r in members.collect()}
+    return _is_local(entities), _table_hash(ent), surface_map, ent.count(), entities
+
+
+def test_exact_threshold_pair_is_not_merged():
+    """The fixture pair really sits on the threshold: quantized 900000."""
+    from coap_rfc_knowledge_graph_spark.operators.linking import SIM_SCALE
+
+    a, b = (np.asarray(v, dtype=np.float32) for v in stub_models.embed_batch(_PARITY_SURFACES[:2]))
+    assert np.rint(np.float32(a @ b) * SIM_SCALE) == 900000
+
+
+@pytest.mark.parametrize("batch", [len(_PARITY_SURFACES), len(_PARITY_SURFACES) - 1])
+def test_canonical_driver_path_equals_distributed_path(spark, parity_mentions, batch):
+    """N1-N3 at exactly one batch of distinct surfaces (driver path) and
+    at one row more (distributed path) equal the forced distributed
+    path: the entities table hash (entity_id, canonical, vec), the
+    surface->entity map and the exact entity count."""
+    with _arrow_batch(spark, 0):
+        local_b, hash_b, map_b, n_b, _ = _canonical_tables(parity_mentions)
+    with _arrow_batch(spark, batch):
+        local_a, hash_a, map_a, n_a, ents = _canonical_tables(parity_mentions)
+    assert local_a == (batch == len(_PARITY_SURFACES)) and not local_b
+    assert (hash_a, map_a) == (hash_b, map_b)
+    # the null surface names no entity; "größe" (null url) ranks first;
+    # the u2 surfaces rank by UTF-8 bytes; "ｆｕｌｌ" (8) joins "é" (7):
+    # the stub embeds neither's characters, so their vectors are equal
+    assert map_a == {
+        ("größe", 0), ("accept client response", 1), ("client accept response", 2),
+        ("server", 3), ("servers", 3), ("token", 5),
+        ("z", 6), ("é", 7), ("ｆｕｌｌ", 7), ("😀 emoji", 9),
+    }  # fmt: skip
+    if local_a:
+        assert ents._kg_n_entities == n_a == n_b
+
+
+@pytest.mark.parametrize("extra", [0, 1])
+def test_canonical_driver_path_is_capped_at_one_score_block(spark, extra):
+    """However large the Arrow batch, the N1-N3 driver path takes at most
+    one SCORE_BLOCK of distinct surfaces (its pair scoring is quadratic);
+    at exactly one block it equals the forced distributed path."""
+    import hashlib
+
+    from coap_rfc_knowledge_graph_spark.operators.linking import SCORE_BLOCK
+
+    words = [hashlib.md5(str(k).encode()).hexdigest()[:12] for k in range(SCORE_BLOCK + extra)]
+    mentions = spark.createDataFrame(
+        [("u", k, 0, 1, w) for k, w in enumerate(words)], "url string, sent_id int, begin int, end int, surface string"
+    )
+    with _arrow_batch(spark, 10**6):
+        local_a, hash_a, map_a, n_a, _ = _canonical_tables(mentions)
+    assert local_a == (extra == 0)
+    if local_a:
+        with _arrow_batch(spark, 0):
+            _, hash_b, map_b, n_b, _ = _canonical_tables(mentions)
+        assert (hash_a, map_a, n_a) == (hash_b, map_b, n_b)
+
+
+_PARITY_VALUES = ["1", "2.5", "nan", " 3 ", "-0.0", None, "empty", "default", "é", "z", "ｆ", "😀"]
+
+
+def _value_ids(spark, values):
+    df = spark.createDataFrame([(v,) for v in values + values[:3]], "value string")
+    out = value_dictionary(df)
+    return _is_local(out), _table_hash(out), {r["value"]: str(r["value_num"]) for r in out.collect()}
+
+
+@pytest.mark.parametrize("batch", [len(_PARITY_VALUES), len(_PARITY_VALUES) - 1])
+def test_value_dictionary_driver_path_equals_distributed_path(spark, batch):
+    """N7 at exactly one batch of distinct values (driver path) and one
+    more (distributed path) equals the forced distributed path, for a
+    null value (ranked first), NaN, whitespace and signed-zero floats
+    and non-ASCII words in UTF-8 byte order."""
+    with _arrow_batch(spark, 0):
+        local_b, hash_b, ids_b = _value_ids(spark, _PARITY_VALUES)
+    with _arrow_batch(spark, batch):
+        local_a, hash_a, ids_a = _value_ids(spark, _PARITY_VALUES)
+    assert local_a == (batch == len(_PARITY_VALUES)) and not local_b
+    assert (hash_a, ids_a) == (hash_b, ids_b)
+    assert ids_a[None] == "999999.0" and ids_a["nan"] == "nan" and ids_a[" 3 "] == "3.0"
+    assert [ids_a[v] for v in ("default", "empty", "z", "é", "ｆ", "😀")] == [
+        str(999999.0 + k) for k in range(1, 7)
+    ]
+
+
+@pytest.mark.parametrize("batch", [0, -1])
+def test_non_positive_batch_takes_distributed_path(spark, mention_df, batch):
+    """Spark reads a ``maxRecordsPerBatch`` of 0 or less as no limit;
+    with no budget, both dictionaries keep their distributed plans."""
+    from coap_rfc_knowledge_graph_spark.functions.rows import collect_one_batch
+
+    with _arrow_batch(spark, batch):
+        assert collect_one_batch(distinct_surfaces(mention_df)) is None
+        assert not _is_local(canonical_entities(mention_df))
+        assert not _is_local(value_dictionary(mention_df.select(F.col("surface").alias("value"))))
+
+
+def test_canonical_entities_below_one_batch_runs_two_jobs(spark, mention_df):
+    """Below one Arrow batch, canonical_entities is one collect: the
+    distinct aggregate's shuffle and the fetch, at most two Spark jobs
+    (the distributed path's eager part ran 14)."""
+    sc = spark.sparkContext
+    group = "test_canonical_entities_below_one_batch_runs_two_jobs"
+    sc.setJobGroup(group, "canonical entities")
+    try:
+        entities = canonical_entities(mention_df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    assert _is_local(entities)
+
+
+def _counting(spark, df, col):
+    """``df`` with ``col`` passed through a Python UDF that counts the
+    rows it reads, and that count's accumulator."""
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def count_row(v):
+        seen.add(1)
+        return v
+
+    return df.withColumn(col, count_row(col)), seen
+
+
+def test_dictionaries_above_one_batch_read_input_once(spark, mention_df):
+    """Above one Arrow batch the one-batch probe's aggregate is reused:
+    building and reading both N1-N3 tables, and the N7 dictionary, scan
+    their input once, not once for the probe and again for the
+    distributed plan."""
+    from coap_rfc_knowledge_graph_spark.operators.linking import _build_canonical
+
+    # count on url: the surface feeds the null filter too, which the
+    # optimizer duplicates into the projection (two UDF calls per row)
+    mentions, seen = _counting(spark, mention_df, "url")
+    values, seen_v = _counting(spark, mention_df.select(F.col("surface").alias("value")), "value")
+    with _arrow_batch(spark, 2):
+        entities, members = _build_canonical(mentions)
+        entities.collect(), members.collect()
+        value_dictionary(values).collect()
+    assert not _is_local(entities)
+    assert seen.value == seen_v.value == mention_df.count()
 
 
 def test_properties_variant_mqtt_skips_branches(spark):

@@ -1,10 +1,8 @@
 """Shared constants of the pipeline.
 
 Semantics sources (reference, studied not copied):
-- modal keyword lists: ``src/condition_split.py:70-72``,
-  ``src/CoAP_contradiction_checking.py:229-230``
+- modal keyword lists: ``src/CoAP_contradiction_checking.py:229-230``
 - relation label set: ``src/relation_extractor.py:59-60``
-- NER label set: ``src/extract_all_MQTT_entities.py:26``
 - pronoun list: ``src/corefernece_resolution.py:108``
 - similarity threshold: ``src/CoAP_contradiction_checking.py:278,414``
 - value-dictionary seed: ``src/CoAP_contradiction_checking.py:468``
@@ -12,14 +10,11 @@ Semantics sources (reference, studied not copied):
 
 MODAL_KEYWORDS = ["MUST", "REQUIRED", "SHALL", "SHOULD", "RECOMMENDED", "MAY", "OPTIONAL"]
 STRONG_MODAL_KEYWORDS = ["MUST", "REQUIRED", "SHALL"]
-CONDITIONAL_KEYWORDS = ["if", "when", "unless", "instead", "except", "as", "thus", "therefore", "in case"]
 
 # regex form of the modal filter (substring semantics, so no \b anchors --
 # the reference uses `keyword in sentence`)
 MODAL_REGEX = "|".join(MODAL_KEYWORDS)
 STRONG_MODAL_REGEX = "|".join(STRONG_MODAL_KEYWORDS)
-
-NER_LABELS = ["B-entity", "I-entity", "Other", "PAD"]  # ids 0,1,2,3
 
 RELATIONS = {
     "NO RELATION": 0,
@@ -52,15 +47,6 @@ EMBED_DIM = 64
 
 # BERT-ish tokenizer limits
 MAX_TOKENS = 512
-
-# condition tags attached by the condition splitter
-COND_ENTITY_RULE = "Entity rule"
-COND_ANTECEDENT = "Antecedent rule"
-COND_CONSEQUENT = "Consequent rule"
-
-# default number of hash partitions for url-keyed stages; at cluster scale
-# this is sized to ~2-4x total executor cores (see plans/pipeline.py)
-DEFAULT_URL_PARTITIONS = 32
 
 # salt buckets for the head-entity-skew link join (operators/linking.py)
 LINK_SALT_BUCKETS = 8

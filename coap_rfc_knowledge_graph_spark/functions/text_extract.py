@@ -53,7 +53,6 @@ _SENT_STARTERS = frozenset({"If", "In", "The", "For"})
 # and "d." as abbreviation-like types. Pinned from the frozen corpus.
 _SPLITTING_INITIALS = frozenset({"A", "B", "U"})
 
-_OPENERS = "\"'([{"
 _CLOSERS = "\"')]}"
 
 

@@ -10,17 +10,13 @@ depends on:
 - ``[CLS] tok ... [SEP] [PAD]*`` layout, truncation at MAX_TOKENS
 - token <-> span bookkeeping so mention (begin, end) token indexes decode
   back to surface text (``tokenizer.decode`` analogue)
-- stable integer ids (for stub-model hashing), via md5 so ids are
-  identical across Python processes/executors (never ``hash()`` which is
-  salted per process).
 
 Tokens, not ids, are the carried representation in DataFrames — they are
-self-describing and debuggable; ids exist only inside stub models.
+self-describing and debuggable.
 """
 
 from __future__ import annotations
 
-import hashlib
 import re
 
 from ..config import MAX_TOKENS
@@ -29,18 +25,6 @@ CLS, SEP, PAD = "[CLS]", "[SEP]", "[PAD]"
 SPECIAL_TOKENS = {CLS, SEP, PAD, "[E1]", "[/E1]", "[E2]", "[/E2]"}
 
 _TOKEN_RE = re.compile(r"\w+|[^\w\s]")
-
-
-def stable_id(token: str) -> int:
-    """Deterministic 31-bit id for a token (md5-based, process-stable)."""
-    if token == PAD:
-        return 0
-    if token == CLS:
-        return 101
-    if token == SEP:
-        return 102
-    digest = hashlib.md5(token.encode("utf-8")).digest()
-    return 1000 + (int.from_bytes(digest[:4], "big") % (2**31 - 1001))
 
 
 def tokenize(sentence: str, max_tokens: int = MAX_TOKENS, pad: bool = True) -> list[str]:

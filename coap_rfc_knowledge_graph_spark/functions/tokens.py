@@ -11,18 +11,15 @@ behaving identically in Spark and DuckDB — pinned by the U+0130
 ``lower()`` dialect fuzz (tests/test_curation_ops.py) and the
 tokenization differential fuzz. It lives in ONE place so a future fix
 (e.g. a locale boundary, a different split class) cannot silently
-desynchronize some operators from others and from their oracles; the
-DuckDB mirror string is exported alongside for the oracle builders.
+desynchronize some operators from others and from their oracles. The
+DuckDB spelling is
+``list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '')``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-# the DuckDB-side spelling of the same contract (documentation + oracle
-# builders): list_filter(regexp_split_to_array(lower(text), '\s+'), t -> t <> '')
-DUCKDB_TOKENS_SQL = r"list_filter(regexp_split_to_array(lower({col}), '\s+'), t -> t <> '')"
 
 
 def tokens_expr(text_col: Column | str) -> Column:

@@ -20,8 +20,6 @@ shape:
   ``linking.resolve_greedy``). Deterministic tie-break on
   (count desc, left, right) so results are partitioning- and
   platform-independent.
-- encode pass (100 TB): merges broadcast to every worker; applying them
-  is a per-row projection inside ``mapInPandas`` — zero shuffle.
 
 No reference-file citation: the reference repo has no tokenizer
 training; this operator is part of the training-data-pipeline family
@@ -32,7 +30,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 END = "</w>"  # classic end-of-word marker: merges never cross words
 
@@ -156,58 +153,3 @@ def bpe_merges(docs: DataFrame, n_merges: int = 64, max_vocab: int = 50_000,
     learned = learn_bpe(wc, n_merges)
     rows = [(i, l, r, c) for i, (l, r, c) in enumerate(learned)]
     return spark.createDataFrame(rows, MERGES_SCHEMA)
-
-
-def apply_bpe(docs: DataFrame, merges: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
-    """Encode pass: (doc_id, n_words, n_tokens) token counts under the
-    learned merges — the number a packing/budget stage consumes. The
-    merge list is broadcast (tokenizers are KBs); the pass is a narrow
-    ``mapInPandas`` projection, zero shuffle at any corpus size."""
-    ranked = [(r["left"], r["right"]) for r in merges.orderBy("rank").collect()]
-    prio = {p: i for i, p in enumerate(ranked)}
-    bc = docs.sparkSession.sparkContext.broadcast(prio)
-
-    def encode_word(word: str, prio: dict) -> int:
-        sym = tuple(word) + (END,)
-        while len(sym) > 1:
-            best_i, best_r = -1, None
-            for i in range(len(sym) - 1):
-                r = prio.get((sym[i], sym[i + 1]))
-                if r is not None and (best_r is None or r < best_r):
-                    best_i, best_r = i, r
-            if best_r is None:
-                break
-            sym = sym[:best_i] + (sym[best_i] + sym[best_i + 1],) + sym[best_i + 2:]
-        return len(sym)
-
-    def fn(batches):
-        import pandas as pd
-
-        p = bc.value
-        cache: dict[str, int] = {}
-        for pdf in batches:
-            ids, nw, nt = [], [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                words = (text or "").split()
-                total = 0
-                for w in words:
-                    n = cache.get(w)
-                    if n is None:
-                        n = encode_word(w, p)
-                        if len(cache) < 1_000_000:  # Zipf: hit rate ~99%
-                            cache[w] = n
-                    total += n
-                ids.append(did)
-                nw.append(len(words))
-                nt.append(total)
-            yield pd.DataFrame({id_col: ids, "n_words": nw, "n_tokens": nt})
-
-    out_schema = T.StructType(
-        [
-            docs.schema[id_col],
-            T.StructField("n_words", T.IntegerType()),
-            T.StructField("n_tokens", T.LongType()),
-        ]
-    )
-    return docs.select(id_col, text_col).mapInPandas(fn, out_schema)

@@ -1,6 +1,6 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Five families, all over a ``documents(doc_id, text, ...)``-shaped table
+Four families, all over a ``documents(doc_id, text, ...)``-shaped table
 (the driver's synthetic `documents` parquet or the `pages` table).
 The MinHash and SimHash families each ship TWO implementations: a
 numpy-vectorized UDF variant (the throughput path) and an engine-exact
@@ -9,8 +9,6 @@ native variant built on md5-prefix hashes in pure Catalyst
 DuckDB correctness oracle verifies):
 
 - exact:        md5 content hash -> keep min doc_id per hash group
-- n-gram Jaccard: character-shingle overlap above a threshold — fully
-                native (sequence/transform/explode/join), SQL-oracle-able
 - MinHash+LSH:  shingle -> k minhash values -> band buckets -> bucket
                 join -> verified Jaccard; the 10^12-doc scale path where
                 the all-pairs join is infeasible
@@ -23,8 +21,7 @@ Scale notes: every family dedups candidate generation before any
 pairwise verification; all joins are equi-joins on hash/bucket keys
 (shuffle on uniformly-distributed keys); nothing collects to the driver.
 Common-token shingle skew is bounded by ``distinct`` before the shingle
-join and (for the Jaccard join) a frequency cap on pathological
-shingles.
+join.
 """
 
 from __future__ import annotations
@@ -121,53 +118,6 @@ def shingles_expr(text_col, k: int = 5):
     return F.array_distinct(
         F.transform(F.sequence(F.lit(1), n), lambda i: F.substring(lowered, i, k))
     )
-
-
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.8,
-    k: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_shingle_freq: int | None = None,
-) -> DataFrame:
-    """All document pairs with shingle-set Jaccard >= threshold:
-    (doc_a, doc_b, n_common, n_a, n_b, jaccard).
-
-    Plan: explode shingles -> equi-self-join on shingle -> count common
-    per pair -> |A|,|B| from per-doc sizes -> jaccard filter. At scale
-    the shingle join is the shuffle; ``max_shingle_freq`` drops stop-
-    shingles (appearing in more than N docs) that would create quadratic
-    hot keys — the standard suffix-filtering trick.
-    """
-    base = docs.select(F.col(id_col).alias("doc_id"), shingles_expr(F.col(text_col), k).alias("sh"))
-    sizes = base.select("doc_id", F.size("sh").alias("n_sh"))
-    ex = base.select("doc_id", F.explode("sh").alias("shingle"))
-    if max_shingle_freq is not None:
-        hot = (
-            ex.groupBy("shingle").agg(F.countDistinct("doc_id").alias("df"))
-            .filter(F.col("df") > max_shingle_freq)
-            .select("shingle")
-        )
-        ex = ex.join(F.broadcast(hot), on="shingle", how="leftanti")
-    a = ex.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = ex.select(F.col("doc_id").alias("doc_b"), "shingle")
-    common = (
-        a.join(b, on="shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    out = (
-        common.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a")), on="doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b")), on="doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return out.select("doc_a", "doc_b", "n_common", "n_a", "n_b", "jaccard")
 
 
 # --- MinHash + LSH ------------------------------------------------------------

@@ -128,29 +128,6 @@ def parse_blocks(html: bytes | str | None) -> list[tuple[str, str, int, int]]:
     return [(tag, " ".join(w), len(w), lw) for tag, w, lw in p.blocks]
 
 
-BLOCKS_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("block_id", T.IntegerType()),
-        T.StructField("tag", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("n_words", T.IntegerType()),
-        T.StructField("link_words", T.IntegerType()),
-    ]
-)
-
-
-def html_blocks(pages: DataFrame, url_col: str = "url", html_col: str = "html") -> DataFrame:
-    """pages -> one row per text block (url, block_id, tag, text,
-    n_words, link_words). Column-pruned to (url, html); narrow."""
-
-    def page_blocks(url, html):
-        for block_id, block in enumerate(parse_blocks(html)):
-            yield (url, block_id, *block)
-
-    return map_rows(pages, [url_col, html_col], BLOCKS_SCHEMA, page_blocks)
-
-
 def keep_block(n_words: int, link_words: int, min_words: int, max_link_density: float) -> bool:
     """THE boilerplate gate — one definition shared by the distributed
     pass and tests: enough words, low enough link density."""

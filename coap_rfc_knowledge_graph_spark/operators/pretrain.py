@@ -233,21 +233,3 @@ def shard_counts(packed: DataFrame, windows_per_shard: int = 1024) -> DataFrame:
             F.sum("slice_len").alias("n_tokens"),
         )
     )
-
-
-def write_packed_shards(
-    packed: DataFrame, path: str, windows_per_shard: int = 1024
-) -> None:
-    """Materialize the packing map as one parquet directory per shard
-    (``shard=N/``), windows contiguous within each shard:
-    repartitionByRange on (shard, window_id) co-locates each shard's
-    rows before the partitioned write, so a 10^12-token run emits
-    size-balanced files with no post-hoc compaction."""
-    (
-        assign_shards(packed, windows_per_shard)
-        .repartitionByRange("shard", "window_id")
-        .sortWithinPartitions("shard", "window_id", "win_offset")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(path)
-    )

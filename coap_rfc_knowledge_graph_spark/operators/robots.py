@@ -38,9 +38,6 @@ RULES_SCHEMA = T.StructType(
 CRAWL_DELAYS_SCHEMA = T.StructType(
     [T.StructField("host", T.StringType()), T.StructField("delay_millis", T.LongType())]
 )
-SITEMAP_URLS_SCHEMA = T.StructType(
-    [T.StructField("host", T.StringType()), T.StructField("sitemap_url", T.StringType())]
-)
 
 
 def _robots_text(payload: bytes | str | None) -> str:
@@ -149,29 +146,6 @@ def parse_crawl_delays(
             yield host, delay
 
     return map_rows(robots, [host_col, payload_col], CRAWL_DELAYS_SCHEMA, host_delay)
-
-
-def parse_sitemap_urls(
-    robots: DataFrame, host_col: str = "host", payload_col: str = "payload"
-) -> DataFrame:
-    """(host, payload) robots files -> (host, sitemap_url): the
-    ``Sitemap:`` directive (RFC 9309 §2.3 treats it as an extension
-    line; it is group-INDEPENDENT, so every occurrence counts
-    regardless of User-agent context). Feeds
-    :func:`operators.sitemap.parse_sitemaps` — robots discovers the
-    sitemaps, the sitemap parser turns them into frontier candidates.
-    Arrow-batched mapInPandas, zero shuffle; duplicate directives in
-    one file are kept once (first occurrence)."""
-
-    def host_sitemaps(host, payload):
-        seen: set[str] = set()
-        # group-independent: ignore the active flag entirely
-        for field, value, _ in _iter_group_directives(_robots_text(payload)):
-            if field == "sitemap" and value and value not in seen:
-                seen.add(value)
-                yield host, value
-
-    return map_rows(robots, [host_col, payload_col], SITEMAP_URLS_SCHEMA, host_sitemaps)
 
 
 def parse_robots(robots: DataFrame, agent: str = "*", host_col: str = "host",

@@ -1,61 +1,11 @@
-"""M7 + train/test utilities (training-side data prep).
-
-Reference semantics:
-- M7 class rebalancing (``src/relation_extractor.py:118-132``): keep all
-  related pairs, downsample the dominant NO-RELATION class to a fixed
-  count with seeded random choice.
-- train/test split (``src/entity_extractor.py:1501-1505``):
-  ``random_split`` 0.8/0.1/0.1.
-
-Spark shape: native ``sample``/``randomSplit`` (seeded). For the
-exact-count downsample the reference wants, a seeded rank over
-``rand(seed)`` keeps exactly n rows — deterministic given seed AND
-input (rand is seeded per-partition; we pin partitioning first).
+"""Deterministic train/val/test split and stratified sampling
+(training-side data prep).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def rebalance_majority_class(
-    df: DataFrame,
-    label_col: str,
-    majority_label,
-    keep_n: int,
-    seed: int = 4,
-) -> DataFrame:
-    """Keep every minority-class row + exactly ``keep_n`` seeded-random
-    majority-class rows (the reference's NO-RELATION -> 700 downsample).
-    """
-    minority = df.filter(F.col(label_col) != majority_label)
-    # orderBy + limit plans as TakeOrderedAndProject: each partition
-    # offers its local top-keep_n, the driver merges — no single-task
-    # global window (the previous Window.partitionBy(lit(1)) shape)
-    majority = (
-        df.filter(F.col(label_col) == majority_label)
-        .orderBy(F.rand(seed), F.monotonically_increasing_id())
-        .limit(keep_n)
-    )
-    return minority.unionByName(majority)
-
-
-def class_distribution(df: DataFrame, label_col: str) -> DataFrame:
-    """Counter(labels) -> (label, n, frac)."""
-    total = df.count()
-    return (
-        df.groupBy(F.col(label_col).alias("label"))
-        .agg(F.count("*").alias("n"))
-        .withColumn("frac", F.col("n") / F.lit(total))
-    )
-
-
-def train_test_split(
-    df: DataFrame, weights: tuple[float, ...] = (0.8, 0.1, 0.1), seed: int = 4
-) -> list[DataFrame]:
-    """Seeded randomSplit (reference 0.8/0.1/0.1)."""
-    return df.randomSplit(list(weights), seed=seed)
 
 
 # --- deterministic web-scale split / stratified sampling -----------------------

@@ -1,14 +1,10 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Three paths, trading exactness for scale:
+Two paths, trading exactness for scale:
 
 - ``cosine_topk``          exact brute force, fully native (cross join +
                            zip_with dot + rank window). The baseline and
                            the DuckDB-oracle-checkable path.
-- ``cosine_topk_matmul``   exact brute force with the query matrix
-                           broadcast and one numpy matmul per Arrow
-                           batch — same results, ~2 orders faster at
-                           moderate corpus x query sizes.
 - ``ivf_topk``             IVF-style approximate: k-means-lite coarse
                            centroids (seeded, few iterations), each
                            corpus vector assigned to its nearest
@@ -19,8 +15,6 @@ Three paths, trading exactness for scale:
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -67,73 +61,6 @@ def cosine_topk(
     return two_level_topk_per_key(
         scored, ["query_id"], [F.desc("cosine"), F.asc("vec_id")], k, rank_col="rank"
     ).select("query_id", "rank", "vec_id", F.col("cosine").cast("double").alias("cosine"))
-
-
-# --- exact: broadcast matmul --------------------------------------------------
-
-
-def cosine_topk_matmul(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "embedding",
-) -> DataFrame:
-    """Same contract as ``cosine_topk``; queries collected + broadcast as
-    one numpy matrix, corpus streamed through mapInPandas with a matmul
-    and per-batch partial top-k, then a global top-k per query. The
-    per-batch reduction means the shuffle carries only
-    n_queries x k x n_partitions rows, not the full score matrix."""
-    qrows = queries.select(F.col(query_id).alias("qid"), unit_expr(F.col(query_vec)).alias("qv")).collect()
-    if not qrows:
-        schema = T.StructType(
-            [
-                T.StructField("query_id", T.LongType()),
-                T.StructField("rank", T.IntegerType()),
-                T.StructField("vec_id", T.LongType()),
-                T.StructField("cosine", T.DoubleType()),
-            ]
-        )
-        return corpus.sparkSession.createDataFrame([], schema)
-    qmat = np.stack([np.asarray(r["qv"], dtype=np.float32) for r in qrows])
-    qids = np.asarray([r["qid"] for r in qrows], dtype=np.int64)
-    spark = corpus.sparkSession
-    bq = spark.sparkContext.broadcast((qmat, qids))
-    kk = k
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qm, qi = bq.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cm = np.stack(pdf["cv"].to_numpy())  # already unit vectors
-            sims = qm @ cm.T  # (nq, batch)
-            take = min(kk, sims.shape[1])
-            top = np.argpartition(-sims, take - 1, axis=1)[:, :take]
-            rows = {
-                "query_id": np.repeat(qi, take),
-                "vec_id": pdf["vec_id"].to_numpy()[top].ravel(),
-                "cosine": np.take_along_axis(sims, top, axis=1).ravel().astype(np.float64),
-            }
-            yield pd.DataFrame(rows)
-
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-    c = corpus.select(F.col(corpus_id).alias("vec_id"), unit_expr(F.col(corpus_vec)).alias("cv"))
-    partial = c.mapInPandas(score, schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine")
-    )
 
 
 # --- approximate: IVF ---------------------------------------------------------

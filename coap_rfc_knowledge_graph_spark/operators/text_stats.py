@@ -2,14 +2,14 @@
 
 Four families over a ``documents``/``pages``-shaped table:
 
-- language ID      : stopword-hit heuristic over 5 languages (native:
-                     regexp counts + greatest/when chain)
+- language ID      : char-trigram profile hits over 6 languages (native:
+                     contains() over literal arrays + greatest/when chain)
 - quality scoring  : length / punctuation / stopword / digit ratios +
                      a composite keep/drop score
 - token counting   : whitespace tokens + a BPE-ish subword estimate
                      (regexp segmentation)
-- fingerprinting   : normalized-content md5 + a winnowing-style rolling
-                     fingerprint (k-gram min-hash over positions)
+- fingerprinting   : winnowing-style rolling fingerprints (k-gram
+                     min-hash over positions)
 
 Everything is a projection — zero shuffles, fully codegen, pushdown-
 friendly (a filter on ``quality_score`` prunes at the scan when the
@@ -22,15 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# --- language ID --------------------------------------------------------------
-
-_LANG_STOPWORDS = {
-    "en": ["the", "and", "of", "to", "in", "is", "that", "for", "with", "a"],
-    "de": ["der", "die", "das", "und", "ist", "nicht", "mit", "ein", "zu", "den"],
-    "fr": ["le", "la", "les", "et", "est", "pas", "pour", "que", "une", "dans"],
-    "es": ["el", "la", "los", "las", "y", "es", "no", "por", "que", "una"],
-    "zh": ["的", "是", "在", "了", "和", "有", "我", "不", "这", "中"],
-}
+# English stopwords: the stopword ratio in quality_features
+_EN_STOPWORDS = ["the", "and", "of", "to", "in", "is", "that", "for", "with", "a"]
 
 
 def _stopword_hits(text_col: Column, words: list[str]) -> Column:
@@ -39,22 +32,7 @@ def _stopword_hits(text_col: Column, words: list[str]) -> Column:
     return F.size(F.regexp_extract_all(F.lower(text_col), F.lit(pat), 1))
 
 
-def language_id_expr(text_col: Column) -> Column:
-    """Best-guess language code by stopword hit count ('und' if no hits).
-    A real pipeline swaps in fastText via a pandas UDF; the Spark shape
-    (projection, no shuffle) is identical."""
-    hits = {lang: _stopword_hits(text_col, words) for lang, words in _LANG_STOPWORDS.items()}
-    best = F.greatest(*hits.values())
-    expr = F.lit("und")
-    # reversed so earlier languages win ties deterministically (en first)
-    for lang in reversed(list(_LANG_STOPWORDS)):
-        expr = F.when((hits[lang] > 0) & (hits[lang] == best), lang).otherwise(expr)
-    return expr
-
-
-def detect_language(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    return docs.withColumn("lang_pred", language_id_expr(F.col(text_col)))
-
+# --- language ID --------------------------------------------------------------
 
 # Cavnar-Trenkle-style char-trigram profiles (the brief's "n-gram
 # heuristic" proper — catches languages even where word boundaries or
@@ -124,7 +102,7 @@ def quality_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
     n_punct = F.length(F.regexp_replace(t, r"[^\p{Punct}]", ""))
     n_digit = F.length(F.regexp_replace(t, r"[^0-9]", ""))
     n_upper = F.length(F.regexp_replace(t, r"[^A-Z]", ""))
-    en_stop = _stopword_hits(t, _LANG_STOPWORDS["en"])
+    en_stop = _stopword_hits(t, _EN_STOPWORDS)
     safe = lambda num, den: F.when(den > 0, num.cast("double") / den).otherwise(F.lit(0.0))
     df = (
         docs.withColumn("n_chars", n_chars)
@@ -175,13 +153,6 @@ def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
 # --- fingerprinting -----------------------------------------------------------
 
 
-def content_fingerprint_expr(text_col: Column) -> Column:
-    """Normalized-content md5: lowercase, strip all non-alphanumerics.
-    Robust to whitespace/punctuation-only edits — the exact-dedup key
-    for 'same words, different formatting' pages."""
-    return F.md5(F.regexp_replace(F.lower(text_col), r"[^a-z0-9]+", ""))
-
-
 def winnowing_fingerprint_rows(
     docs: DataFrame, k: int = 8, window: int = 4, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -220,17 +191,6 @@ def winnowing_fingerprint_rows(
         .select("doc_id", "fp")
         .distinct()
     )
-
-
-def winnowing_fingerprints(
-    docs: DataFrame, k: int = 8, window: int = 4, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(doc_id, fingerprints array<string>): the array view of
-    :func:`winnowing_fingerprint_rows` (sorted for determinism). Shared
-    fingerprints across docs signal local plagiarism/quotation overlap;
-    use the row form directly for the pair join."""
-    rows = winnowing_fingerprint_rows(docs, k=k, window=window, id_col=id_col, text_col=text_col)
-    return rows.groupBy("doc_id").agg(F.sort_array(F.collect_set("fp")).alias("fingerprints"))
 
 
 # --- repetition filters (Gopher-rule flavour) ---------------------------------
@@ -385,9 +345,8 @@ def winnowing_overlap(
     ``max_fp_freq`` drops fingerprints appearing in more than that many
     documents BEFORE the join — the head-key skew guard (a boilerplate
     fingerprint shared by millions of pages would otherwise make the
-    join quadratic in the head group; the same cap as ngram_jaccard's
-    ``max_shingle_freq``, and a discarded ubiquitous fingerprint carries
-    no overlap signal anyway).
+    join quadratic in the head group, and a discarded ubiquitous
+    fingerprint carries no overlap signal anyway).
 
     Scale shape: the only shuffle is the fingerprint equi-join (the
     same bucketed shape as every LSH family here — never all-pairs, and

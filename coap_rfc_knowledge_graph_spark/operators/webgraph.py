@@ -45,18 +45,6 @@ DAMP_NUM = 85
 DAMP_DEN = 100
 
 
-def edges_from_triples(
-    triples: DataFrame, src_col: str = "subj_id", dst_col: str = "obj_id"
-) -> DataFrame:
-    """Adapter: the flagship's (subj, pred, obj) triple table -> the
-    (src, dst) edge table every operator here consumes. Distinct
-    entity-pair edges, self-loops kept (PageRank treats them as valid
-    out-links; triangle/undirected ops drop them themselves)."""
-    return triples.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct()
-
-
 def synthetic_web_edges(
     spark, n_edges: int, n_nodes: int | None = None, seed: int = 7
 ) -> DataFrame:

@@ -28,6 +28,8 @@ def build_session(
     - Arrow on: every model stage is an Arrow-batched pandas UDF; batch
       size 2048 keeps per-batch model latency amortized without blowing
       executor memory at 512-token sequences.
+    - ``cpus`` (the ``local[N]`` thread count) defaults to the CPUs this
+      process may run on.
     - shuffle.partitions defaults to 2x cores locally; on a real cluster
       set it to 2-4x total executor cores (AQE coalesces the excess).
     - Python workers fork from ``coap_rfc_knowledge_graph_spark._daemon``,
@@ -38,7 +40,7 @@ def build_session(
       package, so they import it whatever the driver's cwd; a
       ``spark.executorEnv.PYTHONPATH`` in ``extra_conf`` follows it.
     """
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = cpus or len(os.sched_getaffinity(0))
     shuffle_partitions = shuffle_partitions or max(2 * cpus, 8)
     # Pin BLAS to one thread per Python worker: with N workers on N cores,
     # an unpinned OpenBLAS spawns N threads EACH (N^2 runnable threads) and

@@ -88,18 +88,3 @@ def save_table(
         save_iceberg(df, f"{cat}.{table}", buckets=buckets, key=key)
     else:
         save_bucketed(df, table, buckets=buckets, key=key)
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: list[str], hint: str | None = None
-) -> DataFrame:
-    """Join two same-key bucketed tables — the planner uses the bucketing:
-    no ShuffleExchange on either side (the co-located join the
-    url-bucketed layout buys at 10^12 rows). With a genuinely small side
-    the planner still prefers broadcast (also shuffle-free); pass
-    ``hint='merge'`` to force the sort-merge shape both-sides-big data
-    would get."""
-    left = spark.table(left_table)
-    if hint:
-        left = left.hint(hint)
-    return left.join(spark.table(right_table), on=on)

@@ -160,10 +160,9 @@ def parse_warc(
     return pages
 
 
-def pages_from_warc_files(files: DataFrame) -> DataFrame:
-    """(content: binary) rows of whole WARC files -> pages rows. Shared
-    by the batch reader and the streaming source — the parse is
-    identical; only the file source differs."""
+def read_warc(spark: SparkSession, path: str, glob: str = "*.warc*") -> DataFrame:
+    """WARC files under ``path`` -> pages DataFrame (text/lang NULL —
+    extraction is a downstream operator, not an ingest guess)."""
 
     def file_pages(content):
         # warc_ts is tz-AWARE UTC: Arrow maps it to the correct instant
@@ -172,38 +171,8 @@ def pages_from_warc_files(files: DataFrame) -> DataFrame:
         for url, ts, payload in parse_warc(bytes(content)):
             yield url, ts, payload, None, None
 
-    return map_rows(files, ["content"], PAGES_SCHEMA, file_pages)
-
-
-def read_warc(spark: SparkSession, path: str, glob: str = "*.warc*") -> DataFrame:
-    """WARC files under ``path`` -> pages DataFrame (text/lang NULL —
-    extraction is a downstream operator, not an ingest guess)."""
     files = spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
-    return pages_from_warc_files(files)
-
-
-def stream_warc_pages(
-    spark: SparkSession,
-    input_dir: str,
-    glob: str = "*.warc*",
-    max_files_per_trigger: int = 4,
-) -> DataFrame:
-    """Continuous crawl ingest: WARC files dropped into ``input_dir``
-    become a pages STREAM (binaryFile is a streaming file source, so
-    exactly-once file tracking comes from the checkpoint for free; the
-    unit of incremental work is one archive file — the same unit the
-    crawler produces). Compose with ``operators.html_extract.
-    fill_text_from_html`` and the stateful dedup downstream."""
-    files = (
-        spark.readStream.format("binaryFile")
-        # streaming file sources need the schema up front; binaryFile's
-        # is fixed by the format
-        .schema("path string, modificationTime timestamp, length long, content binary")
-        .option("pathGlobFilter", glob)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(input_dir)
-    )
-    return pages_from_warc_files(files)
+    return map_rows(files, ["content"], PAGES_SCHEMA, file_pages)
 
 
 def write_warc(

@@ -4,7 +4,7 @@
         jobs/run_pipeline.py --pages <parquet path | WARC dir> --out <state root> \\
         [--from-warc] [pre-pass options, see --help] [--link-graph] \\
         [--host-ranks [ITERS]] [--frontier [K]] [--wet-out DIR] \\
-        [--url-partitions N] [--resume]
+        [--url-partitions N]
 
 Reads the pages table, curates it (the pre-pass options compose into one
 ``curated_pages`` stage), materializes the requested crawl products
@@ -69,12 +69,6 @@ def _parser() -> tuple[argparse.ArgumentParser, tuple[str, ...]]:
     ap.add_argument("--out", required=True, help="stage-store root (checkpoints + outputs)")
     ap.add_argument("--url-partitions", type=int, default=None)
     ap.add_argument("--app-name", default="kg-construct")
-    ap.add_argument(
-        "--resume",
-        action="store_true",
-        help="accepted for explicitness; resume is automatic — a stage "
-        "whose identity is unchanged is reused either way",
-    )
     ap.add_argument(
         "--from-warc",
         action="store_true",

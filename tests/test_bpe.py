@@ -8,15 +8,10 @@ from __future__ import annotations
 import os
 import sys
 
-import pytest
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from pyspark.sql import functions as F  # noqa: E402
 
 from coap_rfc_knowledge_graph_spark.operators.bpe import (  # noqa: E402
     END,
-    apply_bpe,
     bpe_merges,
     learn_bpe,
     top_words,
@@ -117,43 +112,3 @@ def test_bpe_merges_partitioning_invariant(spark):
         key=lambda t: (-t[1], t[0]),
     )
     assert [(l, r, c) for _, l, r, c in a] == naive_bpe(wc, 12)
-
-
-def test_apply_bpe_counts(spark):
-    docs = spark.createDataFrame(
-        [(0, "banana band"), (1, "banana banana"), (2, None)],
-        "doc_id long, text string",
-    )
-    merges = bpe_merges(docs, n_merges=6, min_count=1)
-    out = {r["doc_id"]: (r["n_words"], r["n_tokens"]) for r in apply_bpe(docs, merges).collect()}
-    assert out[2] == (0, 0)
-    assert out[0][0] == 2 and out[1][0] == 2
-    # merges only ever reduce token count; floor is 1 token/word
-    chars0 = len("banana") + len("band") + 2  # + END markers
-    assert 2 <= out[0][1] <= chars0
-    # zero merges -> every word is fully split: chars + END per word
-    none = bpe_merges(docs, n_merges=0, min_count=1)
-    base = {r["doc_id"]: r["n_tokens"] for r in apply_bpe(docs, none).collect()}
-    assert base[0] == chars0
-    assert out[0][1] < base[0]
-
-
-def test_apply_bpe_matches_driver_side_encode(spark):
-    """Distributed encode == pure-Python encode of the same docs under
-    the same merges (catches broadcast/cache bugs)."""
-    from coap_rfc_knowledge_graph_spark.operators.bpe import _merge_word
-
-    rows = [(i, f"coap protocol co{'ap' * (i % 4)} message") for i in range(24)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    merges = bpe_merges(docs, n_merges=10, min_count=1)
-    ranked = [(r["left"], r["right"]) for r in merges.orderBy("rank").collect()]
-
-    def encode(word):
-        sym = tuple(word) + (END,)
-        for left, right in ranked:  # priority order == iterative lowest-rank
-            sym = _merge_word(sym, left, right)
-        return len(sym)
-
-    expected = {i: sum(encode(w) for w in t.split()) for i, t in rows}
-    got = {r["doc_id"]: r["n_tokens"] for r in apply_bpe(docs.repartition(5), merges).collect()}
-    assert got == expected

@@ -7,7 +7,7 @@ import io
 
 from pyspark.sql import functions as F
 
-from coap_rfc_knowledge_graph_spark.sources.catalog import bucketed_join, save_bucketed
+from coap_rfc_knowledge_graph_spark.sources.catalog import save_bucketed
 
 
 def _plan(df) -> str:
@@ -27,7 +27,9 @@ def test_bucketed_join_has_no_exchange(spark):
     try:
         save_bucketed(a, "t_bucketed_a", buckets=8, key="url")
         save_bucketed(b, "t_bucketed_b", buckets=8, key="url")
-        joined = bucketed_join(spark, "t_bucketed_a", "t_bucketed_b", on=["url"], hint="merge")
+        # the merge hint forces the both-sides-big shape; without it the
+        # planner broadcasts the small side (also shuffle-free)
+        joined = spark.table("t_bucketed_a").hint("merge").join(spark.table("t_bucketed_b"), on=["url"])
         tree = _plan(joined).split("\n\n")[0]
         assert "SortMergeJoin" in tree, tree
         assert "Exchange" not in tree, tree  # bucketing replaces the shuffle

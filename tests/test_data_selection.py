@@ -16,10 +16,8 @@ from coap_rfc_knowledge_graph_spark.operators.data_selection import (
     dsir_weights,
 )
 from coap_rfc_knowledge_graph_spark.operators.pretrain import (
-    assign_shards,
     pack_sequences,
     shard_counts,
-    write_packed_shards,
 )
 
 
@@ -228,14 +226,3 @@ def test_shard_counts_balanced(spark):
     # token payload is exact: full shards carry 4*100 tokens
     assert out[0].n_tokens == 400 and out[1].n_tokens == 400 and out[2].n_tokens == 200
     assert sum(r.n_tokens for r in out.values()) == 1000
-
-
-def test_write_packed_shards_roundtrip(spark, tmp_path):
-    docs = _docs(spark, [(i, " ".join(f"w{j}" for j in range(30))) for i in range(8)])
-    packed = pack_sequences(docs, context_len=64)
-    path = str(tmp_path / "shards")
-    write_packed_shards(packed, path, windows_per_shard=2)
-    back = spark.read.parquet(path)
-    want = sorted(map(tuple, assign_shards(packed, 2).collect()))
-    got = sorted(map(tuple, back.select(*assign_shards(packed, 2).columns).collect()))
-    assert got == want

@@ -9,6 +9,7 @@ import numpy as np
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from coap_rfc_knowledge_graph_spark.functions.mp4 import build_mp4
 from coap_rfc_knowledge_graph_spark.functions.pdf_text import PDFDocument
@@ -94,7 +95,7 @@ def test_sitemap_parser_total(data):
 @given(st.text(max_size=500))
 @settings(max_examples=200, deadline=None)
 def test_robots_directive_parsers_total(text):
-    """All three robots directive parsers are total over arbitrary text
+    """Both robots directive parsers are total over arbitrary text
     and agree on group semantics (shared iterator)."""
     from coap_rfc_knowledge_graph_spark.operators.robots import (
         parse_crawl_delay_text,
@@ -174,10 +175,14 @@ _CORRUPT_CASES = {
     "parse_crawl_delays": (
         robots.parse_crawl_delays, "host string, payload binary", _ROBOTS, _ROBOTS_BAD
     ),
-    "parse_sitemap_urls": (
-        robots.parse_sitemap_urls, "host string, payload binary", _ROBOTS, _ROBOTS_BAD
+    "fill_text_from_html": (
+        lambda pages: html_extract.fill_text_from_html(
+            pages.withColumn("text", F.lit(None).cast("string"))
+        ),
+        "url string, html binary",
+        _HTML,
+        _HTML_BAD,
     ),
-    "html_blocks": (html_extract.html_blocks, "url string, html binary", _HTML, _HTML_BAD),
     "main_content": (html_extract.main_content, "url string, html binary", _HTML, _HTML_BAD),
     "html_links": (html_extract.html_links, "url string, html binary", _HTML, _HTML_BAD),
     "html_head_meta": (html_extract.html_head_meta, "url string, html binary", _HTML, _HTML_BAD),

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from coap_rfc_knowledge_graph_spark.operators.html_extract import (  # noqa: E402
-    html_blocks,
     keep_block,
     main_content,
     parse_blocks,
@@ -88,11 +87,22 @@ def test_main_content_strips_boilerplate(spark):
     assert rows["u2"]["text"] == "" and rows["u2"]["n_blocks_total"] == 0
 
 
-def test_html_blocks_schema_and_order(spark):
-    pages = spark.createDataFrame([("u1", bytearray(PAGE))], "url string, html binary")
-    rows = html_blocks(pages).orderBy("block_id").collect()
-    assert [r["block_id"] for r in rows] == list(range(len(rows)))
-    assert rows[0]["url"] == "u1"
+def test_fill_text_from_html_fills_only_null_text(spark):
+    """The block parser and gate behind main_content also fill a NULL
+    page text in place; a page that already carries text keeps it."""
+    from coap_rfc_knowledge_graph_spark.operators.html_extract import (
+        extract_main_text,
+        fill_text_from_html,
+    )
+
+    pages = spark.createDataFrame(
+        [("u1", bytearray(PAGE), None), ("u2", bytearray(PAGE), "kept as is")],
+        "url string, html binary, text string",
+    )
+    rows = {r["url"]: r["text"] for r in fill_text_from_html(pages).collect()}
+    assert rows["u1"] == extract_main_text(PAGE, 5, 0.4)[0]
+    assert "specialized web transfer protocol" in rows["u1"] and "Home" not in rows["u1"]
+    assert rows["u2"] == "kept as is"
 
 
 # pinned round 4 over the 500-doc sf0.001 documents table wrapped by

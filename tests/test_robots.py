@@ -186,25 +186,3 @@ def test_parse_crawl_delays_spark(spark):
     df = spark.createDataFrame(rows, "host string, payload binary")
     got = parse_crawl_delays(df).collect()
     assert [(r.host, r.delay_millis) for r in got] == [("a.example", 1250)]
-
-
-def test_parse_sitemap_urls(spark):
-    from coap_rfc_knowledge_graph_spark.operators.robots import parse_sitemap_urls
-
-    body = (
-        b"User-agent: *\nDisallow: /x\n"
-        b"Sitemap: https://a.example/sitemap.xml\n"
-        b"User-agent: otherbot\n"
-        b"sitemap: https://a.example/sitemap-news.xml.gz  # comment\n"
-        b"Sitemap: https://a.example/sitemap.xml\n"  # duplicate kept once
-    )
-    df = spark.createDataFrame(
-        [("a.example", body), ("b.example", b"User-agent: *\nAllow: /\n")],
-        "host string, payload binary",
-    )
-    got = sorted((r.host, r.sitemap_url) for r in parse_sitemap_urls(df).collect())
-    # group-independent: the otherbot-context directive counts too
-    assert got == [
-        ("a.example", "https://a.example/sitemap-news.xml.gz"),
-        ("a.example", "https://a.example/sitemap.xml"),
-    ]

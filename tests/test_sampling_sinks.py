@@ -1,42 +1,10 @@
-"""M7 rebalance, splits, and the S4 text sink."""
+"""The S4 text sink."""
 
 from __future__ import annotations
 
 import glob
 
-from pyspark.sql import functions as F
-
-from coap_rfc_knowledge_graph_spark.operators.sampling import (
-    class_distribution,
-    rebalance_majority_class,
-    train_test_split,
-)
 from coap_rfc_knowledge_graph_spark.sources.sinks import write_sentences_text
-
-
-def test_rebalance_majority_class(spark):
-    rows = [(i, 0 if i < 80 else 1 + i % 3) for i in range(100)]
-    df = spark.createDataFrame(rows, "id long, label int")
-    out = rebalance_majority_class(df, "label", majority_label=0, keep_n=10, seed=4)
-    dist = {r["label"]: r["n"] for r in class_distribution(out, "label").collect()}
-    assert dist[0] == 10
-    assert sum(v for k, v in dist.items() if k != 0) == 20
-    # seeded determinism
-    a = {r["id"] for r in out.filter(F.col("label") == 0).collect()}
-    b = {
-        r["id"]
-        for r in rebalance_majority_class(df, "label", 0, 10, seed=4)
-        .filter(F.col("label") == 0)
-        .collect()
-    }
-    assert a == b
-
-
-def test_train_test_split(spark):
-    df = spark.range(1000)
-    tr, va, te = train_test_split(df)
-    assert tr.count() + va.count() + te.count() == 1000
-    assert tr.count() > 700
 
 
 def test_write_sentences_text(spark, tmp_path):
@@ -53,39 +21,3 @@ def test_write_sentences_text(spark, tmp_path):
     joined = {b.splitlines()[0]: b.splitlines() for b in blocks}
     assert ["A zero.", "A one.", "A two."] in [b.splitlines() for b in blocks]
     assert ["B zero.", "B one."] in [b.splitlines() for b in blocks]
-
-
-def test_write_ntriples_roundtrip(spark, tmp_path):
-    """Adversarial literals (quote, backslash, newline, tab) must
-    escape to valid N-Triples and unescape back byte-identically;
-    predicates IRI-sanitized; files concatenate to one document."""
-    from coap_rfc_knowledge_graph_spark.sources.sinks import write_ntriples
-
-    rows = [
-        (1, "defines", 'plain value'),
-        (2, "has part", 'quote " inside'),
-        (3, "p\\q", "back\\slash and\nnewline and\ttab"),
-        (4, None, "null pred must be dropped, not a blank line"),
-    ]
-    t = spark.createDataFrame(rows, "subj_id long, pred string, obj string")
-    out = str(tmp_path / "nt")
-    write_ntriples(t, out)
-    lines = sorted(r["value"] for r in spark.read.text(out).collect())
-    assert len(lines) == 3 and all(lines)  # null row dropped, no blanks
-    import re
-    import urllib.parse
-
-    parsed = {}
-    for ln in lines:
-        m = re.fullmatch(r"<urn:kg:e(\d+)> <urn:kg:p/([0-9A-Za-z_.~%*-]+)> \"(.*)\" \.", ln, re.S)
-        assert m, ln
-        unescaped = (
-            m.group(3)
-            .replace("\\t", "\t").replace("\\r", "\r").replace("\\n", "\n")
-            .replace('\\"', '"').replace("\\\\", "\\")
-        )
-        parsed[int(m.group(1))] = (urllib.parse.unquote(m.group(2)), unescaped)
-    # percent-encoding keeps the predicate mapping injective
-    assert parsed[1] == ("defines", "plain value")
-    assert parsed[2] == ("has part", 'quote " inside')
-    assert parsed[3] == ("p\\q", "back\\slash and\nnewline and\ttab")

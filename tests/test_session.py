@@ -79,11 +79,12 @@ def test_workers_import_the_package_from_any_cwd(tmp_path):
                 yield pdf.assign(value=kg_cwd_probe.VALUE)
 
         spark = build_session(
-            app_name="kg-cwd", cpus=1,
+            app_name="kg-cwd",
             extra_conf={{"spark.executorEnv.PYTHONPATH": {str(extra)!r}}},
         )
         rows = spark.range(3).mapInPandas(probe, "id long, value string").collect()
         print("ROWS", sorted((r.id, r.value) for r in rows))
+        print("MASTER", spark.sparkContext.master)
         spark.stop()
         """
     )
@@ -92,3 +93,5 @@ def test_workers_import_the_package_from_any_cwd(tmp_path):
         [sys.executable, "-c", script], cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300
     )
     assert "ROWS [(0, 'probe'), (1, 'probe'), (2, 'probe')]" in run.stdout, run.stderr[-3000:]
+    # cpus defaults to the CPUs the driver may run on
+    assert f"MASTER local[{len(os.sched_getaffinity(0))}]" in run.stdout, run.stdout

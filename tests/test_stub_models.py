@@ -24,12 +24,6 @@ def test_decode_roundtrip():
     assert tk.decode(toks) == s
 
 
-def test_stable_id_process_stable():
-    assert tk.stable_id("[PAD]") == 0
-    assert tk.stable_id("server") == tk.stable_id("server")
-    assert tk.stable_id("server") != tk.stable_id("Server")
-
-
 def test_tagger_bio_shape():
     toks = tk.tokenize("The CoAP Server sends a message to the Client.", pad=False)
     tags = sm.tag_tokens(toks)

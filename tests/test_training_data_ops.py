@@ -11,20 +11,16 @@ from coap_rfc_knowledge_graph_spark.operators.dedup import (
     exact_duplicates,
     minhash_lsh_pairs,
     minhash_signatures,
-    ngram_jaccard_pairs,
     simhash_near_duplicates,
 )
 from coap_rfc_knowledge_graph_spark.operators.similarity import (
     cosine_topk,
-    cosine_topk_matmul,
     ivf_topk,
 )
 from coap_rfc_knowledge_graph_spark.operators.text_stats import (
-    content_fingerprint_expr,
-    detect_language,
     quality_features,
     token_counts,
-    winnowing_fingerprints,
+    winnowing_fingerprint_rows,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -84,13 +80,6 @@ def test_exact_duplicates_string_ids(spark):
     assert g["doc_ids"] == [
         "https://x.example/0", "https://x.example/1", "https://x.example/10"
     ]  # lexicographic min-3
-
-
-def test_ngram_jaccard_pairs(spark, docs):
-    pairs = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in ngram_jaccard_pairs(docs, threshold=0.5).collect()}
-    assert pairs[(0, 1)] == 1.0
-    assert (0, 2) in pairs and pairs[(0, 2)] > 0.7
-    assert all(not (a == 4 or b == 4) for a, b in pairs)
 
 
 def test_minhash_lsh_finds_near_dups(spark, docs):
@@ -195,14 +184,6 @@ def emb(spark):
     return spark.read.parquet(f"{SF}/embeddings.parquet")
 
 
-def test_cosine_topk_exact_vs_matmul(spark, emb):
-    queries = emb.filter(F.col("vec_id") < 3).select(F.col("vec_id").alias("query_id"), "embedding")
-    a = {(r["query_id"], r["rank"], r["vec_id"]) for r in cosine_topk(emb, queries, k=5).collect()}
-    b = {(r["query_id"], r["rank"], r["vec_id"]) for r in cosine_topk_matmul(emb, queries, k=5).collect()}
-    assert a == b
-    assert len(a) == 15
-
-
 def test_topk_self_is_rank1(spark, emb):
     queries = emb.filter(F.col("vec_id") == 7).select(F.col("vec_id").alias("query_id"), "embedding")
     top = cosine_topk(emb, queries, k=1).collect()[0]
@@ -227,13 +208,6 @@ def test_ivf_partial_probe_recall(spark, emb):
 # --- text stats --------------------------------------------------------------
 
 
-def test_language_id(spark, docs):
-    got = {r["doc_id"]: r["lang_pred"] for r in detect_language(docs).collect()}
-    assert got[0] == "en"
-    assert got[3] == "de"
-    assert got[5] == "und"
-
-
 def test_quality_features(spark, docs):
     got = {r["doc_id"]: r for r in quality_features(docs).collect()}
     assert got[5]["quality_score"] == 0.0  # empty doc
@@ -251,11 +225,11 @@ def test_token_counts(spark):
 
 
 def test_fingerprints(spark, docs):
-    fp = docs.select("doc_id", content_fingerprint_expr(F.col("text")).alias("fp")).collect()
-    by_id = {r["doc_id"]: r["fp"] for r in fp}
-    assert by_id[0] == by_id[1]
-    assert by_id[0] != by_id[4]
-    wf = {r["doc_id"]: set(r["fingerprints"]) for r in winnowing_fingerprints(docs).collect()}
+    rows = winnowing_fingerprint_rows(docs).collect()
+    wf: dict = {}
+    for r in rows:
+        wf.setdefault(r["doc_id"], set()).add(r["fp"])
+    assert len(rows) == sum(len(v) for v in wf.values())  # distinct per doc
     assert wf[0] == wf[1]
     overlap = len(wf[0] & wf[2]) / len(wf[0] | wf[2])
     assert overlap > 0.5

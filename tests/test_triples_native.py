@@ -26,8 +26,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = "/root/testdata/sf0.001"
 
-# pinned at round 3; recompute via tools/check_native_triples.py if the
-# stub-model contract deliberately changes (document in FIXTURES.md)
+# pinned at round 3; if the stub-model contract deliberately changes,
+# check the native variants against their DuckDB oracles with
+# `python tools/check_oracles.py <SF> kg_triples_native kg_entities_native`
+# and document the new pins in FIXTURES.md
 FLAGSHIP_HASHES = {
     "kg_triples": (19174, "6164aa38d7a9b7daa3294e712f1b30c1ea332d17694ea084818bc10290189c90"),
     # re-pinned round 4: three surface pairs have TRUE cosine exactly at

@@ -177,34 +177,6 @@ def test_read_warc_instants_under_non_utc_session(spark, tmp_path):
     }
 
 
-def test_stream_warc_pages_matches_batch(spark, tmp_path):
-    """Continuous crawl ingest: WARC files dropped one per micro-batch
-    must yield exactly the batch reader's pages (binaryFile streaming
-    source + shared parse), composed with the NULL-text html fill."""
-    from coap_rfc_knowledge_graph_spark.operators.html_extract import fill_text_from_html
-    from coap_rfc_knowledge_graph_spark.sources.warc import stream_warc_pages
-
-    d = tmp_path / "drops"
-    d.mkdir()
-    write_warc(str(d / "seg0.warc.gz"), [_records()[0]], compress=True)
-    write_warc(str(d / "seg1.warc"), [_records()[1]], compress=False)
-    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    q = (
-        fill_text_from_html(stream_warc_pages(spark, str(d), max_files_per_trigger=1))
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r["url"]: r for r in spark.read.parquet(out_dir).collect()}
-    assert set(got) == {"https://a.example/one", "https://b.example/two"}
-    assert "specialized web transfer protocol" in got["https://a.example/one"]["text"]
-    assert bytes(got["https://b.example/two"]["html"]) == HTML2
-    assert got["https://a.example/one"]["warc_ts"] == TS
-
-
 def test_warc_to_kg_end_to_end(spark, tmp_path):
     """The whole north-rule loop through the spark-submit entry point:
     WARC archives -> --from-warc ingest -> --html-extract boilerplate
